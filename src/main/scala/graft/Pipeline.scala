@@ -14,7 +14,8 @@ import graft.sources.ConfigRegistry.{SiteConfig, VariableResolver}
   * manifest, plus the K3 stale reconciliation against a prior manifest.
   *
   * Everything before decimation is a single narrow scan stage (no
-  * shuffles); decimation introduces the one per-series shuffle. The melt is
+  * shuffles); decimation introduces at most one per-series shuffle (none
+  * when LTTB finds every series under the threshold). The melt is
   * an `inline(array(struct…))` unpivot — ONE pass over the source emitting
   * a (parameter, value) row per resolved column, with the parquet read
   * pruned to exactly the resolved physical columns (a union-of-projections
@@ -78,14 +79,15 @@ object Pipeline {
       .select(col("ref_des"), col("parameter"), col("t"), col("value"))
     val decimated = site.decimationAlgo match {
       case "lttb" =>
+        // ref_des is one literal for the whole call, so parameter alone
+        // keys the series and ref_des is re-attached after decimation
         Decimate.downsample(
-            long.withColumn("x", unix_micros(col("t")).cast("double"))
-              .select(concat_ws("|", col("ref_des"), col("parameter")).as("series"),
-                col("x"), col("value")),
-            "series", "x", "value", threshold)
+            long.select(col("parameter"), unix_micros(col("t")).cast("double").as("x"),
+              col("value")),
+            "parameter", "x", "value", threshold)
           .select(
-            split(col("series"), "\\|").getItem(0).as("ref_des"),
-            split(col("series"), "\\|").getItem(1).as("parameter"),
+            lit(site.refDes).as("ref_des"),
+            col("parameter"),
             timestamp_micros(col("x").cast("long")).as("t"),
             col("value"))
       case _ =>
@@ -120,9 +122,14 @@ object Pipeline {
     * <p>/…` (the object-store organize step — partition values become the
     * key prefix, qaqc/plots.py:438-464) plus the JSON artifact index
     * (qaqc/index.py:20-50) at `<out>/index`.
+    *
+    * The data is hash-partitioned by (ref_des, parameter) first, so each
+    * artifact is written by one task as one parquet file, however its rows
+    * were partitioned upstream (a decimation that returns its input keeps
+    * the source scan's partition per chunk).
     */
   def writePlotData(pd: PlotData, outDir: String): Unit = {
-    pd.data.write.mode("overwrite")
+    pd.data.repartition(col("ref_des"), col("parameter")).write.mode("overwrite")
       .partitionBy("ref_des", "parameter")
       .parquet(s"$outDir/data")
     pd.manifest.coalesce(1).write.mode("overwrite").json(s"$outDir/index")

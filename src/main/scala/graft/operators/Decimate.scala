@@ -21,6 +21,9 @@ import org.apache.spark.sql.functions._
   * (`flatMapSortedGroups`). The reference bounds the per-series input to
   * `threshold × 10` rows via pre-striding; we keep that contract, so a
   * series always fits comfortably in one task even at 100 TB total.
+  * [[downsample]] sizes every series first and runs only the passes those
+  * sizes need (the reference's default 5,000,000-point threshold leaves
+  * most series as is): see its three tiers.
   */
 object Decimate {
 
@@ -143,6 +146,19 @@ object Decimate {
     out
   }
 
+  /** The plottable `(key, x, y)` projection shared by every LTTB tier:
+    * key as string, x and y as double, null points dropped — they are
+    * unplottable and would crash the non-nullable tuple deserializer in
+    * [[lttb]]; dropping them mirrors the coarsen path, whose avg() skips
+    * nulls.
+    */
+  private def points(df: DataFrame, keyCol: String, xCol: String, yCol: String): DataFrame =
+    df.select(
+        col(keyCol).cast("string").as("key"),
+        col(xCol).cast("double").as("x"),
+        col(yCol).cast("double").as("y"))
+      .filter(col("key").isNotNull && col("x").isNotNull && col("y").isNotNull)
+
   /** C1 distributed LTTB: decimate each series (identified by `keyCol`) to
     * `threshold` points. Input columns: `keyCol` (string), `xCol`, `yCol`
     * (numeric). Per-series data is gathered into its task via a sorted group
@@ -153,14 +169,7 @@ object Decimate {
            threshold: Int): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    df.select(
-        col(keyCol).cast("string").as("key"),
-        col(xCol).cast("double").as("x"),
-        col(yCol).cast("double").as("y"))
-      // null points are unplottable and would crash the non-nullable
-      // tuple deserializer below; dropping them mirrors the coarsen
-      // path, whose avg() skips nulls
-      .filter(col("key").isNotNull && col("x").isNotNull && col("y").isNotNull)
+    points(df, keyCol, xCol, yCol)
       .as[(String, Double, Double)]
       .groupByKey(_._1)
       // Sort by (x, y) — x alone leaves duplicate-x rows in nondeterministic
@@ -175,22 +184,61 @@ object Decimate {
   }
 
   /** The reference's full downsample contract (qaqc/decimate.py:166-229):
-    * pre-stride any series longer than `threshold * maxPointsFactor`, then
-    * exact LTTB to `threshold` points.
+    * pre-stride any series longer than `cap = threshold * maxPointsFactor`
+    * to every `ceil(n / cap)`-th row in (x, y) order (`n` counts rows with
+    * a null x or y too), then exact LTTB to `threshold` points. Rows with
+    * a null key, x or y are dropped.
+    *
+    * Sizes first: one hash aggregate (map-side partials, parallel) collects
+    * each series' row count to the driver — one row per non-null key,
+    * bounded by `OrderedPosition.MaxOffsetRows` — and the largest series
+    * picks the cheapest of three exact tiers:
+    *  - identity: every series has at most `threshold` rows (or
+    *    `threshold < 3`) and none is over the cap. LTTB returns its input,
+    *    so the output is the null-filtered projection: no shuffle, no
+    *    position pass.
+    *  - LTTB only: every series is within the cap, so every stride is 1:
+    *    no position pass, straight to [[lttb]].
+    *  - stride: some series is over the cap. The two-pass position plan
+    *    ([[OrderedPosition.withPosition]]; never a per-series window, which
+    *    would move each series onto one task before the stride runs) keeps
+    *    every `stride`-th row, with each series' stride looked up from the
+    *    collected sizes, then [[lttb]] (the identity projection when
+    *    `threshold < 3`).
+    * Every tier returns the same rows as striding and decimating each
+    * series unconditionally.
     */
   def downsample(df: DataFrame, keyCol: String, xCol: String, yCol: String,
                  threshold: Int, maxPointsFactor: Int = 10): DataFrame = {
+    require(threshold > 0 && maxPointsFactor > 0,
+      s"Decimate.downsample: threshold ($threshold) and maxPointsFactor " +
+        s"($maxPointsFactor) must be positive")
     val cap = threshold.toLong * maxPointsFactor
-    // per-series counts via hash agg (map-side partials, parallel) +
-    // broadcast join — NOT a partition-only window, which would move each
-    // series onto one task before the stride even runs
-    val counts = df.groupBy(col(keyCol)).agg(count(lit(1)).as("__n"))
-    val strided = OrderedPosition
-      .withPosition(df, Seq(keyCol), Seq(xCol, yCol), "__pos")
-      .join(broadcast(counts), keyCol)
-      .withColumn("__stride", ceil(col("__n") / cap).cast("long"))
-      .filter(col("__pos") % col("__stride") === 0)
-      .drop("__n", "__stride", "__pos")
-    lttb(strided, keyCol, xCol, yCol, threshold)
+    // a null key is never plotted, so it never picks the tier; grouping
+    // on the raw key keeps the count per series, the string form matches
+    // the key lttb groups on
+    val sizes = df.filter(col(keyCol).isNotNull)
+      .groupBy(col(keyCol)).agg(count(lit(1)).as("__n"))
+      .select(col(keyCol).cast("string"), col("__n"))
+      .collect()
+    require(sizes.length <= OrderedPosition.MaxOffsetRows,
+      s"Decimate.downsample: ${sizes.length} series — too many to size on the driver")
+    val maxN = sizes.iterator.map(_.getLong(1)).maxOption.getOrElse(0L)
+    val strided =
+      if (maxN <= cap) df
+      else {
+        // only the series over the cap stride; the rest default to 1
+        val strides = sizes.iterator.map(r => r.getString(0) -> r.getLong(1))
+          .collect { case (k, n) if n > cap => k -> (n + cap - 1) / cap } // ceil(n / cap)
+          .toMap
+        val stride = coalesce(typedLit(strides).apply(col(keyCol).cast("string")), lit(1L))
+        OrderedPosition
+          .withPosition(df, Seq(keyCol), Seq(xCol, yCol), "__pos")
+          .filter(col("__pos") % stride === 0)
+          .drop("__pos")
+      }
+    if (threshold < 3 || maxN <= threshold)
+      points(strided, keyCol, xCol, yCol).toDF(keyCol, xCol, yCol)
+    else lttb(strided, keyCol, xCol, yCol, threshold)
   }
 }

@@ -26,7 +26,10 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
   */
 object OrderedPosition {
 
-  private val MaxOffsetRows = 1000000
+  /** Driver-side row cap for the offset table (and for other per-series
+    * driver collects in this package, e.g. `Decimate.downsample`'s sizes).
+    */
+  private[operators] val MaxOffsetRows = 1000000
 
   /** Append `outCol` = exact 0-based position of each row within its
     * (keyCols) series ordered by `orderCols` (global positions when

@@ -50,6 +50,9 @@ class CollectGuardSpec extends AnyFunSuite with Matchers {
     "graft/operators/Curation.scala" -> (3,
       "benchmarkGramSet: overflow-proof limit(max+1)+require; ingestMixture bench grams: count-gated broadcast; " +
         "importanceWeights vocab map: count-gated (maxBroadcastVocab) with a keyed-join fallback"),
+    "graft/operators/Decimate.scala" -> (1,
+      "downsample per-series sizes: one row per series, " +
+        "require(<= OrderedPosition.MaxOffsetRows = 1e6) fail-fast"),
     "graft/operators/Dedup.scala" -> (1,
       "connectedComponents driver union-find: count-gated, large graphs route to pointer-jumping"),
     "graft/operators/GapFill.scala" -> (1,

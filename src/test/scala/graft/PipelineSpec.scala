@@ -11,7 +11,8 @@ class PipelineSpec extends SparkSpec {
   private val resolver = new VariableResolver(Map(
     "time" -> Seq("ts"),
     "temperature" -> Seq("sea_water_temperature", "temp"),
-    "pressure" -> Seq("press")))
+    "pressure" -> Seq("press"),
+    "temp|qc" -> Seq("temp")))
 
   private def mkSite(algo: String) = SiteConfig(
     refDes = "T-SITE", stage = 1, instrument = "CTD-FIXED", storeFile = "t",
@@ -36,6 +37,19 @@ class PipelineSpec extends SparkSpec {
     // flags only on the configured parameter; pressure all pass
     pd.data.filter(col("parameter") === "pressure")
       .select("flag").distinct().as[Int].collect() shouldBe Array(1)
+  }
+
+  test("lttb path keeps a parameter name containing '|' whole") {
+    val site = mkSite("lttb").copy(dataParameters = Seq("time", "temp|qc", "pressure"))
+    val pd = Pipeline.plotData(df, site, resolver, "time",
+      (lit("2024-01-01 00:00:00").cast("timestamp"),
+        lit("2024-01-01 23:59:59").cast("timestamp")),
+      Map.empty, threshold = 50)
+    val byKey = pd.data.groupBy("ref_des", "parameter").count()
+      .as[(String, String, Long)].collect().sortBy(_._2)
+    byKey shouldBe Array(("T-SITE", "pressure", 50L), ("T-SITE", "temp|qc", 50L))
+    pd.manifest.as[String].collect().sorted shouldBe
+      Array("T-SITE__pressure", "T-SITE__temp|qc")
   }
 
   test("no resolvable parameter yields an EMPTY PlotData with the full schema") {
@@ -94,6 +108,27 @@ class PipelineSpec extends SparkSpec {
     // partition pruning reads only one directory
     back.filter(col("parameter") === "pressure").count() shouldBe
       pd.data.filter(col("parameter") === "pressure").count()
+  }
+
+  test("writePlotData writes one parquet file per artifact however the input is partitioned") {
+    // threshold above every series length: the identity decimation, whose
+    // output keeps the input's partitioning
+    val pd = Pipeline.plotData(df.repartition(12), mkSite("lttb"), resolver, "time",
+      (lit("2024-01-01 00:00:00").cast("timestamp"),
+        lit("2024-01-01 23:59:59").cast("timestamp")),
+      Map.empty, threshold = 5000)
+    pd.data.rdd.getNumPartitions should be > 1
+    val out = java.nio.file.Files.createTempDirectory("graft_sink").toString
+    Pipeline.writePlotData(pd, out)
+    val dirs = new java.io.File(s"$out/data/ref_des=T-SITE").listFiles()
+      .filter(_.isDirectory).sortBy(_.getName)
+    dirs.map(_.getName) shouldBe Array("parameter=pressure", "parameter=temperature")
+    dirs.foreach { d =>
+      withClue(s"${d.getName}: ") {
+        d.listFiles().count(_.getName.endsWith(".parquet")) shouldBe 1
+      }
+    }
+    spark.read.parquet(s"$out/data").count() shouldBe 2000L
   }
 
   test("staleArtifacts is the K3 set difference") {

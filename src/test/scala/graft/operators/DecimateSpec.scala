@@ -1,6 +1,8 @@
 package graft.operators
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
 
 import graft.SparkSpec
 
@@ -108,5 +110,76 @@ class DecimateSpec extends SparkSpec {
     r1 shouldBe r2
     r1.count(_._1 == "a") shouldBe 100
     r1.count(_._1 == "b") shouldBe 100
+  }
+
+  /** The stride-then-LTTB composition `downsample` ran on every input
+    * before it sized series first: position pass, broadcast per-series
+    * counts, stride filter, LTTB.
+    */
+  private def strideThenLttb(df: DataFrame, threshold: Int): DataFrame = {
+    val cap = threshold.toLong * 10
+    val counts = df.groupBy(col("k")).agg(count(lit(1)).as("__n"))
+    val strided = OrderedPosition
+      .withPosition(df, Seq("k"), Seq("x", "y"), "__pos")
+      .join(broadcast(counts), "k")
+      .withColumn("__stride", ceil(col("__n") / cap).cast("long"))
+      .filter(col("__pos") % col("__stride") === 0)
+      .drop("__n", "__stride", "__pos")
+    Decimate.lttb(strided, "k", "x", "y", threshold)
+  }
+
+  private def sortedRows(df: DataFrame): Seq[(String, Double, Double)] =
+    df.as[(String, Double, Double)].collect().toSeq.sortBy(r => (r._1, r._2, r._3))
+
+  // threshold 20, cap 200: "small" is under the threshold, "mid" between
+  // the threshold and the cap, "big" over the cap, and a null-key series.
+  // Duplicate x values force the (x, y) tie order. "big" has 23 null x / y
+  // rows, which count toward its stride: 1010 rows give ceil(1010 / 200) = 6,
+  // its 987 plottable rows alone would give 5.
+  private val tierThreshold = 20
+  private val tierFrame: DataFrame = {
+    val rnd = new scala.util.Random(7)
+    def series(k: String, n: Int) = (0 until n).map { i =>
+      val x: java.lang.Double = if (i % 97 == 13) null else (i / 3).toDouble
+      val y: java.lang.Double = if (i % 89 == 5) null else rnd.nextInt(40).toDouble
+      Row(k, x, y)
+    }
+    val rows = series("small", 15) ++ series("mid", 150) ++ series("big", 1010) ++
+      series(null, 60)
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 6),
+      StructType(Seq(StructField("k", StringType), StructField("x", DoubleType),
+        StructField("y", DoubleType))))
+  }
+
+  test("downsample: every tier returns the stride-then-LTTB rows exactly") {
+    val cases = Seq(
+      "stride" -> (tierFrame, tierThreshold),
+      "lttb only" -> (tierFrame.filter(col("k") =!= "big" || col("k").isNull), tierThreshold),
+      "identity" -> (tierFrame.filter(col("k") === "small" || col("k").isNull), tierThreshold),
+      "stride, threshold < 3" -> (tierFrame, 2))
+    for ((tier, (df, threshold)) <- cases) withClue(s"$tier: ") {
+      val got = sortedRows(Decimate.downsample(df, "k", "x", "y", threshold))
+      got shouldBe sortedRows(strideThenLttb(df, threshold))
+      got.map(_._1) should not contain (null: String)
+    }
+    // the tiers really decimate: "mid" to the threshold, "big" too
+    val all = sortedRows(Decimate.downsample(tierFrame, "k", "x", "y", tierThreshold))
+    all.count(_._1 == "mid") shouldBe tierThreshold
+    all.count(_._1 == "big") shouldBe tierThreshold
+    all.count(_._1 == "small") shouldBe 13 // 15 rows, 2 with a null x or y
+  }
+
+  test("downsample identity tier plans no Exchange") {
+    val small = tierFrame.filter(col("k") === "small" || col("k").isNull)
+    val plan = Decimate.downsample(small, "k", "x", "y", tierThreshold)
+      .queryExecution.executedPlan.toString
+    plan should not include "Exchange"
+  }
+
+  test("downsample rejects a non-positive threshold or cap factor") {
+    an[IllegalArgumentException] should be thrownBy
+      Decimate.downsample(tierFrame, "k", "x", "y", threshold = 0)
+    an[IllegalArgumentException] should be thrownBy
+      Decimate.downsample(tierFrame, "k", "x", "y", threshold = 10, maxPointsFactor = 0)
   }
 }

@@ -119,7 +119,7 @@ class GapFillSpec extends SparkSpec {
     val rows = (0 until 60).flatMap { u =>
       val n = u % 7 match { case 0 => 1; case 1 => 2; case x => 3 + rnd.nextInt(18) }
       // distinct t per series; mix exact multiples of step with offsets
-      val ts = scala.util.Random.shuffle((0 until 40).toList).take(n)
+      val ts = rnd.shuffle((0 until 40).toList).take(n)
         .map(i => i * 7 + (if (rnd.nextBoolean()) 0 else rnd.nextInt(5)))
         .distinct.sorted
       ts.map { t =>
