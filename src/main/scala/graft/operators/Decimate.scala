@@ -21,9 +21,10 @@ import org.apache.spark.sql.functions._
   * (`flatMapSortedGroups`). The reference bounds the per-series input to
   * `threshold × 10` rows via pre-striding; we keep that contract, so a
   * series always fits comfortably in one task even at 100 TB total.
-  * [[downsample]] sizes every series first and runs only the passes those
-  * sizes need (the reference's default 5,000,000-point threshold leaves
-  * most series as is): see its three tiers.
+  * [[downsample]] sizes every series first and skips the position pass
+  * and the LTTB shuffle when no series is over the threshold (the
+  * reference's default 5,000,000-point threshold leaves most series as
+  * is).
   */
 object Decimate {
 
@@ -146,11 +147,11 @@ object Decimate {
     out
   }
 
-  /** The plottable `(key, x, y)` projection shared by every LTTB tier:
-    * key as string, x and y as double, null points dropped — they are
-    * unplottable and would crash the non-nullable tuple deserializer in
-    * [[lttb]]; dropping them mirrors the coarsen path, whose avg() skips
-    * nulls.
+  /** The plottable `(key, x, y)` projection shared by [[lttb]] and the
+    * identity path of [[downsample]]: key as string, x and y as double,
+    * null points dropped — they are unplottable and would crash the
+    * non-nullable tuple deserializer in [[lttb]]; dropping them mirrors
+    * the coarsen path, whose avg() skips nulls.
     */
   private def points(df: DataFrame, keyCol: String, xCol: String, yCol: String): DataFrame =
     df.select(
@@ -183,6 +184,12 @@ object Decimate {
       .toDF(keyCol, xCol, yCol)
   }
 
+  /** Over-cap series whose strides [[downsample]] inlines into the plan
+    * as a map literal; past this many it broadcast-joins them instead, so
+    * the plan does not grow with the number of series.
+    */
+  private[operators] val MaxStrideLiteral = 1000
+
   /** The reference's full downsample contract (qaqc/decimate.py:166-229):
     * pre-stride any series longer than `cap = threshold * maxPointsFactor`
     * to every `ceil(n / cap)`-th row in (x, y) order (`n` counts rows with
@@ -190,55 +197,67 @@ object Decimate {
     * a null key, x or y are dropped.
     *
     * Sizes first: one hash aggregate (map-side partials, parallel) collects
-    * each series' row count to the driver — one row per non-null key,
-    * bounded by `OrderedPosition.MaxOffsetRows` — and the largest series
-    * picks the cheapest of three exact tiers:
-    *  - identity: every series has at most `threshold` rows (or
-    *    `threshold < 3`) and none is over the cap. LTTB returns its input,
-    *    so the output is the null-filtered projection: no shuffle, no
-    *    position pass.
-    *  - LTTB only: every series is within the cap, so every stride is 1:
-    *    no position pass, straight to [[lttb]].
-    *  - stride: some series is over the cap. The two-pass position plan
+    * each series' row count to the driver — one row per non-null key, the
+    * collect itself limited to `OrderedPosition.MaxOffsetRows + 1` rows
+    * and rejected past the cap — and the largest series picks the path:
+    *  - identity: every series has at most `threshold` rows, so LTTB
+    *    returns its input and the output is the null-filtered projection:
+    *    no shuffle, no position pass.
+    *  - stride: otherwise. The two-pass position plan
     *    ([[OrderedPosition.withPosition]]; never a per-series window, which
     *    would move each series onto one task before the stride runs) keeps
-    *    every `stride`-th row, with each series' stride looked up from the
-    *    collected sizes, then [[lttb]] (the identity projection when
-    *    `threshold < 3`).
-    * Every tier returns the same rows as striding and decimating each
+    *    every `stride`-th row, with each over-cap series' stride taken from
+    *    the collected sizes (a map literal up to [[MaxStrideLiteral]]
+    *    series, a broadcast join past it; every other series keeps stride
+    *    1), then [[lttb]].
+    * Both paths return the same rows as striding and decimating each
     * series unconditionally.
     */
   def downsample(df: DataFrame, keyCol: String, xCol: String, yCol: String,
-                 threshold: Int, maxPointsFactor: Int = 10): DataFrame = {
+                 threshold: Int, maxPointsFactor: Int = 10): DataFrame =
+    downsampleBounded(df, keyCol, xCol, yCol, threshold, maxPointsFactor,
+      OrderedPosition.MaxOffsetRows, MaxStrideLiteral)
+
+  /** [[downsample]] with its driver bounds as parameters: at most
+    * `maxSeries` series, strides inlined up to `maxStrideLiteral` series.
+    */
+  private[operators] def downsampleBounded(df: DataFrame, keyCol: String, xCol: String,
+                                           yCol: String, threshold: Int, maxPointsFactor: Int,
+                                           maxSeries: Int, maxStrideLiteral: Int): DataFrame = {
     require(threshold > 0 && maxPointsFactor > 0,
       s"Decimate.downsample: threshold ($threshold) and maxPointsFactor " +
         s"($maxPointsFactor) must be positive")
     val cap = threshold.toLong * maxPointsFactor
-    // a null key is never plotted, so it never picks the tier; grouping
+    // a null key is never plotted, so it never picks the path; grouping
     // on the raw key keeps the count per series, the string form matches
-    // the key lttb groups on
+    // the key lttb groups on. maxSeries + 1 must not overflow limit()
     val sizes = df.filter(col(keyCol).isNotNull)
       .groupBy(col(keyCol)).agg(count(lit(1)).as("__n"))
       .select(col(keyCol).cast("string"), col("__n"))
-      .collect()
-    require(sizes.length <= OrderedPosition.MaxOffsetRows,
-      s"Decimate.downsample: ${sizes.length} series — too many to size on the driver")
+      .limit(math.min(maxSeries.toLong + 1, Int.MaxValue).toInt).collect()
+    require(sizes.length <= maxSeries,
+      s"Decimate.downsample: more than $maxSeries series — too many to size on the driver")
     val maxN = sizes.iterator.map(_.getLong(1)).maxOption.getOrElse(0L)
-    val strided =
-      if (maxN <= cap) df
-      else {
-        // only the series over the cap stride; the rest default to 1
-        val strides = sizes.iterator.map(r => r.getString(0) -> r.getLong(1))
-          .collect { case (k, n) if n > cap => k -> (n + cap - 1) / cap } // ceil(n / cap)
-          .toMap
-        val stride = coalesce(typedLit(strides).apply(col(keyCol).cast("string")), lit(1L))
-        OrderedPosition
-          .withPosition(df, Seq(keyCol), Seq(xCol, yCol), "__pos")
-          .filter(col("__pos") % stride === 0)
-          .drop("__pos")
-      }
-    if (threshold < 3 || maxN <= threshold)
-      points(strided, keyCol, xCol, yCol).toDF(keyCol, xCol, yCol)
-    else lttb(strided, keyCol, xCol, yCol, threshold)
+    if (maxN <= threshold) points(df, keyCol, xCol, yCol).toDF(keyCol, xCol, yCol)
+    else {
+      val strides = sizes.toSeq.map(r => r.getString(0) -> r.getLong(1))
+        .collect { case (k, n) if n > cap => k -> (n + cap - 1) / cap } // ceil(n / cap)
+      val positioned = OrderedPosition
+        .withPosition(df, Seq(keyCol), Seq(xCol, yCol), "__pos")
+      val strided =
+        if (strides.length <= maxStrideLiteral) {
+          val stride = coalesce(typedLit(strides.toMap).apply(col(keyCol).cast("string")), lit(1L))
+          positioned.filter(col("__pos") % stride === 0)
+        } else {
+          val spark = df.sparkSession
+          import spark.implicits._
+          val table = spark.sparkContext.parallelize(strides).toDF("__skey", "__stride")
+          positioned
+            .join(broadcast(table), col(keyCol).cast("string") === col("__skey"), "left")
+            .filter(col("__pos") % coalesce(col("__stride"), lit(1L)) === 0)
+            .drop("__skey", "__stride")
+        }
+      lttb(strided.drop("__pos"), keyCol, xCol, yCol, threshold)
+    }
   }
 }

@@ -52,7 +52,7 @@ class CollectGuardSpec extends AnyFunSuite with Matchers {
         "importanceWeights vocab map: count-gated (maxBroadcastVocab) with a keyed-join fallback"),
     "graft/operators/Decimate.scala" -> (1,
       "downsample per-series sizes: one row per series, " +
-        "require(<= OrderedPosition.MaxOffsetRows = 1e6) fail-fast"),
+        "overflow-proof limit(OrderedPosition.MaxOffsetRows + 1)+require"),
     "graft/operators/Dedup.scala" -> (1,
       "connectedComponents driver union-find: count-gated, large graphs route to pointer-jumping"),
     "graft/operators/GapFill.scala" -> (1,

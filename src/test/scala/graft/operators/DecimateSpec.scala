@@ -151,25 +151,35 @@ class DecimateSpec extends SparkSpec {
         StructField("y", DoubleType))))
   }
 
-  test("downsample: every tier returns the stride-then-LTTB rows exactly") {
+  test("downsample: every path returns the stride-then-LTTB rows exactly") {
+    def sized(df: DataFrame, threshold: Int) =
+      Decimate.downsample(df, "k", "x", "y", threshold)
+    // strides broadcast-joined instead of inlined as a map literal
+    def joined(df: DataFrame, threshold: Int) =
+      Decimate.downsampleBounded(df, "k", "x", "y", threshold, 10,
+        maxSeries = 100, maxStrideLiteral = 0)
+    val underCap = tierFrame.filter(col("k") =!= "big" || col("k").isNull)
     val cases = Seq(
-      "stride" -> (tierFrame, tierThreshold),
-      "lttb only" -> (tierFrame.filter(col("k") =!= "big" || col("k").isNull), tierThreshold),
-      "identity" -> (tierFrame.filter(col("k") === "small" || col("k").isNull), tierThreshold),
-      "stride, threshold < 3" -> (tierFrame, 2))
-    for ((tier, (df, threshold)) <- cases) withClue(s"$tier: ") {
-      val got = sortedRows(Decimate.downsample(df, "k", "x", "y", threshold))
+      "stride" -> (sized _, tierFrame, tierThreshold),
+      "stride, joined strides" -> (joined _, tierFrame, tierThreshold),
+      "stride, every series under the cap" -> (sized _, underCap, tierThreshold),
+      "identity" -> (sized _, tierFrame.filter(col("k") === "small" || col("k").isNull),
+        tierThreshold),
+      "stride, threshold < 3" -> (sized _, tierFrame, 2),
+      "stride, threshold < 3, joined strides" -> (joined _, tierFrame, 2))
+    for ((path, (run, df, threshold)) <- cases) withClue(s"$path: ") {
+      val got = sortedRows(run(df, threshold))
       got shouldBe sortedRows(strideThenLttb(df, threshold))
       got.map(_._1) should not contain (null: String)
     }
-    // the tiers really decimate: "mid" to the threshold, "big" too
+    // the stride path really decimates: "mid" to the threshold, "big" too
     val all = sortedRows(Decimate.downsample(tierFrame, "k", "x", "y", tierThreshold))
     all.count(_._1 == "mid") shouldBe tierThreshold
     all.count(_._1 == "big") shouldBe tierThreshold
     all.count(_._1 == "small") shouldBe 13 // 15 rows, 2 with a null x or y
   }
 
-  test("downsample identity tier plans no Exchange") {
+  test("downsample identity path plans no Exchange") {
     val small = tierFrame.filter(col("k") === "small" || col("k").isNull)
     val plan = Decimate.downsample(small, "k", "x", "y", tierThreshold)
       .queryExecution.executedPlan.toString
@@ -181,5 +191,15 @@ class DecimateSpec extends SparkSpec {
       Decimate.downsample(tierFrame, "k", "x", "y", threshold = 0)
     an[IllegalArgumentException] should be thrownBy
       Decimate.downsample(tierFrame, "k", "x", "y", threshold = 10, maxPointsFactor = 0)
+  }
+
+  test("downsample rejects more series than the driver sizes collect allows") {
+    // three non-null series ("small", "mid", "big"); the null key is not one
+    def bounded(maxSeries: Int) =
+      Decimate.downsampleBounded(tierFrame, "k", "x", "y", tierThreshold, 10,
+        maxSeries, Decimate.MaxStrideLiteral)
+    val e = the[IllegalArgumentException] thrownBy bounded(2)
+    e.getMessage should include("more than 2 series")
+    bounded(3).count() shouldBe 13 + 2 * tierThreshold
   }
 }
