@@ -2,7 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory with the engine's standard configuration.
+/** Session factory with the engine's standard configuration — the one
+  * place sessions get [[GraftExtensions]], which the engine requires (its
+  * helpers call the native functions the extension registers; a session
+  * without it fails analysis naming the missing function).
   *
   * Defaults chosen for the local[N] test harness; on a real cluster the same
   * builder is used with `master` left to spark-submit and shuffle partitions

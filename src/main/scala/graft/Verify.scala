@@ -66,18 +66,12 @@ object Verify {
       case Array(s, o, f) => (s, o, Some(f.split(",").toSet))
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
       // Default INT96 timestamps: the driver's gate hashes the on-disk
       // timestamp dtype, and the rounds-1-4 green runs were INT96/ns.
       // The 9999-12-31 open-validity sentinel (which overflows int64
       // nanos on pyarrow readers) is clamped narrowly in the one query
       // that emits it (q61) instead of changing every query's dtype.
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     run(spark, sfDir, outDir, SparkEntry.queries, SparkEntry.oracleSql, only)

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 
@@ -8,14 +7,15 @@ import org.apache.spark.sql.functions._
   * extension; ref has no equivalent — this is the training-data-pipeline
   * surface).
   *
-  * Why UDFs and not pure Catalyst expressions: the per-row work here is
-  * O(shingles × numHashes) — thousands of hash evaluations per document.
-  * Spark's higher-order functions (`transform`/`aggregate`) don't participate
-  * in whole-stage codegen, so expressing the signature as 64 nested
-  * `array_min(transform(...))` trees evaluates interpreted `xxhash64`
+  * Why JVM kernels and not Catalyst higher-order functions: the per-row
+  * work here is O(shingles × numHashes) — thousands of hash evaluations per
+  * document. Spark's higher-order functions (`transform`/`aggregate`) don't
+  * participate in whole-stage codegen, so expressing the signature as 64
+  * nested `array_min(transform(...))` trees evaluates interpreted `xxhash64`
   * expression objects per element (measured: ~660 s for 5k docs at sf0.1).
-  * A scalar UDF pays one boxing boundary per row and then runs straight JVM
-  * loops (~ms for the same input). All kernels are deterministic (seeded
+  * The native expressions [[graft.GraftExtensions]] registers call these
+  * kernels once per row from generated code and run straight JVM loops
+  * (~ms for the same input). All kernels are deterministic (seeded
   * splitmix64), so Catalyst may still dedupe/reorder them freely.
   */
 object HashKernels {
@@ -461,15 +461,6 @@ object HashKernels {
         if (arr == null) null else scala.collection.immutable.ArraySeq.unsafeWrapArray(arr), n))
   }
 
-  // ---- Column-level wrappers ----
-
-  def linearScoreUdf(dim: Int, weights: Array[Double],
-                     bias: Double): UserDefinedFunction =
-    udf((text: String) => linearScore(text, dim, weights, bias))
-
-  def shingleHashSetUdf(k: Int): UserDefinedFunction =
-    udf((text: String) => shingleHashSet(text, k))
-
   /** Hash of the space-joined n-gram at every start position of a
     * pre-tokenized document (length `max(0, tokens - n + 1)`, order
     * preserved, NOT distinct) — the [[graft.operators.Curation
@@ -500,30 +491,10 @@ object HashKernels {
     out
   }
 
-  def posGramHashesUdf(n: Int): UserDefinedFunction =
-    udf((toks: Seq[String]) => posGramHashes(toks, n))
-
-  def minHashSigUdf(numHashes: Int): UserDefinedFunction =
-    udf((sh: Seq[Long]) => minHashSig(sh, numHashes))
-
-  def bandKeysUdf(bands: Int, rowsPerBand: Int): UserDefinedFunction =
-    udf((sig: Seq[Long]) => bandKeys(sig, bands, rowsPerBand))
-
-  private val jaccardUdf: UserDefinedFunction =
-    udf((a: Seq[Long], b: Seq[Long]) => sortedJaccard(a, b))
-
-  def sortedJaccardCol(a: Column, b: Column): Column = jaccardUdf(a, b)
+  // ---- Column-level wrappers ----
 
   def bucketPairsUdf(maxBucket: Int): UserDefinedFunction =
     udf((ids: Seq[Long]) => bucketPairs(ids, maxBucket))
-
-  // null text → null hash, matching the HOF versions these kernels replaced
-  // (a bare String parameter would NPE inside the kernel and kill the job)
-  val simHash40Udf: UserDefinedFunction =
-    udf((text: String) => if (text == null) null else java.lang.Long.valueOf(simHash40(text)))
-
-  val fingerprint40Udf: UserDefinedFunction =
-    udf((text: String) => if (text == null) null else java.lang.Long.valueOf(fingerprint40(text)))
 
   def bucketPairsRatioUdf(maxBucket: Int, minJaccard: Double,
                           skipBothNonNegative: Boolean = false): UserDefinedFunction =

@@ -35,7 +35,8 @@ import org.apache.spark.sql.functions._
   * a value landing exactly on a half — ~1e-4 probability per rounded
   * aggregate per testdata regeneration — hashes identically on both
   * engines instead of failing the gate. [[droundDouble]] is the JVM-twin
-  * for scalar kernels; the property spec pins Column ≡ JVM bit-for-bit.
+  * for scalar kernels; the property spec pins native ≡ JVM ≡ a pure-Column
+  * spelling bit-for-bit.
   *
   * Internal fixed-point integerizations (`functions.round(x·1e9)` in
   * Similarity's deterministic trainers) are NOT oracle-facing and keep
@@ -44,44 +45,15 @@ import org.apache.spark.sql.functions._
   */
 object Rounding {
 
-  /** DuckDB-exact round to `scale` decimal places (see object doc).
-    * Through the native [[graft.functions.expressions.DuckRound]] when
-    * [[graft.GraftExtensions]] is installed — one codegen node that binds
-    * its child once; the pure-Column fallback below duplicates the child
-    * across its conditional branches, re-evaluating expensive inputs
-    * (regex ratios, HOF cosines) several times per row.
+  /** DuckDB-exact round to `scale` decimal places (see object doc), as
+    * the native [[graft.functions.expressions.DuckRound]] — one codegen
+    * node that binds its child once. (A pure-Column spelling would have
+    * to duplicate the child across its conditional branches,
+    * re-evaluating expensive inputs such as regex ratios or HOF cosines
+    * several times per row.)
     */
-  def dround(c: Column, scale: Int): Column = {
-    // resolve via getActiveSession, not SparkSession.active: Column
-    // construction must not throw in session-free contexts, and a missing
-    // session just means the semantically-identical fallback spelling
-    val hasNative = org.apache.spark.sql.SparkSession.getActiveSession.exists(
-      _.sessionState.functionRegistry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("duck_round")))
-    if (hasNative) call_function("duck_round", c.cast("double"), lit(scale))
-    else droundColumnFallback(c, scale)
-  }
-
-  /** The extension-free Column spelling (exposed for the spec; prefer the
-    * native expression — this form duplicates `c` across its branches).
-    */
-  private[functions] def droundColumnFallback(c: Column, scale: Int): Column = {
-    val p = math.pow(10, scale)
-    val scaled = c * lit(p)
-    // exact-fraction half-away (see object doc). Column `floor` is
-    // LONG-valued, so guard at 2^52: every double ≥ 2^52 is integral and
-    // std::round is the identity there (this also routes ±Inf through
-    // scaled/p); below 2^52 the long floor is exact and a − f is the
-    // exact fraction. NaN falls through to m = 0 → caught by the
-    // sign-of-zero branch, where NaN · 0.0 = NaN propagates it.
-    val a = abs(scaled)
-    val f = floor(a).cast("double")
-    val m = when(a - f >= lit(0.5), f + lit(1.0)).otherwise(f)
-    val r = when(a >= lit(4503599627370496.0), scaled / lit(p))
-      .otherwise(when(scaled < 0, -m).otherwise(m) / lit(p))
-    // sign-of-zero: DuckDB keeps the input's sign; c*0.0 is IEEE copysign
-    when(r === lit(0.0), c * lit(0.0)).otherwise(r)
-  }
+  def dround(c: Column, scale: Int): Column =
+    call_function("duck_round", c.cast("double"), lit(scale))
 
   /** JVM twin of [[dround]] for scalar kernels — same IEEE ops. */
   def droundDouble(x: Double, scale: Int): Double = {

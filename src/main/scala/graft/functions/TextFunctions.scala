@@ -1,36 +1,16 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Text-analysis functions for the training-data pipeline surface: token
   * counting, quality scoring, language-ID heuristic, document
-  * fingerprinting. All pure Catalyst expressions / higher-order functions —
-  * no UDFs, so they stay inside whole-stage codegen and scale linearly with
-  * the scan.
+  * fingerprinting. Cheap transforms are plain Catalyst expressions; the
+  * per-document hot loops are JVM kernels served through the native
+  * expressions [[graft.GraftExtensions]] registers (`call_function`), so
+  * a session that analyzes these Columns must install the extension.
   */
 object TextFunctions {
-
-  /** Native-vs-UDF routing: on the given session's registry when the
-    * caller has the target frame in scope (multi-session safe), else on
-    * the active session's.
-    *
-    * CONSTRAINT on every public helper whose `spark` defaults to null:
-    * with no session passed, routing consults the ACTIVE session at
-    * Column-CONSTRUCTION time. A Column built while an
-    * extension-installed session is active but later analyzed in a
-    * session without [[graft.GraftExtensions]] fails analysis with an
-    * undefined-function error (the plain-UDF spelling worked anywhere).
-    * In multi-session apps, always pass the target frame's session.
-    */
-  private def routeNative(spark: SparkSession, name: String): Boolean =
-    NativeFunctions.route(spark, name)
-
-  // Shadows functions.round: every oracle-compared column rounds with
-  // DuckDB-exact semantics (see graft.functions.Rounding) so half-boundary
-  // values hash identically on both engines.
-  private def round(c: org.apache.spark.sql.Column, scale: Int): org.apache.spark.sql.Column =
-    graft.functions.Rounding.dround(c, scale)
 
   /** Whitespace token count; empty/blank text counts 0. */
   def tokenCount(text: Column): Column =
@@ -74,17 +54,15 @@ object TextFunctions {
     *
     * Classes inside [[CharClassSpec]]'s supported subset route to the
     * native `char_class_ratio` expression — ONE code-point pass, no
-    * replaced-string build — when the extensions are installed; anything
-    * else keeps the regexp_replace spelling (identical values: both
-    * divide the same two exact integer counts once). The regex
+    * replaced-string build; anything else keeps the regexp_replace
+    * spelling (identical values: both divide the same two exact integer
+    * counts once). The regex
     * double-`length` spelling was q139's per-row cost at 10× — two full
     * regex replaces + result strings per document (round-14 receipts in
     * PLANS.md).
     */
-  def charRatio(text: Column, charClass: String,
-                spark: SparkSession = null): Column =
-    if (CharClassSpec.parse(charClass).isDefined &&
-        routeNative(spark, "char_class_ratio"))
+  def charRatio(text: Column, charClass: String): Column =
+    if (CharClassSpec.parse(charClass).isDefined)
       call_function("char_class_ratio", text, lit(charClass))
     else charRatioRegex(text, charClass)
 
@@ -133,18 +111,11 @@ object TextFunctions {
     * are CodegenFallback — an interpreted expression tree per token ×
     * stopword — while the kernel tokenizes once and does hash-set
     * membership per token (the [[langIdHeuristic]] lesson; receipts in
-    * PLANS.md). [[stopwordRatioHof]] keeps the SQL formulation for the
-    * bit-equivalence spec.
+    * PLANS.md). The bit-equivalence spec keeps the SQL formulation as
+    * its oracle.
     */
-  def stopwordRatio(text: Column, stopwords: Seq[String],
-                    spark: SparkSession = null): Column =
-    if (routeNative(spark, "stopword_ratio"))
-      call_function("stopword_ratio", text, stopwordsArray(stopwords))
-    else {
-      val sw = stopwords.toSet
-      val f = udf((s: String) => stopwordRatioKernel(s, sw))
-      f(text)
-    }
+  def stopwordRatio(text: Column, stopwords: Seq[String]): Column =
+    call_function("stopword_ratio", text, stopwordsArray(stopwords))
 
   // an empty list must still present as array<string>: a bare array()
   // is array<null> and the constant-arg builder rightly rejects it
@@ -158,17 +129,6 @@ object TextFunctions {
   def stopwordRatioData(text: org.apache.spark.unsafe.types.UTF8String,
                         sw: Set[String]): Double =
     stopwordRatioKernel(text.toString, sw).doubleValue()
-
-  /** The original HOF formulation of [[stopwordRatio]], spec-compared
-    * bit-for-bit against the kernel.
-    */
-  private[functions] def stopwordRatioHof(text: Column,
-                                          stopwords: Seq[String]): Column = {
-    val toks = tokens(text)
-    val sw = array(stopwords.map(lit): _*)
-    when(size(toks) === 0, 0.0).otherwise(
-      size(filter(toks, t => array_contains(sw, lower(t)))).cast("double") / size(toks))
-  }
 
   /** Kernel for [[stopwordRatio]] — replicates the SQL token stream
     * exactly: space-only trim (SQL `trim`, not Java trim), `\s+` split
@@ -196,24 +156,16 @@ object TextFunctions {
     * documented so downstream filters are reproducible.
     *
     * JVM kernel for the same reason as [[stopwordRatio]] (the stopword
-    * HOF dominated the scan cost of every quality-scored query);
-    * [[qualityScoreHof]] keeps the SQL formulation for the equivalence
-    * spec. The kernel mirrors SQL semantics term by term: `length()`
-    * counts CODE POINTS (not UTF-16 units — `codePointCount`), the char
-    * ratios run the same Java regex `regexp_replace` uses, the additions
-    * associate left-to-right as the Column expression does, and the final
-    * 6-dp round is the oracle-exact [[Rounding.droundDouble]] (matching
-    * the shadowed Column `round` in the Hof).
+    * HOF dominated the scan cost of every quality-scored query); the
+    * equivalence spec keeps the SQL formulation as its oracle. The kernel
+    * mirrors SQL semantics term by term: `length()` counts CODE POINTS
+    * (not UTF-16 units — `codePointCount`), the char ratios run the same
+    * Java regex `regexp_replace` uses, the additions associate
+    * left-to-right as the Column expression does, and the final 6-dp round is the oracle-exact [[Rounding.droundDouble]] (matching
+    * the oracle-exact Column `round` of the SQL formulation).
     */
-  def qualityScore(text: Column, stopwords: Seq[String],
-                   spark: SparkSession = null): Column =
-    if (routeNative(spark, "quality_score"))
-      call_function("quality_score", text, stopwordsArray(stopwords))
-    else {
-      val sw = stopwords.toSet
-      val f = udf((s: String) => qualityScoreKernel(s, sw))
-      f(text)
-    }
+  def qualityScore(text: Column, stopwords: Seq[String]): Column =
+    call_function("quality_score", text, stopwordsArray(stopwords))
 
   /** [[qualityScoreKernel]] over a possibly-null UTF8String (null → 0.5,
     * the kernel's contract) — the native `quality_score` entry point.
@@ -221,22 +173,6 @@ object TextFunctions {
   def qualityScoreData(text: org.apache.spark.unsafe.types.UTF8String,
                        sw: Set[String]): Double =
     qualityScoreKernel(if (text == null) null else text.toString, sw)
-
-  /** The original Column formulation of [[qualityScore]], spec-compared
-    * bit-for-bit against the kernel.
-    */
-  private[functions] def qualityScoreHof(text: Column,
-                                         stopwords: Seq[String]): Column = {
-    val lenScore = least(length(text).cast("double") / 500.0, lit(1.0))
-    val punct = charRatio(text, "[^A-Za-z0-9\\s]")
-    val digits = charRatio(text, "[0-9]")
-    val stop = stopwordRatioHof(text, stopwords)
-    round(
-      lit(0.25) * lenScore +
-        lit(0.25) * least(stop * 4.0, lit(1.0)) +
-        lit(0.25) * (lit(1.0) - least(punct * 5.0, lit(1.0))) +
-        lit(0.25) * (lit(1.0) - least(digits * 5.0, lit(1.0))), 6)
-  }
 
   private[functions] def qualityScoreKernel(text: String,
                                             sw: Set[String]): java.lang.Double = {
@@ -297,11 +233,10 @@ object TextFunctions {
     * membership per token (q25 at sf0.1: 1.38 s → see PLANS.md).
     */
   def langIdHeuristic(text: Column,
-                      langs: Map[String, Seq[String]] = LangStopwords,
-                      spark: SparkSession = null): Column =
+                      langs: Map[String, Seq[String]] = LangStopwords): Column =
     // the native expression carries the DEFAULT profile set; custom maps
     // (a per-deployment extension point) stay on the kernel UDF
-    if ((langs eq LangStopwords) && routeNative(spark, "lang_id"))
+    if (langs eq LangStopwords)
       call_function("lang_id", text)
     else {
       val ordered = langs.toSeq.sortBy(_._1).map { case (l, ws) => (l, ws.toSet) }
@@ -369,14 +304,14 @@ object TextFunctions {
     * JVM kernel for the same reason as [[fingerprint]]: the HOF spelling
     * (`transform(sequence(...), i -> concat_ws(...))`) is CodegenFallback,
     * interpreted per gram — this is a per-document hot loop on a corpus
-    * scan.
+    * scan. Served by the native `word_ngrams` expression.
     */
-  def wordNgramsUdf(n: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf((text: String) => wordNgramsKernel(text, n))
+  def wordNgramsCol(c: Column, n: Int): Column =
+    call_function("word_ngrams", c, lit(n))
 
-  /** [[wordNgramsKernel]] over a UTF8String (null → empty, matching the
-    * UDF spelling), returning Catalyst ArrayData — the native
-    * `word_ngrams` expression's per-row entry point.
+  /** [[wordNgramsKernel]] over a UTF8String (null → empty), returning
+    * Catalyst ArrayData — the native `word_ngrams` expression's per-row
+    * entry point.
     */
   def wordNgramsData(text: org.apache.spark.unsafe.types.UTF8String,
                      n: Int): org.apache.spark.sql.catalyst.util.ArrayData =
@@ -384,16 +319,6 @@ object TextFunctions {
       wordNgramsKernel(if (text == null) null else text.toString, n)
         .map(s => org.apache.spark.unsafe.types.UTF8String.fromString(s))
         .toIndexedSeq)
-
-  /** Route an n-gram column through the native `word_ngrams` expression
-    * when [[graft.GraftExtensions]] is installed (pass the target frame's
-    * session where one is in scope), else the kernel UDF — same contract
-    * either way.
-    */
-  def wordNgramsCol(c: Column, n: Int, spark: SparkSession = null): Column =
-    if (routeNative(spark, "word_ngrams"))
-      call_function("word_ngrams", c, lit(n))
-    else wordNgramsUdf(n)(c)
 
   private[graft] def wordNgramsKernel(text: String, n: Int): Array[String] = {
     if (text == null) return Array.empty[String]
@@ -469,19 +394,12 @@ object TextFunctions {
     * null bigram; null text → null struct (the oracle's NULL
     * propagation). Character counts are CODEPOINTS (SQL `length()`
     * parity). Same normalization contract as [[wordNgramsKernel]]; JVM
-    * kernel for the usual CodegenFallback reason.
+    * kernel for the usual CodegenFallback reason, served by the native
+    * `repetition_stats` expression. Struct fields are `_1/_2/_3` (a
+    * tuple encoding).
     */
-  val repetitionStatsUdf: org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf((text: String) => repetitionStatsKernel(text))
-
-  /** Route through the native `repetition_stats` expression when
-    * [[graft.GraftExtensions]] is installed, else the kernel UDF. Struct
-    * fields are `_1/_2/_3` either way (the UDF's tuple encoding).
-    */
-  def repetitionStats(text: Column, spark: SparkSession = null): Column =
-    if (routeNative(spark, "repetition_stats"))
-      call_function("repetition_stats", text)
-    else repetitionStatsUdf(text)
+  def repetitionStats(text: Column): Column =
+    call_function("repetition_stats", text)
 
   /** [[repetitionStatsKernel]] over a possibly-null UTF8String, returning
     * a Catalyst struct row — the native `repetition_stats` entry point.
@@ -567,11 +485,8 @@ object TextFunctions {
     * overlapping left-to-right `#|\.\.\.` matches, per-line bullet/
     * ellipsis tests (≡ the RE2/Java `(?m)` anchors), oracle-exact rounding.
     */
-  def gopherStats(text: Column, spark: SparkSession = null): Seq[Column] = {
-    val s =
-      if (routeNative(spark, "gopher_stats"))
-        call_function("gopher_stats", text)
-      else gopherStatsUdf(text)
+  def gopherStats(text: Column): Seq[Column] = {
+    val s = call_function("gopher_stats", text)
     Seq("n_words", "mean_word_len", "symbol_ratio", "bullet_frac",
       "ellipsis_frac", "alpha_frac").map(f => s.getField(f).as(f))
   }
@@ -581,12 +496,6 @@ object TextFunctions {
                          ellipsis_frac: Double, alpha_frac: Double)
 
   private val SymbolRe = java.util.regex.Pattern.compile("#|\\.\\.\\.")
-
-  /** Kernel for [[gopherStats]]; deterministic, so the 6 field extractions
-    * over it collapse to one evaluation under subexpression elimination.
-    */
-  val gopherStatsUdf: org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf((text: String) => gopherStatsKernel(text))
 
   /** [[gopherStatsKernel]] over a possibly-null UTF8String, returning a
     * Catalyst struct row — the native `gopher_stats` entry point.
@@ -779,75 +688,14 @@ object TextFunctions {
     covered
   }
 
-  def rebuildTrimmedSpansUdf(w: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf((toks: Seq[String], starts: Seq[Int]) => {
-      if (toks == null) null
-      else if (starts == null || starts.isEmpty) toks.mkString(" ")
-      else {
-        var si = 1
-        while (si < starts.length) { // loud like the kernel (bit parity)
-          if (starts(si) < starts(si - 1)) throw new IllegalArgumentException(
-            s"rebuild_trimmed_spans: starts must be sorted ascending — " +
-              s"element $si (${starts(si)}) < element ${si - 1} (${starts(si - 1)})")
-          si += 1
-        }
-        val sb = new java.lang.StringBuilder
-        var ci = 0
-        var maxEnd = -1
-        var i = 0
-        while (i < toks.length) {
-          while (ci < starts.length && starts(ci) <= i) {
-            val e = starts(ci) + w - 1
-            if (e > maxEnd) maxEnd = e
-            ci += 1
-          }
-          if (i > maxEnd) {
-            if (sb.length > 0) sb.append(' ')
-            if (toks(i) != null) sb.append(toks(i))
-          }
-          i += 1
-        }
-        sb.toString
-      }
-    })
-
-  def spansCoveredUdf(w: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf((starts: Seq[Int]) => {
-      if (starts == null) 0
-      else {
-        var si = 1
-        while (si < starts.length) { // loud like the kernel (bit parity)
-          if (starts(si) < starts(si - 1)) throw new IllegalArgumentException(
-            s"spans_covered: starts must be sorted ascending — " +
-              s"element $si (${starts(si)}) < element ${si - 1} (${starts(si - 1)})")
-          si += 1
-        }
-        var covered = 0
-        var curStart = 0
-        var curEnd = -1
-        starts.foreach { s =>
-          val e = s + w - 1
-          if (curEnd < 0) { curStart = s; curEnd = e }
-          else if (s <= curEnd + 1) { if (e > curEnd) curEnd = e }
-          else { covered += curEnd - curStart + 1; curStart = s; curEnd = e }
-        }
-        if (curEnd >= 0) covered += curEnd - curStart + 1
-        covered
-      }
-    })
-
   /** Normalized sliding-window token pairs for collocation statistics:
     * for each position i and offset 1..w, the unordered pair
     * `"min max"` of `t(i)` and `t(i+k)` — equal tokens skipped (a
     * repeated word is not a collocation of itself). Pairs keep
     * MULTIPLICITY (each co-occurrence event counts once), which is what
     * PMI's joint probability wants. Null token arrays yield no pairs.
-    */
-  def windowPairsUdf(w: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf((t: Seq[String]) => windowPairsKernel(t, w))
-
-  /** [[windowPairsKernel]] over ArrayData tokens (null → empty, the
-    * kernel's contract) — the native `window_pairs` entry point.
+    * [[windowPairsKernel]] over ArrayData tokens — the native
+    * `window_pairs` entry point.
     */
   def windowPairsData(toks: org.apache.spark.sql.catalyst.util.ArrayData,
                       w: Int): org.apache.spark.sql.catalyst.util.ArrayData = {
@@ -918,8 +766,6 @@ object TextFunctions {
     * CodegenFallback and walks an interpreted expression tree per
     * CHARACTER — measured 10.9 s for q55 vs <1 s as a kernel.
     */
-  def fingerprint(text: Column, spark: SparkSession = null): Column =
-    if (routeNative(spark, "fingerprint40"))
-      call_function("fingerprint40", text)
-    else graft.functions.HashKernels.fingerprint40Udf(text)
+  def fingerprint(text: Column): Column =
+    call_function("fingerprint40", text)
 }

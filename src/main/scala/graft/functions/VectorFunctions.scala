@@ -24,16 +24,13 @@ object VectorFunctions {
   /** Cosine similarity; null-safe via division (0-norm yields null). */
   def cosine(a: Column, b: Column): Column = dot(a, b) / (l2Norm(a) * l2Norm(b))
 
-  /** Cosine through the codegen'd native expression when GraftExtensions is
-    * installed (the HOF version is CodegenFallback — interpreted per
-    * element), else the HOF formulation. Both accumulate left-to-right and
-    * both yield null on zero-norm input, so results are bit-identical.
+  /** Cosine through the codegen'd native `cosine_sim` expression (the HOF
+    * [[cosine]] is CodegenFallback — interpreted per element). Both
+    * accumulate left-to-right and both yield null on zero-norm input, so
+    * results are bit-identical.
     */
-  def cosineBest(spark: org.apache.spark.sql.SparkSession, a: Column, b: Column): Column =
-    if (spark.sessionState.functionRegistry.functionExists(
-          org.apache.spark.sql.catalyst.FunctionIdentifier("cosine_sim")))
-      call_function("cosine_sim", a.cast("array<double>"), b.cast("array<double>"))
-    else cosine(a, b)
+  def cosineBest(a: Column, b: Column): Column =
+    call_function("cosine_sim", a.cast("array<double>"), b.cast("array<double>"))
 
   /** Euclidean distance. */
   def l2Distance(a: Column, b: Column): Column =

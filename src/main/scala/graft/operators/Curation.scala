@@ -18,10 +18,9 @@ import graft.functions.TextFunctions
   *    scan + one hash-aggregate keyed by document id (high cardinality,
   *    map-side partial aggregation).
   *  - [[domainQuota]] reduces through the `topk_by_score`
-  *    TypedImperativeAggregate when GraftExtensions is installed: at most
-  *    k entries per map partition per domain cross the shuffle, and no
-  *    per-domain single-reducer window exists (same shape as
-  *    [[Similarity]]'s reduce; window fallback without the extension).
+  *    TypedImperativeAggregate: at most k entries per map partition per
+  *    domain cross the shuffle, and no per-domain single-reducer window
+  *    exists (same shape as [[Similarity]]'s reduce).
   *  - [[vocabTopK]] is groupBy+count (map-side combine) followed by a
   *    global ordered limit — Spark plans `TakeOrderedAndProject`, a
   *    per-partition top-k merge on the driver, never a global sort.
@@ -49,17 +48,13 @@ object Curation {
     */
   def decontaminate(corpus: DataFrame, benchmark: DataFrame,
                     idCol: String, textCol: String, n: Int = 3): DataFrame = {
-    // each side's gram column routes on ITS OWN frame's session: the
-    // benchmark plan is analyzed in the benchmark's session, which in a
-    // multi-session app need not share the corpus session's registry
     val bench = benchmark
-      .select(explode(TextFunctions.wordNgramsCol(
-        col(textCol), n, benchmark.sparkSession)).as("gram"))
+      .select(explode(TextFunctions.wordNgramsCol(col(textCol), n)).as("gram"))
       .distinct()
       .withColumn("__hit", lit(1))
     corpus
-      .select(col(idCol), explode_outer(TextFunctions.wordNgramsCol(
-        col(textCol), n, corpus.sparkSession)).as("gram"))
+      .select(col(idCol),
+        explode_outer(TextFunctions.wordNgramsCol(col(textCol), n)).as("gram"))
       .join(broadcast(bench), Seq("gram"), "left")
       .groupBy(col(idCol))
       .agg(count(col("gram")).as("n_grams"), count(col("__hit")).as("n_hit"))
@@ -77,30 +72,13 @@ object Curation {
     * scores never rank.
     */
   def domainQuota(docs: DataFrame, classCol: String, idCol: String,
-                  scoreCol: String, k: Int): DataFrame = {
-    val spark = docs.sparkSession
-    val native = spark.sessionState.functionRegistry.functionExists(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("topk_by_score"))
-    if (native)
-      docs.groupBy(col(classCol))
-        .agg(call_function("topk_by_score",
-          col(scoreCol).cast("double"), col(idCol).cast("long"), lit(k)).as("topk"))
-        .select(col(classCol), explode(col("topk")).as("e"))
-        .select(col(classCol), col("e.neighbor_id").as(idCol),
-          col("e.cosine").as("score"))
-    else {
-      // drop NaN before ranking: Spark sorts NaN above every real double,
-      // but the native topk_by_score skips NaN — the fallback must select
-      // the same rows
-      val clean = docs.filter(col(scoreCol).isNotNull && !isnan(col(scoreCol)))
-      val w = Window.partitionBy(col(classCol))
-        .orderBy(col(scoreCol).desc, col(idCol).asc)
-      clean.withColumn("__rk", row_number().over(w))
-        .filter(col("__rk") <= k)
-        .select(col(classCol), col(idCol).cast("long").as(idCol),
-          col(scoreCol).cast("double").as("score"))
-    }
-  }
+                  scoreCol: String, k: Int): DataFrame =
+    docs.groupBy(col(classCol))
+      .agg(call_function("topk_by_score",
+        col(scoreCol).cast("double"), col(idCol).cast("long"), lit(k)).as("topk"))
+      .select(col(classCol), explode(col("topk")).as("e"))
+      .select(col(classCol), col("e.neighbor_id").as(idCol),
+        col("e.cosine").as("score"))
 
   /** Corpus vocabulary: the `k` most frequent whitespace tokens of the
     * lower-cased corpus, ordered (count desc, token asc) so the boundary
@@ -127,23 +105,15 @@ object Curation {
     * `ApproxTopItemsSpec`.
     *
     * Returns ranked rows (token, cnt, lb) — (cnt desc, token asc).
-    * Falls back to the exact [[vocabTopK]] plan (with `lb = cnt`) when
-    * GraftExtensions is not installed.
     */
   def vocabTopKApprox(docs: DataFrame, textCol: String, k: Int,
-                      capacity: Int): DataFrame = {
-    val hasNative = docs.sparkSession.sessionState.functionRegistry
-      .functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("approx_top_items"))
-    if (hasNative)
-      docs
-        .select(explode(TextFunctions.tokens(lower(col(textCol)))).as("token"))
-        .agg(call_function("approx_top_items",
-          col("token"), lit(k), lit(capacity)).as("top"))
-        .select(explode(col("top")).as("t"))
-        .select(col("t.token"), col("t.cnt"), col("t.lb"))
-    else vocabTopK(docs, textCol, k).withColumn("lb", col("cnt"))
-  }
+                      capacity: Int): DataFrame =
+    docs
+      .select(explode(TextFunctions.tokens(lower(col(textCol)))).as("token"))
+      .agg(call_function("approx_top_items",
+        col("token"), lit(k), lit(capacity)).as("top"))
+      .select(explode(col("top")).as("t"))
+      .select(col("t.token"), col("t.cnt"), col("t.lb"))
 
   /** Deterministic per-class sampling: keep a row when
     * `fingerprint(text) mod denom < rate(class) * denom`. Content-hashed,
@@ -160,8 +130,7 @@ object Curation {
                        denom: Int = 10000): DataFrame =
     docs
       .withColumn("sample_bucket",
-        pmod(TextFunctions.fingerprint(col(textCol), docs.sparkSession),
-          lit(denom.toLong)))
+        pmod(TextFunctions.fingerprint(col(textCol)), lit(denom.toLong)))
       .filter(col("sample_bucket") < rateThreshold(classCol, rates, defaultRate, denom))
 
   private def rateThreshold(classCol: String, rates: Map[String, Double],
@@ -285,37 +254,18 @@ object Curation {
     * TypedImperativeAggregate (score = −fp; fp < 2^40 < 2^53 so the
     * double round-trips exactly) — at most n entries per map partition
     * per class cross the shuffle, no per-class single-reducer window, no
-    * global sort. Null text (null fingerprint) never ranks; window
-    * fallback without the extension.
+    * global sort. Null text (null fingerprint) and null ids never rank.
     */
   def sampleExactN(docs: DataFrame, classCol: String, idCol: String,
-                   textCol: String, n: Int): DataFrame = {
-    val spark = docs.sparkSession
-    val fp = TextFunctions.fingerprint(col(textCol), spark)
-    val native = spark.sessionState.functionRegistry.functionExists(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("topk_by_score"))
-    if (native)
-      docs.groupBy(col(classCol))
-        .agg(call_function("topk_by_score",
-          negate(fp.cast("double")), col(idCol).cast("long"), lit(n)).as("topk"))
-        .select(col(classCol), posexplode(col("topk")).as(Seq("pos", "e")))
-        .select(col(classCol), col("e.neighbor_id").as(idCol),
-          negate(col("e.cosine")).cast("long").as("fp"),
-          (col("pos") + 1).cast("int").as("sample_rank"))
-    else {
-      // null ids never rank: the heap aggregate skips them, so the window
-      // fallback must too (nulls sort FIRST ascending and would displace
-      // a real row at the n boundary)
-      val clean = docs.withColumn("__fp", fp)
-        .filter(col("__fp").isNotNull && col(idCol).isNotNull)
-      val w = Window.partitionBy(col(classCol))
-        .orderBy(col("__fp").asc, col(idCol).asc)
-      clean.withColumn("sample_rank", row_number().over(w).cast("int"))
-        .filter(col("sample_rank") <= n)
-        .select(col(classCol), col(idCol).cast("long").as(idCol),
-          col("__fp").as("fp"), col("sample_rank"))
-    }
-  }
+                   textCol: String, n: Int): DataFrame =
+    docs.groupBy(col(classCol))
+      .agg(call_function("topk_by_score",
+        negate(TextFunctions.fingerprint(col(textCol)).cast("double")),
+        col(idCol).cast("long"), lit(n)).as("topk"))
+      .select(col(classCol), posexplode(col("topk")).as(Seq("pos", "e")))
+      .select(col(classCol), col("e.neighbor_id").as(idCol),
+        negate(col("e.cosine")).cast("long").as("fp"),
+        (col("pos") + 1).cast("int").as("sample_rank"))
 
   /** Gopher document-shape gate (Rae et al. 2021 §A1.1): every input row
     * with the [[TextFunctions.gopherStats]] diagnostics plus the `admitted`
@@ -330,7 +280,7 @@ object Curation {
                  maxSymbolRatio: Double = 0.1, maxBulletFrac: Double = 0.9,
                  maxEllipsisFrac: Double = 0.3,
                  minAlphaFrac: Double = 0.8): DataFrame = {
-    val stats = TextFunctions.gopherStats(col(textCol), docs.sparkSession)
+    val stats = TextFunctions.gopherStats(col(textCol))
     docs.select(docs.columns.toIndexedSeq.map(col) ++ stats: _*)
       .withColumn("admitted", coalesce(
         col("n_words") >= minWords && col("n_words") <= maxWords &&
@@ -417,8 +367,7 @@ object Curation {
                       n: Int = 8, minDocFreq: Int = 2): DataFrame = {
     val grams = docs
       .select(col(idCol),
-        explode_outer(TextFunctions.wordNgramsCol(col(textCol), n,
-          docs.sparkSession)).as("__g"))
+        explode_outer(TextFunctions.wordNgramsCol(col(textCol), n)).as("__g"))
       // explicit null guard: xxhash64(null) is the (non-null) seed hash,
       // which would count every zero-gram document as one shared "gram"
       .withColumn("__h", when(col("__g").isNotNull, xxhash64(col("__g"))))
@@ -477,11 +426,7 @@ object Curation {
     // exactly the gram's start position.
     val posGrams = base
       .select(col(idCol),
-        posexplode(
-          if (graft.functions.NativeFunctions.registered(
-              docs.sparkSession, "pos_gram_hashes"))
-            call_function("pos_gram_hashes", col("__t"), lit(n))
-          else graft.functions.HashKernels.posGramHashesUdf(n)(col("__t"))))
+        posexplode(call_function("pos_gram_hashes", col("__t"), lit(n))))
       .toDF(idCol, "__pos", "__h")
       .transform(Reuse.pinned)
     val freq = posGrams.select(col(idCol), col("__h")).distinct()
@@ -495,20 +440,13 @@ object Curation {
     // sorted starts: token i is covered iff some start s has
     // s ≤ i ≤ s+n-1, and n_removed is the merged-interval total —
     // bit-identical to the covered-position spelling
-    // (TextHashExpressionsSpec pins both spellings and the UDF fallbacks).
+    // (TextHashExpressionsSpec pins both spellings against UDF oracles).
     val starts = posGrams.join(freq, Seq("__h"))
       .groupBy(col(idCol))
       .agg(sort_array(collect_set(col("__pos"))).as("__starts"))
-    val native = graft.functions.NativeFunctions.registered(
-      docs.sparkSession, "rebuild_trimmed_spans")
     val rebuilt =
-      if (native)
-        call_function("rebuild_trimmed_spans", col("__t"), col("__starts"), lit(n))
-      else graft.functions.TextFunctions.rebuildTrimmedSpansUdf(n)(
-        col("__t"), col("__starts"))
-    val nRemoved =
-      if (native) call_function("spans_covered", col("__starts"), lit(n))
-      else graft.functions.TextFunctions.spansCoveredUdf(n)(col("__starts"))
+      call_function("rebuild_trimmed_spans", col("__t"), col("__starts"), lit(n))
+    val nRemoved = call_function("spans_covered", col("__starts"), lit(n))
     base.join(starts, Seq(idCol), "left")
       .select(col(idCol),
         rebuilt.as("text"),
@@ -968,12 +906,8 @@ object Curation {
                   dim: Int, weights: Array[Double],
                   bias: Double): DataFrame = {
     require(weights.length == dim, "weights must have length dim")
-    val scoreCol =
-      if (graft.functions.NativeFunctions.registered(
-          docs.sparkSession, "linear_score"))
-        call_function("linear_score", col(textCol),
-          array(weights.map(w => lit(w)).toIndexedSeq: _*), lit(bias))
-      else graft.functions.HashKernels.linearScoreUdf(dim, weights, bias)(col(textCol))
+    val scoreCol = call_function("linear_score", col(textCol),
+      array(weights.map(w => lit(w)).toIndexedSeq: _*), lit(bias))
     docs.select(col(idCol),
       round(scoreCol, 6).as("score"))
       .withColumn("label", coalesce(col("score") >= 0.5, lit(false)))
@@ -995,7 +929,7 @@ object Curation {
     // maxGrams + 1 must not overflow limit(): Int.MaxValue caps the probe
     val lim = if (maxGrams == Int.MaxValue) Int.MaxValue else maxGrams + 1
     val grams = benchmark
-      .select(explode(TextFunctions.wordNgramsCol(col(textCol), n, spark)).as("g"))
+      .select(explode(TextFunctions.wordNgramsCol(col(textCol), n)).as("g"))
       .distinct().limit(lim).as[String].collect()
     require(grams.length <= maxGrams,
       s"benchmarkGramSet: the benchmark has more than $maxGrams distinct " +
@@ -1036,13 +970,11 @@ object Curation {
       // mid-scale score — an unscorable doc gets null diagnostics
       .withColumn("quality",
         when(col(textCol).isNotNull,
-          TextFunctions.qualityScore(col(textCol), stopwords,
-            docs.sparkSession)))
+          TextFunctions.qualityScore(col(textCol), stopwords)))
       .withColumn("contamination",
         when(col(textCol).isNotNull, round(contamUdf(col(textCol)), 6)))
       .withColumn("sample_bucket",
-        pmod(TextFunctions.fingerprint(col(textCol), docs.sparkSession),
-          lit(denom.toLong)))
+        pmod(TextFunctions.fingerprint(col(textCol)), lit(denom.toLong)))
       // and a null verdict is not a verdict: unscorable → NOT admitted
       .withColumn("admitted",
         coalesce(
@@ -1080,8 +1012,7 @@ object Curation {
     // distinct ONCE; both the broadcast collect and the join route then
     // reuse the pinned gram frame instead of recomputing it
     val bench = benchmark
-      .select(explode(TextFunctions.wordNgramsCol(
-        col(benchTextCol), n, benchmark.sparkSession)).as("gram"))
+      .select(explode(TextFunctions.wordNgramsCol(col(benchTextCol), n)).as("gram"))
       .distinct()
       .localCheckpoint(false)
     val gramCount = bench.count()
@@ -1099,8 +1030,7 @@ object Curation {
     } else {
       val contam = docs
         .select(col(idCol),
-          explode_outer(TextFunctions.wordNgramsCol(
-            col(textCol), n, docs.sparkSession)).as("gram"))
+          explode_outer(TextFunctions.wordNgramsCol(col(textCol), n)).as("gram"))
         .join(bench.withColumn("__hit", lit(1)), Seq("gram"), "left")
         .groupBy(col(idCol))
         .agg(count(col("gram")).as("__n"), count(col("__hit")).as("__h"))
@@ -1110,16 +1040,14 @@ object Curation {
       docs.join(contam, Seq(idCol), "left")
         .withColumn("quality",
           when(col(textCol).isNotNull,
-            TextFunctions.qualityScore(col(textCol), stopwords,
-              docs.sparkSession)))
+            TextFunctions.qualityScore(col(textCol), stopwords)))
         // null text must stay a null contamination (unscorable), exactly
         // like the kernel path — the join route's explode_outer would
         // otherwise report 0.0
         .withColumn("contamination",
           when(col(textCol).isNotNull, col("__contam")))
         .withColumn("sample_bucket",
-          pmod(TextFunctions.fingerprint(col(textCol), docs.sparkSession),
-            lit(denom.toLong)))
+          pmod(TextFunctions.fingerprint(col(textCol)), lit(denom.toLong)))
         .withColumn("admitted",
           coalesce(
             col("quality") >= minQuality &&
@@ -1444,35 +1372,20 @@ object Curation {
     */
   def invertedIndex(docs: DataFrame, idCol: String, textCol: String,
                     maxPostings: Int): DataFrame = {
-    val spark = docs.sparkSession
     val tf = docs.select(col(idCol).cast("long").as("doc_id"),
         explode(TextFunctions.tokens(lower(col(textCol)))).as("term"))
-      // null ids never post: the heap aggregate skips them, so the window
-      // fallback must too
+      // null ids never post
       .where(col("doc_id").isNotNull)
       .groupBy(col("term"), col("doc_id"))
       .agg(count(lit(1)).as("tf"))
       .transform(Reuse.pinned)
-    val native = spark.sessionState.functionRegistry.functionExists(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("topk_by_score"))
-    val sel =
-      if (native)
-        tf.groupBy(col("term"))
-          .agg(count(lit(1)).as("df"), sum(col("tf")).as("cf"),
-            call_function("topk_by_score",
-              negate(col("doc_id").cast("double")), col("doc_id"),
-              lit(maxPostings)).as("sel"))
-          .select(col("term"), col("df"), col("cf"),
-            explode(col("sel.neighbor_id")).as("doc_id"))
-      else {
-        val w = Window.partitionBy(col("term")).orderBy(col("doc_id").asc)
-        val stats = tf.groupBy(col("term"))
-          .agg(count(lit(1)).as("df"), sum(col("tf")).as("cf"))
-        tf.withColumn("__rk", row_number().over(w))
-          .filter(col("__rk") <= maxPostings)
-          .join(stats, Seq("term"))
-          .select(col("term"), col("df"), col("cf"), col("doc_id"))
-      }
+    val sel = tf.groupBy(col("term"))
+      .agg(count(lit(1)).as("df"), sum(col("tf")).as("cf"),
+        call_function("topk_by_score",
+          negate(col("doc_id").cast("double")), col("doc_id"),
+          lit(maxPostings)).as("sel"))
+      .select(col("term"), col("df"), col("cf"),
+        explode(col("sel.neighbor_id")).as("doc_id"))
     sel.join(tf, Seq("term", "doc_id"))
       .groupBy(col("term"), col("df"), col("cf"))
       .agg(array_join(transform(
@@ -1543,11 +1456,7 @@ object Curation {
       .select(TextFunctions.tokens(lower(col(textCol))).as("t"))
       .transform(Reuse.pinned)
     val cab = toks
-      .select(explode(
-        if (graft.functions.NativeFunctions.registered(
-            docs.sparkSession, "window_pairs"))
-          call_function("window_pairs", col("t"), lit(window))
-        else TextFunctions.windowPairsUdf(window)(col("t"))).as("pair"))
+      .select(explode(call_function("window_pairs", col("t"), lit(window))).as("pair"))
       .groupBy(col("pair")).agg(count(lit(1)).as("c_ab"))
       .transform(Reuse.pinned)
     val ct = toks.select(explode(col("t")).as("term"))
@@ -1633,10 +1542,10 @@ object Curation {
   def corpusDiff(oldDocs: DataFrame, newDocs: DataFrame,
                  idCol: String, textCol: String): DataFrame = {
     val o = oldDocs.select(col(idCol).cast("long").as("doc_id"),
-      TextFunctions.fingerprint(col(textCol), oldDocs.sparkSession).as("old_fp"),
+      TextFunctions.fingerprint(col(textCol)).as("old_fp"),
       lit(true).as("__in_old"))
     val n = newDocs.select(col(idCol).cast("long").as("doc_id"),
-      TextFunctions.fingerprint(col(textCol), newDocs.sparkSession).as("new_fp"),
+      TextFunctions.fingerprint(col(textCol)).as("new_fp"),
       lit(true).as("__in_new"))
     o.join(n, Seq("doc_id"), "full_outer")
       .select(col("doc_id"), col("old_fp"), col("new_fp"),

@@ -333,22 +333,13 @@ object Dedup {
     import graft.functions.HashKernels
     val groups = Reuse.pinned(exactGroups(df, idCol, textCol))
     // 2. signatures per distinct text — through the codegen'd native
-    //    expressions when GraftExtensions is installed (the whole scan
-    //    stays in one codegen stage, and the MinHash signature is fused
-    //    inside the band-key kernel instead of riding the checkpoint as
-    //    an intermediate column), else the JVM-kernel UDF chain
-    val native =
-      graft.functions.NativeFunctions.registered(df.sparkSession, "shingle_hashes")
-    val shCol =
-      if (native) call_function("shingle_hashes", col("text"), lit(k))
-      else HashKernels.shingleHashSetUdf(k)(col("text"))
+    //    expressions (the whole scan stays in one codegen stage, and the
+    //    MinHash signature is fused inside the band-key kernel instead of
+    //    riding the checkpoint as an intermediate column)
     val sigs = spreadForKernelStage(groups)
-      .select(col("rep").as("id"), shCol.as("sh"))
+      .select(col("rep").as("id"),
+        call_function("shingle_hashes", col("text"), lit(k)).as("sh"))
       .transform(Reuse.pinned)
-    def bandKeysOf(sh: Column): Column =
-      if (native) call_function("minhash_band_keys", sh, lit(numHashes), lit(bands))
-      else HashKernels.bandKeysUdf(bands, rowsPerBand)(
-        HashKernels.minHashSigUdf(numHashes)(sh))
     // 3. LSH candidate pairs among representatives. Bucket rows carry
     //    only (id, setSize) — two 8-byte columns — through the bucket
     //    collect_list exchange; the kernel applies the exact size-ratio
@@ -361,7 +352,8 @@ object Dedup {
     //    first-band check could dedup — ~bands²× more aggregate payload
     //    per document to save a cheap narrow exchange.
     val withMeta = sigs.select(col("id"), size(col("sh")).as("sz"),
-      bandKeysOf(col("sh")).as("bk"))
+      call_function("minhash_band_keys", col("sh"), lit(numHashes), lit(bands))
+        .as("bk"))
     val buckets = withMeta
       .select(col("id"), col("sz"), posexplode(col("bk")))
       .toDF("id", "sz", "band", "band_hash")
@@ -376,13 +368,8 @@ object Dedup {
       .select(col("p._1").as("id_a"), col("p._2").as("id_b"))
       .distinct()
     // 4. exact-Jaccard verification of representative pairs — through the
-    //    codegen'd native expression when GraftExtensions is installed
-    //    (stays inside whole-stage codegen), else the JVM-kernel UDF
-    val jaccard =
-      if (df.sparkSession.sessionState.functionRegistry.functionExists(
-            org.apache.spark.sql.catalyst.FunctionIdentifier("sorted_jaccard")))
-        call_function("sorted_jaccard", col("sh_a"), col("sh_b"))
-      else HashKernels.sortedJaccardCol(col("sh_a"), col("sh_b"))
+    //    codegen'd native expression (stays inside whole-stage codegen)
+    val jaccard = call_function("sorted_jaccard", col("sh_a"), col("sh_b"))
     val repPairs = cands
       .join(sigs.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
       .join(sigs.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
@@ -586,11 +573,7 @@ object Dedup {
     * kernel rather than HOFs: the per-bit aggregate tree would run
     * interpreted (CodegenFallback) over tokens × 40 bits.
     */
-  def simHash(text: Column,
-              spark: org.apache.spark.sql.SparkSession = null): Column =
-    if (graft.functions.NativeFunctions.route(spark, "simhash40"))
-      call_function("simhash40", text)
-    else graft.functions.HashKernels.simHash40Udf(text)
+  def simHash(text: Column): Column = call_function("simhash40", text)
 
   /** Hamming distance between two 64-bit fingerprints. */
   def hammingDistance(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
@@ -658,7 +641,7 @@ object Dedup {
     def slice(sig: Column, b: Column): Column =
       call_function("shiftright", sig, b * width).bitwiseAND(lit(mask))
     val sigs = docs.select(col(idCol).as("id"),
-      simHash(col(textCol), docs.sparkSession).as("sig"))
+      simHash(col(textCol)).as("sig"))
     val banded = sigs
       .withColumn("band", explode(sequence(lit(0), lit(bands - 1))))
       .withColumn("slice", slice(col("sig"), col("band")))
@@ -693,44 +676,28 @@ object Dedup {
     sortedSetJaccard(sortedShingleHashes(a, k), sortedShingleHashes(b, k))
 
   /** Sorted distinct shingle hashes — precompute once per document.
-    * Routes through the codegen'd `shingle_hashes` expression when
-    * [[graft.GraftExtensions]] is installed: the HOF spelling
-    * (transform + xxhash64 + array_distinct + sort_array) runs
-    * interpreted and dominated q146/q28/q92's invariant passes — the
-    * kernel is one JVM call per row inside whole-stage codegen (measured
-    * 24× on the sf0.1 documents scan).
+    * Served by the codegen'd `shingle_hashes` expression: the HOF
+    * spelling [[shingleHashes]] (transform + xxhash64 + array_distinct +
+    * sort_array) runs interpreted and dominated q146/q28/q92's invariant
+    * passes — the kernel is one JVM call per row inside whole-stage
+    * codegen (measured 24× on the sf0.1 documents scan).
     *
     * The two spellings hash shingles DIFFERENTLY (the kernel is
     * FNV-1a+mix64, the HOF xxhash64), so raw values must never cross
-    * spellings. Every consumer compares sets that come from THIS
-    * function on both sides (pair jaccard, invariant recomputes), and
-    * set size / pairwise jaccard are invariant under the hash
+    * spellings. Set size / pairwise jaccard are invariant under the hash
     * relabeling — MinHashExpressionsSpec pins exactly that equivalence
-    * on edge-case texts. The routing also puts these consumers in the
-    * SAME hash space as the kernel-side miners ([[minHashDupPairs]],
-    * the streaming gate), removing the old cross-space reliance.
+    * on edge-case texts. These consumers share the hash space of the
+    * kernel-side miners ([[minHashDupPairs]], the streaming gate).
     */
-  def sortedShingleHashes(text: Column, k: Int): Column = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    if (spark.sessionState.functionRegistry.functionExists(
-          org.apache.spark.sql.catalyst.FunctionIdentifier("shingle_hashes")))
-      call_function("shingle_hashes", text, lit(k))
-    else
-      sort_array(shingleHashes(text, k))
-  }
+  def sortedShingleHashes(text: Column, k: Int): Column =
+    call_function("shingle_hashes", text, lit(k))
 
   /** Jaccard of two pre-sorted hash-set columns, through the codegen'd
-    * `sorted_jaccard` expression when [[graft.GraftExtensions]] is
-    * installed (array_intersect/union HOFs run interpreted).
+    * `sorted_jaccard` expression (array_intersect/union HOFs run
+    * interpreted).
     */
-  def sortedSetJaccard(a: Column, b: Column): Column = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    if (spark.sessionState.functionRegistry.functionExists(
-          org.apache.spark.sql.catalyst.FunctionIdentifier("sorted_jaccard")))
-      call_function("sorted_jaccard", a, b)
-    else
-      size(array_intersect(a, b)).cast("double") / size(array_union(a, b))
-  }
+  def sortedSetJaccard(a: Column, b: Column): Column =
+    call_function("sorted_jaccard", a, b)
 
   /** Embedding near-dup pairs: cosine ≥ `minCosine` among candidate pairs
     * sharing an LSH bucket (random hyperplanes). Verification is FUSED

@@ -37,7 +37,12 @@ import org.apache.spark.storage.StorageLevel
   * Determinism caveat (shared with every persist/recompute path in
   * Spark): a recomputed partition must reproduce its rows, so pin only
   * deterministic subtrees — every current caller is a pure projection/
-  * aggregate of parquet input.
+  * aggregate of parquet input. Callers reached through
+  * [[Dedup.spreadForKernelStage]] pin a ROUND-ROBIN repartition, whose
+  * row-to-partition assignment is reproducible only because Spark sorts
+  * each map partition before distributing it: they depend on
+  * `spark.sql.execution.sortBeforeRepartition` staying `true` (the
+  * default) for a bit-identical recompute.
   */
 object Reuse {
 

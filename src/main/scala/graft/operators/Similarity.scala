@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions
 import org.apache.spark.sql.functions._
 
@@ -16,14 +15,13 @@ import graft.functions.VectorFunctions
   *    fraction by ~2^nBits.
   *
   * Both reduce to per-query top-k through the `topk_by_score`
-  * TypedImperativeAggregate (partial heap per map task + final merge) when
-  * GraftExtensions is installed: the shuffle then carries at most k
+  * TypedImperativeAggregate (partial heap per map task + final merge) that
+  * [[graft.GraftExtensions]] registers: the shuffle carries at most k
   * entries per map partition per query, and a 100× corpus scales the map
   * side only. The previous `row_number` window formulation funneled the
   * whole scored corpus for each query through ONE reducer task — fine at
-  * sf0.1, serial at scale. The window path is kept only as a fallback for
-  * sessions without the extension (identical results: score desc, id asc,
-  * null scores never rank).
+  * sf0.1, serial at scale. Ranking: score desc, id asc; null and NaN
+  * scores never rank.
   */
 object Similarity {
 
@@ -33,30 +31,13 @@ object Similarity {
   private def round(c: org.apache.spark.sql.Column, scale: Int): org.apache.spark.sql.Column =
     graft.functions.Rounding.dround(c, scale)
 
-  private[operators] def topKReduce(scored: DataFrame, k: Int): DataFrame = {
-    val spark = scored.sparkSession
-    val native = spark.sessionState.functionRegistry.functionExists(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("topk_by_score"))
-    if (native)
-      scored.groupBy(col("query_id"))
-        .agg(call_function("topk_by_score",
-          col("cosine"), col("neighbor_id").cast("long"), lit(k)).as("topk"))
-        .select(col("query_id"), explode(col("topk")).as("e"))
-        .select(col("query_id"), col("e.neighbor_id").as("neighbor_id"),
-          round(col("e.cosine"), 6).as("cosine"))
-    else {
-      // pre-filter NaN: the native aggregate skips NaN scores, and Spark
-      // would otherwise rank NaN ABOVE every real cosine in desc order —
-      // the fallback must return the same rows
-      val clean = scored.filter(col("cosine").isNotNull && !isnan(col("cosine")))
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("cosine").desc, col("neighbor_id").asc)
-      clean.withColumn("__rk", row_number().over(w))
-        .filter(col("__rk") <= k)
-        .select(col("query_id"), col("neighbor_id").cast("long").as("neighbor_id"),
-          round(col("cosine"), 6).as("cosine"))
-    }
-  }
+  private[operators] def topKReduce(scored: DataFrame, k: Int): DataFrame =
+    scored.groupBy(col("query_id"))
+      .agg(call_function("topk_by_score",
+        col("cosine"), col("neighbor_id").cast("long"), lit(k)).as("topk"))
+      .select(col("query_id"), explode(col("topk")).as("e"))
+      .select(col("query_id"), col("e.neighbor_id").as("neighbor_id"),
+        round(col("e.cosine"), 6).as("cosine"))
 
   /** Exact top-k by cosine: for each row of `queries` (id + vector), the `k`
     * nearest corpus rows. `queries` must be broadcast-size; corpus ids must
@@ -69,7 +50,7 @@ object Similarity {
     val scored = corpus
       .select(col(corpusId).as("neighbor_id"), col(corpusVec).as("cv"))
       .join(q)
-      .withColumn("cosine", VectorFunctions.cosineBest(corpus.sparkSession, col("qv"), col("cv")))
+      .withColumn("cosine", VectorFunctions.cosineBest(col("qv"), col("cv")))
     topKReduce(scored, k)
   }
 
@@ -145,7 +126,7 @@ object Similarity {
           (0 until nBits).map(i => col("bucket").bitwiseXOR(lit(1L << i))): _*))
           .as("bucket")))
     val scored = cb.join(qb, "bucket")
-      .withColumn("cosine", VectorFunctions.cosineBest(corpus.sparkSession, col("qv"), col("cv")))
+      .withColumn("cosine", VectorFunctions.cosineBest(col("qv"), col("cv")))
     topKReduce(scored, k)
   }
 
@@ -173,7 +154,7 @@ object Similarity {
       VectorFunctions.int8Quantize(col(queryVec)).getField("codes")
         .cast("array<double>").as("qv")))
     val scored = c.join(q)
-      .withColumn("cosine", VectorFunctions.cosineBest(corpus.sparkSession, col("qv"), col("cv")))
+      .withColumn("cosine", VectorFunctions.cosineBest(col("qv"), col("cv")))
     topKReduce(scored, k)
   }
 
@@ -441,7 +422,7 @@ object Similarity {
         col(corpusLabel).as("__cl"))
       .join(q, col("__cl") =!= col("__ql"))
       .withColumn("cosine",
-        VectorFunctions.cosineBest(corpus.sparkSession, col("qv"), col("cv")))
+        VectorFunctions.cosineBest(col("qv"), col("cv")))
     topKReduce(scored, k)
   }
 
@@ -493,35 +474,16 @@ object Similarity {
     */
   def pqEncode(df: DataFrame, idCol: String, vecCol: String,
                codebooks: Array[Array[Array[Double]]]): DataFrame = {
-    val spark = df.sparkSession
     val m = codebooks.length
     val ksub = codebooks(0).length
-    // the per-row kernel of the PQ corpus scan: native codegen expression
-    // when GraftExtensions is installed (m·ksub·sub fused multiply-adds in
-    // whole-stage codegen, codebooks as a flat reference object), UDF
-    // fallback otherwise — same first-min tie-break, bit-identical codes
-    // (PqExpressionsSpec pins the equivalence)
-    if (spark.sessionState.functionRegistry.functionExists(
-          org.apache.spark.sql.catalyst.FunctionIdentifier("pq_encode"))) {
-      val flat = codebooks.flatten.flatten
-      df.select(col(idCol),
-        call_function("pq_encode", col(vecCol).cast("array<double>"),
-          typedLit(flat), lit(m), lit(ksub)).as("codes"))
-    } else {
-      val bc = spark.sparkContext.broadcast(codebooks)
-      val encodeUdf = udf((v: Seq[Double]) => {
-        if (v == null) null
-        else {
-          val cb = bc.value
-          val sub = cb(0)(0).length
-          val a = v.toArray
-          Array.tabulate(m) { s =>
-            nearestCentroid(java.util.Arrays.copyOfRange(a, s * sub, (s + 1) * sub), cb(s))
-          }
-        }
-      })
-      df.select(col(idCol), encodeUdf(col(vecCol).cast("array<double>")).as("codes"))
-    }
+    // the per-row kernel of the PQ corpus scan: the native pq_encode
+    // expression (m·ksub·sub fused multiply-adds in whole-stage codegen,
+    // codebooks as a flat reference object, first-min tie-break —
+    // PqExpressionsSpec pins it against a hand-computed reference)
+    val flat = codebooks.flatten.flatten
+    df.select(col(idCol),
+      call_function("pq_encode", col(vecCol).cast("array<double>"),
+        typedLit(flat), lit(m), lit(ksub)).as("codes"))
   }
 
   /** Asymmetric-distance (ADC) top-k over PQ codes: each query precomputes
@@ -566,25 +528,10 @@ object Similarity {
     // each query's ADC table rides as a COLUMN of the broadcast query side
     // (m·ksub doubles per query row — broadcast-size by contract), so the
     // scoring expression needs no per-row map lookup and no payload:
-    // native codegen pq_adc when registered (m array loads/adds inside
-    // whole-stage codegen), UDF over the same column otherwise
+    // the native pq_adc expression (m array loads/adds inside whole-stage
+    // codegen)
     val qTables = broadcast(tables.toSeq.toDF("query_id", "__adc_table"))
-    val hasNative = spark.sessionState.functionRegistry.functionExists(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("pq_adc"))
-    val score =
-      if (hasNative)
-        call_function("pq_adc", col("codes"), col("__adc_table"), lit(ksub))
-      else {
-        val adcUdf = udf((codes: Seq[Int], t: Seq[Double]) =>
-          if (codes == null) null
-          else {
-            var d = 0.0
-            var s = 0
-            while (s < m) { d += t(s * ksub + codes(s)); s += 1 }
-            java.lang.Double.valueOf(-d)
-          })
-        adcUdf(col("codes"), col("__adc_table"))
-      }
+    val score = call_function("pq_adc", col("codes"), col("__adc_table"), lit(ksub))
     val scored = enc.crossJoin(qTables)
       .withColumn("cosine", score)
       .drop("__adc_table")
@@ -619,7 +566,7 @@ object Similarity {
           col(queryVec).cast("array<double>").as("qv"))
         .withColumn("bucket", explode(probeUdf(col("qv")))))
     val scored = cb.join(qb, "bucket")
-      .withColumn("cosine", VectorFunctions.cosineBest(spark, col("qv"), col("cv")))
+      .withColumn("cosine", VectorFunctions.cosineBest(col("qv"), col("cv")))
     topKReduce(scored, k)
   }
 

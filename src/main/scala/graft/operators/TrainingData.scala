@@ -31,15 +31,8 @@ object TrainingData {
     * deterministic home, and silently defaulting it into the last split —
     * what a trailing `otherwise` would do — is the wrong call for a
     * reproducibility primitive. Filter or impute nulls upstream.
-    *
-    * Pass `spark` when the target frame's session is in scope: the
-    * native-vs-UDF fingerprint routing otherwise consults the ACTIVE
-    * session at Column-construction time, and in a multi-session app a
-    * Column built under an extension-installed session but analyzed in a
-    * plain one would fail analysis (undefined function).
     */
-  def hashSplit(text: Column, fractions: Seq[(String, Double)],
-                spark: org.apache.spark.sql.SparkSession = null): Column = {
+  def hashSplit(text: Column, fractions: Seq[(String, Double)]): Column = {
     require(math.abs(fractions.map(_._2).sum - 1.0) < 1e-9, "fractions must sum to 1")
     val cuts = fractions.scanLeft(0.0)(_ + _._2).tail.map(f => math.round(f * 100).toInt)
     // precompute the bucket→label table and look it up with ONE array index:
@@ -49,7 +42,7 @@ object TrainingData {
       fractions.map(_._1).zip(cuts).collectFirst { case (l, cut) if b < cut => l }
         .getOrElse(fractions.last._1)
     }
-    val bucket = (TextFunctions.fingerprint(text, spark) % 100).cast("int")
+    val bucket = (TextFunctions.fingerprint(text) % 100).cast("int")
     // slot 101 holds the null label and null buckets are coalesced onto it:
     // element_at over an all-non-null literal array reports nullable=false
     // under ANSI even with a nullable index (null index → null value), which

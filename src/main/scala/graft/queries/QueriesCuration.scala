@@ -40,7 +40,7 @@ object QueriesCuration {
     "q74_domain_quota" -> ((s, d) => {
       val scored = Tables.documents(s, d).select(
         col("source"), col("doc_id"),
-        TextFunctions.qualityScore(col("text"), enStop, s).as("score"))
+        TextFunctions.qualityScore(col("text"), enStop).as("score"))
       Curation.domainQuota(scored, "source", "doc_id", "score", k = 5)
     }),
 
@@ -74,7 +74,7 @@ object QueriesCuration {
     // global running sum (OrderedPosition, not Window.orderBy)
     "q132_budget_select" -> ((s, d) => {
       val scored = Tables.documents(s, d).select(col("doc_id"), col("text"),
-        TextFunctions.qualityScore(col("text"), enStop, s).as("score"))
+        TextFunctions.qualityScore(col("text"), enStop).as("score"))
       Curation.budgetSelect(scored, "doc_id", "text", "score",
         budgetTokens = 10000L)
     }),
@@ -115,7 +115,7 @@ object QueriesCuration {
     // score within each source — grouped ranks without a per-class window
     "q138_quantile_norm" -> ((s, d) => {
       val scored = Tables.documents(s, d).select(col("doc_id"), col("source"),
-        TextFunctions.qualityScore(col("text"), enStop, s).as("score"))
+        TextFunctions.qualityScore(col("text"), enStop).as("score"))
       Curation.quantileNormalize(scored, "source", "doc_id", "score")
     }),
 
@@ -126,11 +126,11 @@ object QueriesCuration {
       val sig = t.select(
         round(least(length(col("text")).cast("double") / 500.0, lit(1.0)), 6)
           .as("len_score"),
-        round(TextFunctions.charRatio(col("text"), "[^A-Za-z0-9\\s]", s), 6)
+        round(TextFunctions.charRatio(col("text"), "[^A-Za-z0-9\\s]"), 6)
           .as("punct_ratio"),
-        round(TextFunctions.charRatio(col("text"), "[0-9]", s), 6)
+        round(TextFunctions.charRatio(col("text"), "[0-9]"), 6)
           .as("digit_ratio"),
-        round(TextFunctions.stopwordRatio(col("text"), enStop, s), 6)
+        round(TextFunctions.stopwordRatio(col("text"), enStop), 6)
           .as("stop_ratio"))
       Curation.signalCorrelation(sig,
         Seq("len_score", "punct_ratio", "digit_ratio", "stop_ratio"))
@@ -192,7 +192,7 @@ object QueriesCuration {
     "q83_repetition" -> ((s, d) =>
       Tables.documents(s, d)
         .select(col("doc_id"),
-          TextFunctions.repetitionStats(col("text"), s).as("r"))
+          TextFunctions.repetitionStats(col("text")).as("r"))
         .select(col("doc_id"),
           round(col("r._1"), 6).as("dup_token_frac"),
           col("r._2").as("top_bigram"),
@@ -267,7 +267,7 @@ object QueriesCuration {
     "q95_keep_best" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       val scored = docs.select(col("doc_id"),
-        TextFunctions.qualityScore(col("text"), enStop, s).as("score"))
+        TextFunctions.qualityScore(col("text"), enStop).as("score"))
       val pairs = docs.select(col("doc_id").cast("long").as("id"))
         .filter(col("id") % 5 =!= 0)
         .select((col("id") - 1).as("id_a"), col("id").as("id_b"))
@@ -343,7 +343,7 @@ object QueriesCuration {
     "q107_prepare_corpus" -> ((s, d) => {
       val scored = Tables.documents(s, d)
         .withColumn("quality",
-          TextFunctions.qualityScore(col("text"), enStop, s))
+          TextFunctions.qualityScore(col("text"), enStop))
       val admitted = scored.filter(col("quality") >= 0.6)
       val deduped = Dedup.exactDedup(admitted, "text", "doc_id")
         .select(col("doc_id"), col("quality"),

@@ -36,19 +36,19 @@ object QueriesDocs {
     "q23_char_ratios" -> ((s, d) =>
       Tables.documents(s, d).select(
         col("doc_id"),
-        round(TextFunctions.charRatio(col("text"), "[0-9]", s), 6).as("digit_ratio"),
-        round(TextFunctions.charRatio(col("text"), "[.,!?;:]", s), 6).as("punct_ratio"))),
+        round(TextFunctions.charRatio(col("text"), "[0-9]"), 6).as("digit_ratio"),
+        round(TextFunctions.charRatio(col("text"), "[.,!?;:]"), 6).as("punct_ratio"))),
 
     // Rolling-hash document fingerprint (modular, engine-portable)
     "q24_fingerprint" -> ((s, d) =>
       Tables.documents(s, d).select(
         col("doc_id"),
-        TextFunctions.fingerprint(col("text"), s).as("fp"))),
+        TextFunctions.fingerprint(col("text")).as("fp"))),
 
     // Language-ID heuristic (oracle replicates the stopword vote + tie rule)
     "q25_langid" -> ((s, d) =>
       Tables.documents(s, d)
-        .groupBy(TextFunctions.langIdHeuristic(col("text"), spark = s)
+        .groupBy(TextFunctions.langIdHeuristic(col("text"))
           .as("lang_pred"))
         .agg(count(lit(1)).as("cnt"))),
 
@@ -85,7 +85,7 @@ object QueriesDocs {
     // 40-bit engine-portable SimHash fingerprints (oracle-checked)
     "q27_simhash" -> ((s, d) =>
       Tables.documents(s, d).select(
-        col("doc_id"), Dedup.simHash(col("text"), s).as("simhash"))),
+        col("doc_id"), Dedup.simHash(col("text")).as("simhash"))),
 
     // MinHash+LSH near-dup pairs, exact-Jaccard verified (no oracle).
     // k=3 word shingles: the standard web-dedup parameterization — unigram
@@ -144,7 +144,7 @@ object QueriesDocs {
     "q140_lang_confusion" -> ((s, d) =>
       Tables.documents(s, d)
         .groupBy(col("lang"),
-          TextFunctions.langIdHeuristic(col("text"), spark = s).as("lang_pred"))
+          TextFunctions.langIdHeuristic(col("text")).as("lang_pred"))
         .agg(count(lit(1)).as("cnt"))),
 
     // Deterministic content-hash train/val/test split (reproducible across
@@ -152,7 +152,7 @@ object QueriesDocs {
     "q55_hash_split" -> ((s, d) =>
       Tables.documents(s, d)
         .withColumn("split", graft.operators.TrainingData.hashSplit(col("text"),
-          Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1), s))
+          Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1)))
         .groupBy(col("source"), col("split"))
         .agg(count(lit(1)).as("cnt"), sum(col("n_chars")).as("sum_chars"))),
 

@@ -226,7 +226,7 @@ object QueriesInvariants {
         .select(col("vec_id").as("neighbor_id"), col("embedding").as("cv"))
       val withV = out.join(q, Seq("query_id"), "left").join(c, Seq("neighbor_id"), "left")
         .withColumn("__re",
-          dround(VectorFunctions.cosineBest(s, col("qv"), col("cv")), 6))
+          dround(VectorFunctions.cosineBest(col("qv"), col("cv")), 6))
       withV.agg(
         count(lit(1)).as("n_rows"),
         countDistinct(col("query_id")).as("n_queries"),
@@ -249,7 +249,7 @@ object QueriesInvariants {
         .select(col("vec_id").as("neighbor_id"), col("embedding").as("cv"))
       val withV = out.join(q, Seq("query_id"), "left").join(c, Seq("neighbor_id"), "left")
         .withColumn("__re",
-          dround(VectorFunctions.cosineBest(s, col("qv"), col("cv")), 6))
+          dround(VectorFunctions.cosineBest(col("qv"), col("cv")), 6))
       withV.agg(
         count(lit(1)).as("n_rows"),
         countDistinct(col("query_id")).as("n_queries"),
@@ -267,7 +267,7 @@ object QueriesInvariants {
       val b = emb.select(col("vec_id").cast("long").as("id_b"), col("embedding").as("v_b"))
       val withV = out.join(a, Seq("id_a"), "left").join(b, Seq("id_b"), "left")
         .withColumn("__re",
-          dround(VectorFunctions.cosineBest(s, col("v_a"), col("v_b")), 6))
+          dround(VectorFunctions.cosineBest(col("v_a"), col("v_b")), 6))
       val checks = withV.agg(
         viol(col("id_a") >= col("id_b")).as("n_noncanonical"),
         viol(col("cosine") < 0.25).as("n_below_threshold"),

@@ -140,29 +140,16 @@ object StreamingOps {
                   k: Int = 3, numHashes: Int = 128, bands: Int = 32,
                   minJaccard: Double = 0.5,
                   maxReferenceRows: Int = 1000000): DataFrame = {
-    import graft.functions.HashKernels
     require(numHashes % bands == 0,
       s"numHashes $numHashes must divide into $bands bands")
     require(maxReferenceRows > 0,
       s"maxReferenceRows must be positive, got $maxReferenceRows")
-    val rows = numHashes / bands
-    // native codegen expressions when GraftExtensions is installed (one
-    // codegen stage per gate scan, nulls propagate natively), else the
-    // JVM-kernel UDF chain with explicit null guards
-    val native = graft.functions.NativeFunctions.registered(
-      stream.sparkSession, "shingle_hashes")
-    def withSigCols(df: DataFrame): DataFrame =
-      if (native) df
-        .withColumn("__sh", call_function("shingle_hashes", col(textCol), lit(k)))
-        .withColumn("__bk",
-          call_function("minhash_band_keys", col("__sh"), lit(numHashes), lit(bands)))
-      else df
-        .withColumn("__sh",
-          when(col(textCol).isNotNull,
-            HashKernels.shingleHashSetUdf(k)(col(textCol))))
-        .withColumn("__bk",
-          when(col("__sh").isNotNull, HashKernels.bandKeysUdf(bands, rows)(
-            HashKernels.minHashSigUdf(numHashes)(col("__sh")))))
+    // native codegen expressions: one codegen stage per gate scan, nulls
+    // propagate natively
+    def withSigCols(df: DataFrame): DataFrame = df
+      .withColumn("__sh", call_function("shingle_hashes", col(textCol), lit(k)))
+      .withColumn("__bk",
+        call_function("minhash_band_keys", col("__sh"), lit(numHashes), lit(bands)))
     // reference index: band keys + sorted shingle hashes per doc. The
     // broadcast-size contract is ENFORCED, not just documented: the
     // collect itself is capped at maxReferenceRows + 1, so a caller who

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Throwaway 100×-scale probe for [[graft.operators.Similarity.kCenterCoreset]]:
@@ -9,12 +8,7 @@ import org.apache.spark.sql.functions._
   */
 object ProbeCoreset {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder("local[32]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val vecs = spark.range(2000000)
       .select(col("id").as("vec_id"),

@@ -92,14 +92,7 @@ object ScaleGrowthProbe {
     val qNames = if (args.length > 3) ProbeQueries.resolve(args(3))
                  else DefaultQueries
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     buildBig(spark, sfDir, outDir, copies, nFiles = 8)
     val sel = ProbeQueries.select(qNames)

@@ -80,28 +80,33 @@ class CollectGuardSpec extends AnyFunSuite with Matchers {
     "graft/tools/ReshardProbe.scala" -> (1, "probe main (not operator surface)"),
     "graft/tools/StreamCostProbe.scala" -> (1, "probe main (not operator surface)"))
 
-  test("every driver-side collect in src/main is on the documented allowlist") {
+  /** Every `src/main` Scala file as (repo-relative path, lines). */
+  private def mainSources(): Seq[(String, Seq[String])] = {
     val root = new java.io.File("src/main/scala")
     assert(root.isDirectory, s"expected to run from the repo root, cwd=${
       new java.io.File(".").getAbsolutePath}")
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
       else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    walk(root).map { f =>
+      val rel = root.toPath.relativize(f.toPath).toString.replace('\\', '/')
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      try rel -> src.getLines().toVector finally src.close()
+    }
+  }
 
+  test("every driver-side collect in src/main is on the documented allowlist") {
     // count non-comment collect sites (.collect() / collectAsList /
     // toLocalIterator — every spelling that materializes to the driver)
     val pattern = "\\.collect\\(\\)|collectAsList|toLocalIterator".r
-    val found: Map[String, Int] = walk(root).flatMap { f =>
-      val rel = root.toPath.relativize(f.toPath).toString.replace('\\', '/')
-      val src = scala.io.Source.fromFile(f, "UTF-8")
-      val hits =
-        try src.getLines().count { line =>
-          val code = line.indexOf("//") match {
-            case -1 => line
-            case i => line.substring(0, i)
-          }
-          pattern.findFirstIn(code).isDefined
-        } finally src.close()
+    val found: Map[String, Int] = mainSources().flatMap { case (rel, lines) =>
+      val hits = lines.count { line =>
+        val code = line.indexOf("//") match {
+          case -1 => line
+          case i => line.substring(0, i)
+        }
+        pattern.findFirstIn(code).isDefined
+      }
       if (hits > 0) Some(rel -> hits) else None
     }.toMap
 
@@ -119,5 +124,18 @@ class CollectGuardSpec extends AnyFunSuite with Matchers {
       "update the allowlist in the same commit:\n") {
       drifted shouldBe empty
     }
+  }
+
+  test("src/main serves every native kernel one way: no function-registry probes") {
+    // GraftExtensions is required, so a helper never asks whether a
+    // native function is registered — a probe here means a second
+    // (fallback) serving path is creeping back in
+    val pattern = "functionExists\\(|NativeFunctions".r
+    val hits = mainSources().flatMap { case (rel, lines) =>
+      lines.zipWithIndex.collect {
+        case (line, i) if pattern.findFirstIn(line).isDefined => s"$rel:${i + 1}"
+      }
+    }
+    hits shouldBe empty
   }
 }

@@ -41,11 +41,11 @@ class RoundingSpec extends SparkSpec {
   test("Column dround and JVM droundDouble are bit-identical at scales 0/2/4/6/9") {
     val df = adversarial.toDF("v")
     for (n <- Seq(0, 2, 4, 6, 9)) {
-      // both routes: the native duck_round expression (registry installed
-      // in TestSpark) and the extension-free Column fallback
+      // both spellings: the native duck_round expression and the
+      // pure-Column one
       val rows = df.select(col("v"), Rounding.dround(col("v"), n).as("r"))
         .collect() ++
-        df.select(col("v"), Rounding.droundColumnFallback(col("v"), n).as("r"))
+        df.select(col("v"), UdfSpellings.droundColumn(col("v"), n).as("r"))
           .collect()
       rows.foreach { r =>
         val v = r.getDouble(0)

@@ -61,10 +61,10 @@ class TextFunctionsSpec extends SparkSpec {
     val df = texts.toDF("t")
     for (cls <- Seq("[^A-Za-z0-9\\s]", "[0-9]", "[.,!?;:]", "[é∑日]")) {
       val both = df.select(
-        TextFunctions.charRatio(col("t"), cls, spark).as("native"),
+        TextFunctions.charRatio(col("t"), cls).as("native"),
         TextFunctions.charRatioRegex(col("t"), cls).as("regex")).collect()
       // the plan must actually use the native expression, not fall back
-      df.select(TextFunctions.charRatio(col("t"), cls, spark))
+      df.select(TextFunctions.charRatio(col("t"), cls))
         .queryExecution.analyzed.toString should include("char_class_ratio")
       both.zip(texts).foreach { case (r, t) =>
         withClue(s"$cls on '$t': ") {
@@ -76,7 +76,7 @@ class TextFunctionsSpec extends SparkSpec {
     }
     // null text → null on both spellings
     val nulls = Seq[String](null).toDF("t")
-      .select(TextFunctions.charRatio(col("t"), "[0-9]", spark).as("n"),
+      .select(TextFunctions.charRatio(col("t"), "[0-9]").as("n"),
         TextFunctions.charRatioRegex(col("t"), "[0-9]").as("r")).collect()
     nulls(0).isNullAt(0) shouldBe true
     nulls(0).isNullAt(1) shouldBe true
@@ -112,9 +112,9 @@ class TextFunctionsSpec extends SparkSpec {
     val df = texts.toDF("t")
     val rows = df.select(
       TextFunctions.stopwordRatio(col("t"), sw).as("k1"),
-      TextFunctions.stopwordRatioHof(col("t"), sw).as("h1"),
+      UdfSpellings.stopwordRatioHof(col("t"), sw).as("h1"),
       TextFunctions.qualityScore(col("t"), sw).as("k2"),
-      TextFunctions.qualityScoreHof(col("t"), sw).as("h2")).collect()
+      UdfSpellings.qualityScoreHof(col("t"), sw).as("h2")).collect()
     rows.foreach { r =>
       Seq((0, 1), (2, 3)).foreach { case (k, h) =>
         r.isNullAt(k) shouldBe r.isNullAt(h)

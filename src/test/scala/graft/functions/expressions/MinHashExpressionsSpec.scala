@@ -3,7 +3,7 @@ package graft.functions.expressions
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.functions.HashKernels
+import graft.functions.{HashKernels, UdfSpellings}
 
 /** The native `shingle_hashes` / `minhash_band_keys` expressions must be
   * bit-identical to the UDF kernel chain they replace on the hot dedup
@@ -30,7 +30,7 @@ class MinHashExpressionsSpec extends SparkSpec {
       val native = df.select(
           call_function("shingle_hashes", $"text", lit(k)).as("sh"))
         .as[Seq[Long]].collect()
-      val viaUdf = df.select(HashKernels.shingleHashSetUdf(k)($"text").as("sh"))
+      val viaUdf = df.select(UdfSpellings.shingleHashSetUdf(k)($"text").as("sh"))
         .as[Seq[Long]].collect()
       native.toSeq shouldBe viaUdf.toSeq
       // and each result is sorted distinct
@@ -39,9 +39,9 @@ class MinHashExpressionsSpec extends SparkSpec {
   }
 
   test("shingle_hashes is jaccard-equivalent to the HOF spelling") {
-    // Dedup.sortedShingleHashes routes to the native expression when the
-    // extensions are installed; the interpreted HOF chain is its
-    // fallback. The two spellings hash shingles DIFFERENTLY (FNV-1a+mix64
+    // Dedup.sortedShingleHashes is the native expression; the
+    // interpreted HOF chain Dedup.shingleHashes is the Column spelling.
+    // The two spellings hash shingles DIFFERENTLY (FNV-1a+mix64
     // vs xxhash64), so raw values are not comparable across spellings —
     // what every consumer (q40 pair jaccard, the q28/q92/q146 invariant
     // recomputes) relies on is that set SIZE and pairwise JACCARD are
@@ -82,8 +82,8 @@ class MinHashExpressionsSpec extends SparkSpec {
       val native = sh.select(call_function(
           "minhash_band_keys", $"sh", lit(numHashes), lit(bands)).as("bk"))
         .as[Seq[Long]].collect()
-      val viaUdf = sh.select(HashKernels.bandKeysUdf(bands, numHashes / bands)(
-          HashKernels.minHashSigUdf(numHashes)($"sh")).as("bk"))
+      val viaUdf = sh.select(UdfSpellings.bandKeysUdf(bands, numHashes / bands)(
+          UdfSpellings.minHashSigUdf(numHashes)($"sh")).as("bk"))
         .as[Seq[Long]].collect()
       native.toSeq shouldBe viaUdf.toSeq
       native.foreach(_.length shouldBe bands)

@@ -3,10 +3,11 @@ package graft.functions.expressions
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.functions.{HashKernels, TextFunctions}
+import graft.functions.{TextFunctions, UdfSpellings}
 
 /** The native simhash40 / fingerprint40 / word_ngrams / pos_gram_hashes
-  * expressions must match the kernel UDFs they replace exactly — these
+  * expressions must match the kernel UDF spellings ([[UdfSpellings]])
+  * exactly — these
   * feed value-checked oracle queries (q27 simhash, q38 fingerprints, q73
   * decontamination, q93 dup spans), so any divergence is a wrong answer,
   * not just a perf delta.
@@ -27,8 +28,8 @@ class TextHashExpressionsSpec extends SparkSpec {
         call_function("fingerprint40", $"text").as("f"))
       .as[(Option[Long], Option[Long])].collect().toSeq
     val viaUdf = df.select(
-        HashKernels.simHash40Udf($"text").as("s"),
-        HashKernels.fingerprint40Udf($"text").as("f"))
+        UdfSpellings.simHash40Udf($"text").as("s"),
+        UdfSpellings.fingerprint40Udf($"text").as("f"))
       .as[(Option[Long], Option[Long])].collect().toSeq
     native shouldBe viaUdf
     native.last shouldBe ((None, None)) // null text → null hashes
@@ -39,7 +40,7 @@ class TextHashExpressionsSpec extends SparkSpec {
       val df = texts.toDF("text")
       val native = df.select(call_function("word_ngrams", $"text", lit(n)).as("g"))
         .as[Seq[String]].collect().toSeq
-      val viaUdf = df.select(TextFunctions.wordNgramsUdf(n)($"text").as("g"))
+      val viaUdf = df.select(UdfSpellings.wordNgramsUdf(n)($"text").as("g"))
         .as[Seq[String]].collect().toSeq
       native shouldBe viaUdf
       native.last shouldBe Seq.empty // null text → empty array
@@ -56,7 +57,7 @@ class TextHashExpressionsSpec extends SparkSpec {
       val df = toks.toDF("t")
       val native = df.select(call_function("pos_gram_hashes", $"t", lit(n)).as("h"))
         .as[Seq[Long]].collect().toSeq
-      val viaUdf = df.select(HashKernels.posGramHashesUdf(n)($"t").as("h"))
+      val viaUdf = df.select(UdfSpellings.posGramHashesUdf(n)($"t").as("h"))
         .as[Seq[Long]].collect().toSeq
       native shouldBe viaUdf
       native.last shouldBe Seq.empty
@@ -67,12 +68,12 @@ class TextHashExpressionsSpec extends SparkSpec {
     val sw = TextFunctions.LangStopwords("en")
     val df = texts.toDF("text")
     val native = df.select(
-        TextFunctions.stopwordRatio($"text", sw).as("r"),   // routes native here
+        TextFunctions.stopwordRatio($"text", sw).as("r"),
         TextFunctions.qualityScore($"text", sw).as("q"))
       .as[(Option[Double], Double)].collect().toSeq
     val viaHof = df.select(
-        TextFunctions.stopwordRatioHof($"text", sw).as("r"),
-        round(TextFunctions.qualityScoreHof($"text", sw), 6).as("q"))
+        UdfSpellings.stopwordRatioHof($"text", sw).as("r"),
+        round(UdfSpellings.qualityScoreHof($"text", sw), 6).as("q"))
       .as[(Option[Double], Option[Double])].collect().toSeq
     native.map(_._1) shouldBe viaHof.map(_._1)
     // quality kernel: null text → 0.5 (the HOF nulls); non-null rows equal
@@ -89,7 +90,7 @@ class TextHashExpressionsSpec extends SparkSpec {
     val df = ("el la de que y en un texto" +: texts).toDF("text")
     val native = df.select(TextFunctions.langIdHeuristic($"text").as("l"))
       .as[String].collect().toSeq
-    // a structurally-equal but non-eq map forces the UDF fallback route
+    // a structurally-equal but non-eq map takes the kernel-UDF route
     val copied = TextFunctions.LangStopwords.map(identity)
     val viaUdf = df.select(TextFunctions.langIdHeuristic($"text", copied).as("l"))
       .as[String].collect().toSeq
@@ -104,7 +105,7 @@ class TextHashExpressionsSpec extends SparkSpec {
     val nativeR = df.select(call_function("repetition_stats", $"text").as("r"))
       .select($"r._1", $"r._2", $"r._3")
       .as[(Option[Double], Option[String], Option[Double])].collect().toSeq
-    val udfR = df.select(TextFunctions.repetitionStatsUdf($"text").as("r"))
+    val udfR = df.select(UdfSpellings.repetitionStatsUdf($"text").as("r"))
       .select($"r._1", $"r._2", $"r._3")
       .as[(Option[Double], Option[String], Option[Double])].collect().toSeq
     nativeR shouldBe udfR
@@ -114,7 +115,7 @@ class TextHashExpressionsSpec extends SparkSpec {
       "bullet_frac", "ellipsis_frac", "alpha_frac")
     val nativeG = df.select(call_function("gopher_stats", $"text").as("g"))
       .select(fields.map(f => col(s"g.$f")): _*).collect().map(_.toSeq).toSeq
-    val udfG = df.select(TextFunctions.gopherStatsUdf($"text").as("g"))
+    val udfG = df.select(UdfSpellings.gopherStatsUdf($"text").as("g"))
       .select(fields.map(f => col(s"g.$f")): _*).collect().map(_.toSeq).toSeq
     nativeG shouldBe udfG
     nativeG.head.head shouldBe 8 // n_words of the first doc
@@ -128,7 +129,7 @@ class TextHashExpressionsSpec extends SparkSpec {
         array(weights.map(w => lit(w)).toIndexedSeq: _*), lit(0.1)).as("s"))
       .as[Option[Double]].collect().toSeq
     val viaUdf = df.select(
-        HashKernels.linearScoreUdf(64, weights, 0.1)($"text").as("s"))
+        UdfSpellings.linearScoreUdf(64, weights, 0.1)($"text").as("s"))
       .as[Option[Double]].collect().toSeq
     native shouldBe viaUdf
     native.last shouldBe None    // null text
@@ -200,10 +201,10 @@ class TextHashExpressionsSpec extends SparkSpec {
             s => sequence(s, s + (n - 1)))))), lit(0)).as("r"))
       .as[(Option[String], Int)].collect().toSeq
     viaSpans shouldBe viaCovered
-    // and the UDF fallbacks match the native expressions
+    // and the test-side UDF spellings match the native expressions
     val viaUdf = df.select(
-        graft.functions.TextFunctions.rebuildTrimmedSpansUdf(n)($"t", $"st").as("x"),
-        graft.functions.TextFunctions.spansCoveredUdf(n)($"st").as("r"))
+        UdfSpellings.rebuildTrimmedSpansUdf(n)($"t", $"st").as("x"),
+        UdfSpellings.spansCoveredUdf(n)($"st").as("r"))
       .as[(Option[String], Int)].collect().toSeq
     viaSpans shouldBe viaUdf
     viaSpans(4) shouldBe ((Some(""), 3))   // fully trimmed
@@ -221,7 +222,7 @@ class TextHashExpressionsSpec extends SparkSpec {
       val df = toks.toDF("t")
       val native = df.select(call_function("window_pairs", $"t", lit(w)).as("p"))
         .as[Seq[String]].collect().toSeq
-      val viaUdf = df.select(TextFunctions.windowPairsUdf(w)($"t").as("p"))
+      val viaUdf = df.select(UdfSpellings.windowPairsUdf(w)($"t").as("p"))
         .as[Seq[String]].collect().toSeq
       native shouldBe viaUdf
       native.last shouldBe Seq.empty

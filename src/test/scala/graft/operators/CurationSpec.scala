@@ -385,14 +385,13 @@ class CurationSpec extends SparkSpec {
   }
 
   test("repetitionStats computes dup-token and top-bigram fractions") {
-    import graft.functions.TextFunctions.repetitionStatsUdf
     val out = Seq(
       "a b a b a b",       // dup 1-2/6; top bigram "a b" x3 of len 3, raw len 11
       "all distinct words here",
       "x",                 // single token: no bigram
       ""
     ).toDF("text")
-      .select(repetitionStatsUdf(org.apache.spark.sql.functions.col("text")).as("r"))
+      .select(graft.functions.TextFunctions.repetitionStats($"text").as("r"))
       .select("r._1", "r._2", "r._3")
       .as[(Double, String, Double)].collect()
     out(0)._1 shouldBe (1.0 - 2.0 / 6) +- 1e-9
@@ -404,10 +403,9 @@ class CurationSpec extends SparkSpec {
   }
 
   test("repetitionStats matches SQL split semantics on degenerate whitespace") {
-    import graft.functions.TextFunctions.repetitionStatsUdf
     val out = Seq("\t", "a a\t")
       .toDF("text")
-      .select(repetitionStatsUdf(org.apache.spark.sql.functions.col("text")).as("r"))
+      .select(graft.functions.TextFunctions.repetitionStats($"text").as("r"))
       .select("r._1", "r._2", "r._3")
       .as[(Double, String, Double)].collect()
     // "\t": SQL trim keeps it; split(-1) → ["", ""] like
@@ -417,7 +415,7 @@ class CurationSpec extends SparkSpec {
     out(1)._1 shouldBe (1.0 - 2.0 / 3) +- 1e-9
     // null text → null struct, not a fabricated zero row
     val nulls = Seq((1, null.asInstanceOf[String])).toDF("id", "text")
-      .select(repetitionStatsUdf(org.apache.spark.sql.functions.col("text")).as("r"))
+      .select(graft.functions.TextFunctions.repetitionStats($"text").as("r"))
       .select("r._1").collect()
     nulls(0).isNullAt(0) shouldBe true
   }

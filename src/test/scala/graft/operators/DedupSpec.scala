@@ -347,8 +347,7 @@ class DedupSpec extends SparkSpec {
         .join(withBucket.select(col("id").as("id_a"), col("v").as("v_a")), "id_a")
         .join(withBucket.select(col("id").as("id_b"), col("v").as("v_b")), "id_b")
         .withColumn("cosine", graft.functions.Rounding.dround(
-          graft.functions.VectorFunctions.cosineBest(
-            spark, col("v_a"), col("v_b")), 6))
+          graft.functions.VectorFunctions.cosineBest(col("v_a"), col("v_b")), 6))
         .filter(col("cosine") >= 0.5)
         .select("id_a", "id_b", "cosine")
       withClue(s"multiProbe=$multiProbe: ") {
@@ -579,7 +578,7 @@ class DedupSpec extends SparkSpec {
       val pairs = assigned.join(lower, Seq("cluster"))
         .filter(col("id_lo") < col("id"))
         .withColumn("cos", graft.functions.Rounding.dround(
-          graft.functions.VectorFunctions.cosineBest(spark, col("v"), col("v_lo")), 6))
+          graft.functions.VectorFunctions.cosineBest(col("v"), col("v_lo")), 6))
       val stats = pairs.groupBy(col("cluster"), col("id"))
         .agg(smax(col("cos")).as("max_cos_lower"),
           scount(swhen(col("cos") >= tau, 1)).as("n_dups_lower"))
