@@ -39,17 +39,17 @@ object Decimate {
     * parallel, exact global positions at any scale.
     */
   def strideSample(df: DataFrame, keyCols: Seq[String], orderCol: String,
-                   stride: Int, fewSeries: Boolean = false): DataFrame = {
-    if (keyCols.nonEmpty && !fewSeries) {
+                   stride: Int): DataFrame = {
+    if (keyCols.nonEmpty) {
       // many small series: a plain per-key window is already parallel
       val w = Window.partitionBy(keyCols.map(col): _*).orderBy(col(orderCol))
       df.withColumn("__rn", row_number().over(w))
         .filter((col("__rn") - 1) % stride === 0)
         .drop("__rn")
     } else {
-      // few big series (or global): exact positions via the two-pass
-      // range-partitioned plan — no single-task series
-      OrderedPosition.withPosition(df, keyCols, Seq(orderCol), "__pos")
+      // global: exact positions via the two-pass range-partitioned
+      // plan — no single-task series
+      OrderedPosition.withPosition(df, Nil, Seq(orderCol), "__pos")
         .filter(col("__pos") % stride === 0)
         .drop("__pos")
     }

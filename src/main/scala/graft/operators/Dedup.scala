@@ -79,135 +79,23 @@ object Dedup {
     * survivor), then drop every row whose content key already exists in
     * the SEEN corpus. Returns the surviving new rows.
     *
-    * Scale shape: the anti-join shuffles 12-byte `(xxhash64, length)`
-    * keys, never text, co-partitioned on both sides — and the batch is
-    * Bloom-pre-pruned against the seen keys BEFORE that shuffle: a
-    * filter over the seen corpus's `xxhash64` keys (built distributed,
-    * ≈1.2 bytes/key at the default 1% fpp) marks each batch row as
-    * definite-new (no false negatives — a key the filter has never seen
-    * cannot be in the corpus) or possible-dup (true dups + ≈fpp of the
-    * rest). The possible-dup KEYS — steady-state small — are then
-    * confirmed against the seen corpus with a broadcast semi join and
-    * the CONFIRMED duplicate keys broadcast back into one anti join
-    * over the whole batch ("broadcast-back"): after the shared
-    * [[exactDedup]] window shuffle the batch crosses NO further
-    * exchange, where the plain spelling re-shuffles every batch row
-    * into the anti join. Exact: present ⊆ seen and every true dup's key
-    * is a candidate, so the anti join drops exactly batch ∩ seen. The
-    * route is gated on the CANDIDATE-key count (true dups + ≈fpp of the
-    * batch's new keys — the quantity actually broadcast into the
-    * confirming semi): a count above `maxBroadcastKeys` (default 4M ≈
-    * 48 MB of keys, sized so the default 1% fpp over a few-hundred-M-row
-    * mostly-new batch still qualifies) falls back to the probe-split
-    * anti join (definite-new rows bypass the exchange, possible-dups
-    * alone ride it). A seen corpus with more
-    * distinct keys than `maxBloomItems` (default 200M ≈ 240 MB bitmap —
-    * the broadcastable ceiling) skips the filter and runs the plain
-    * co-partitioned anti-join; seen-side sizing uses the corpus row
-    * count (a parquet metadata read), never a collect. A seen corpus
-    * UNDER `minBloomItems` (default 500k ≈ 6 MB of 12-byte keys) also
-    * skips the filter: at that size Spark broadcasts the key set into
-    * the anti-join, so the batch never shuffles anyway and the bloom
-    * build is pure overhead (measured by `tools/RoutingFlipProbe` on a
-    * 25k-key seen side: bloom 1.5 s vs plain 0.6 s). The bloom+
-    * broadcast-back's win regime is the middle: a seen side too big to
-    * broadcast, where the plain anti-join re-shuffles the whole batch.
-    * That win is NETWORK-byte economics — batch bytes B crossing the
-    * wire: broadcast-back ≈ 2B (one exchange write + one fetch; the
-    * checkpoint write/read is executor-local disk), the former split
-    * spelling ≈ 3B (each union branch re-FETCHES the shared exchange),
-    * plain ≈ 4B (two full exchanges) — and does NOT reproduce on
-    * local[32], where page-cached shuffles make plain's extra bytes
-    * nearly free while the bloom route pays real fixed costs (filter
-    * build over the seen side, batch checkpoint, broadcast machinery):
-    * RoutingFlipProbe's win-regime section measures 12.2 vs 5.4 s at a
-    * 2M-key seen side with ~0.9 KB rows, outputs fingerprint-identical.
-    * Single-node callers can force the plain anti-join with
-    * `maxBloomItems = 0`; the default keeps the bloom because this
-    * library's design point is the multi-executor cluster.
-    *
-    * NOT lazy: routing runs an eager `seen.count()` at CALL time, and
-    * the bloom route runs the batch's dedup window and localCheckpoints
-    * it to count candidate keys (the count picks broadcast-back vs
-    * split — needed before a plan can be returned), so on that route
-    * the call itself does the batch's heavy lifting even if the caller
-    * only explains the plan. Callers with an expensive `seen` source
-    * should pass a cached/checkpointed frame. localCheckpoint blocks
-    * are executor-local (not recomputable after executor loss — the
-    * library-wide checkpoint convention, same as [[minHashDupPairs]]);
-    * pipelines on preemptible clusters should persist the RESULT
-    * reliably rather than re-driving a lost lineage.
-    * Same 64-bit+length collision convention as [[exactDedup]]. The
-    * streaming twin (state-store keys within a watermark horizon) is
+    * A lazy plan (building the frame runs no job): the anti join
+    * carries 12-byte `(xxhash64, length)` keys, never text, and Spark
+    * picks its strategy — a broadcast of the seen keys when they are
+    * small, a co-partitioned shuffle otherwise. Null-text rows survive:
+    * a null `length` never equi-matches a seen key. Same 64-bit+length
+    * collision convention as [[exactDedup]]. The streaming twin
+    * (state-store keys within a watermark horizon) is
     * [[graft.streaming.StreamingOps.dedupDocs]].
     */
   def incrementalDedup(newDocs: DataFrame, seen: DataFrame,
-                       idCol: String, textCol: String,
-                       bloomFpp: Double = 0.01,
-                       maxBloomItems: Long = 200000000L,
-                       minBloomItems: Long = 500000L,
-                       maxBroadcastKeys: Long = 4000000L): DataFrame = {
+                       idCol: String, textCol: String): DataFrame = {
     def keyed(df: DataFrame) = df
       .withColumn("__k", xxhash64(col(textCol)))
       .withColumn("__len", length(col(textCol)))
-    val seenCount = seen.count()
-    if (seenCount == 0L) return exactDedup(newDocs, textCol, idCol)
-    // lazy checkpoint: the seen keys feed both the filter build and the
-    // anti join probe — pin one evaluation
-    val seenKeys = keyed(seen).select(col("__k"), col("__len")).distinct()
-      .transform(Reuse.pinned)
-    if (seenCount > maxBloomItems || seenCount < minBloomItems) {
-      // seen too large for a broadcastable bitmap — or small enough that
-      // the anti join broadcasts the key set itself: plain anti join
-      return keyed(exactDedup(newDocs, textCol, idCol))
-        .join(seenKeys, Seq("__k", "__len"), "left_anti")
-        .drop("__k", "__len")
-    }
-    val bloom = seenKeys.stat.bloomFilter("__k", seenCount, bloomFpp)
-    val bc = newDocs.sparkSession.sparkContext.broadcast(bloom)
-    val mightContain = udf((k: Long) => bc.value.mightContainLong(k))
-      .withName("bloom_might_contain")
-    // null-text rows: xxhash64(null) is the NON-null seed hash (see the
-    // dupGramFraction guard), so the probe is never null and such rows
-    // route deterministically by whether the seed hash is in the filter.
-    // EITHER route is correct for them — a null __len never equi-matches
-    // anything, so no anti join can drop them (the same parity the
-    // plain-anti spelling had). The coalesce is defense in depth only.
-    // Dedup the WHOLE batch first, then probe: the checkpoint pins one
-    // scan+window evaluation for the candidate count and the final pass.
-    val flagged = keyed(exactDedup(newDocs, textCol, idCol))
-      .withColumn("__might", coalesce(mightContain(col("__k")), lit(false)))
-      .transform(Reuse.pinned)
-    val candKeys = flagged.filter(col("__might"))
-      .select(col("__k"), col("__len")).distinct()
-    val candCount = candKeys.count()
-    if (candCount <= maxBroadcastKeys) {
-      // broadcast-back: confirm the candidates against the seen corpus
-      // (broadcast semi — the seen side never shuffles) and broadcast the
-      // CONFIRMED duplicate keys into one anti join over the whole batch.
-      // The batch crosses no exchange after the shared window shuffle —
-      // on a cluster the plain spelling ships every batch row over the
-      // network again, and the split spelling re-reads the window
-      // exchange twice; this reads the checkpoint once. Exact by
-      // construction: present ⊆ seen, and every true dup's key is a
-      // candidate (the bloom has no false negatives), so the anti join
-      // drops exactly batch ∩ seen.
-      val present = seenKeys
-        .join(broadcast(candKeys), Seq("__k", "__len"), "left_semi")
-      flagged
-        .join(broadcast(present), Seq("__k", "__len"), "left_anti")
-        .drop("__k", "__len", "__might")
-    } else {
-      // adversarial/dup-heavy batch: the confirmed-key set may not be
-      // broadcast-safe — fall back to the split anti join (the probe
-      // column routes definite-new rows around the exchange)
-      val definiteNew = flagged.filter(!col("__might"))
-        .drop("__k", "__len", "__might")
-      val candidates = flagged.filter(col("__might")).drop("__might")
-        .join(seenKeys, Seq("__k", "__len"), "left_anti")
-        .drop("__k", "__len")
-      definiteNew.unionByName(candidates)
-    }
+    keyed(exactDedup(newDocs, textCol, idCol))
+      .join(keyed(seen).select(col("__k"), col("__len")), Seq("__k", "__len"), "left_anti")
+      .drop("__k", "__len")
   }
 
   /** Exact-dup groups: (keep_id, copies) per distinct text — the audit view

@@ -86,7 +86,7 @@ object Similarity {
     // the k·Q candidate table is bounded by contract; broadcast it
     // EXPLICITLY so the vector join-back can never degrade to a shuffle
     // of the corpus-sized emb side on an AQE size misestimate
-    // (plan-asserted in ScaleJoinsSpec)
+    // (plan-asserted in SimilaritySpec)
     broadcast(cands).join(emb, Seq("neighbor_id"))
       .groupBy(col("query_id"))
       .agg(collect_list(struct(col("neighbor_id"), col("cosine"),

@@ -87,13 +87,12 @@ object TemporalJoins {
   /** J2 backward as-of join: for each left row, the most recent right row at
     * or before it (per key), within `toleranceSeconds` if given.
     *
-    * Routing: when [[graft.plans.AsOfJoinNative]] is available (the
-    * GraftExtensions strategy is installed and
-    * `spark.graft.asof.native.enabled` isn't false) and both time columns
-    * are timestamps, this plans through the native sort-merge exec — one
+    * Routing: when both time columns are timestamps, this plans through
+    * the native sort-merge exec [[graft.plans.AsOfJoinNative]] (its
+    * strategy is installed by the required GraftExtensions) — one
     * exchange + sort per SIDE instead of shuffling the union of both, no
-    * window buffering. The composed union-sentinel spelling below is the
-    * extension-free fallback with identical semantics (equivalence
+    * window buffering. The composed union-sentinel spelling below serves
+    * every other time type with identical semantics (equivalence
     * spec-pinned and both oracle-checked: q12 routes, q53 constructs the
     * native node directly against the same oracle).
     *
@@ -113,7 +112,8 @@ object TemporalJoins {
     else asOfJoinBackwardComposed(left, lTime, right, rTime, keys,
       rightValueCols, toleranceSeconds)
 
-  /** The extension-free union-sentinel spelling of [[asOfJoinBackward]]:
+  /** The union-sentinel spelling of [[asOfJoinBackward]] (non-timestamp
+    * time columns, and the specs' oracle for the native exec):
     * one window sorted by (key, time) over the tagged union carrying the
     * last non-null right values forward, then keep only left rows. Single
     * shuffle on `keys`, works when both sides are huge.
@@ -162,7 +162,7 @@ object TemporalJoins {
     else asOfJoinForwardComposed(left, lTime, right, rTime, keys,
       rightValueCols, toleranceSeconds)
 
-  /** Extension-free spelling of [[asOfJoinForward]] (see
+  /** Union-sentinel spelling of [[asOfJoinForward]] (see
     * [[asOfJoinBackwardComposed]]).
     */
   private[graft] def asOfJoinForwardComposed(left: DataFrame, lTime: String,
@@ -205,7 +205,7 @@ object TemporalJoins {
     else asOfJoinNearestComposed(left, lTime, right, rTime, keys,
       rightValueCols, toleranceSeconds)
 
-  /** Extension-free spelling of [[asOfJoinNearest]] (see
+  /** Union-sentinel spelling of [[asOfJoinNearest]] (see
     * [[asOfJoinBackwardComposed]]).
     */
   private[graft] def asOfJoinNearestComposed(left: DataFrame, lTime: String,
@@ -231,9 +231,9 @@ object TemporalJoins {
         when(useB, "b").when(okF, "f").as("asof_direction"))
   }
 
-  /** Native-path eligibility: strategy installed + conf on + both time
-    * columns are plain timestamps (the native exec reads micros longs and
-    * applies tolerance in microseconds). Column names resolve with the
+  /** Native-path eligibility: both time columns are plain timestamps
+    * (the native exec reads micros longs and applies tolerance in
+    * microseconds). Column names resolve with the
     * session's resolver (case-insensitive by default) like every other
     * path — a case-mismatched name must fall through to the composed
     * spelling's normal resolution, not throw out of the gate.
@@ -245,8 +245,7 @@ object TemporalJoins {
       df.schema.fields.exists(f => resolver(f.name, name) &&
         f.dataType == org.apache.spark.sql.types.TimestampType)
     }
-    graft.plans.AsOfJoinNative.available(left.sparkSession) &&
-      timeTyped(left, lTime) && timeTyped(right, rTime)
+    timeTyped(left, lTime) && timeTyped(right, rTime)
   }
 
   /** Reorder the native operator's output (left columns in input order,

@@ -14,7 +14,7 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
   * and a sort-merge physical operator.
   *
   * Where the composed union-sentinel version ([[graft.operators.TemporalJoins
-  * .asOfJoinBackward]], the (a)-tier) shuffles the UNION of both sides and
+  * .asOfJoinBackwardComposed]], the (a)-tier) shuffles the UNION of both sides and
   * runs a running-`last` window, this operator asks Catalyst for
   * co-partitioned, co-sorted children (EnsureRequirements inserts the
   * exchanges/sorts) and then streams one merge pass per partition: O(1)
@@ -267,13 +267,4 @@ object AsOfJoinNative {
       rightValues, asofOutput,
       toleranceSeconds.map(_ * 1000000L), mode))
   }
-
-  /** True when `session` plans [[AsOfJoinPlan]] (the extension is
-    * installed) and native routing hasn't been disabled by conf — the
-    * gate [[graft.operators.TemporalJoins]] uses to pick this operator
-    * over the composed union-sentinel spelling.
-    */
-  def available(session: org.apache.spark.sql.SparkSession): Boolean =
-    session.conf.get("spark.graft.asof.native.enabled", "true").toBoolean &&
-      session.sessionState.planner.strategies.contains(AsOfJoinStrategy)
 }

@@ -302,13 +302,10 @@ object QueriesDocs {
     // corpus (doc_id<400) by content key
     "q106_incremental_dedup" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      // minBloomItems = 0 keeps the GATE on the bloom-split plan (the
-      // interesting path; at sf scale the seen side is under the default
-      // small-side floor, where routing would pick the broadcast anti)
       Dedup.incrementalDedup(
           newDocs = docs.filter(col("doc_id") >= 400),
           seen = docs.filter(col("doc_id") < 400),
-          idCol = "doc_id", textCol = "text", minBloomItems = 0L)
+          idCol = "doc_id", textCol = "text")
         .select(col("doc_id"), col("source"), col("n_chars"))
     }),
 

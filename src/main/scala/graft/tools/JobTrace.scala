@@ -20,9 +20,14 @@ object JobTrace {
     final case class JobRec(start: Long, var end: Long = -1L,
                             var stages: List[String] = Nil)
     val jobsRec = new TrieMap[Int, JobRec]()
+    // a job lists its stages when it starts; a stage completes later,
+    // possibly after other jobs have started, so credit it by id
+    val jobOfStage = new TrieMap[Int, Int]()
     spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
         jobsRec.put(j.jobId, JobRec(j.time))
+        j.stageInfos.foreach(si => jobOfStage.put(si.stageId, j.jobId))
+      }
       override def onJobEnd(j: SparkListenerJobEnd): Unit =
         jobsRec.get(j.jobId).foreach(_.end = j.time)
       override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
@@ -30,7 +35,7 @@ object JobTrace {
         val ms = (for {a <- info.completionTime; b <- info.submissionTime}
           yield a - b).getOrElse(-1L)
         val line = f"${info.name.takeWhile(_ != '\n').take(90)}%s tasks=${info.numTasks} ms=$ms"
-        jobsRec.values.toSeq.sortBy(-_.start).headOption.foreach { rec =>
+        jobOfStage.get(info.stageId).flatMap(jobsRec.get).foreach { rec =>
           rec.stages = rec.stages :+ line
         }
       }
@@ -38,6 +43,7 @@ object JobTrace {
     spark.range(10).count() // warm, then drop the warm job from output
     names.foreach { n =>
       jobsRec.clear()
+      jobOfStage.clear()
       val t0 = System.nanoTime()
       graft.SparkEntry.queries(n)(spark, sfDir)
         .selectExpr("count(1)", "bit_xor(hash(*))").collect()

@@ -20,10 +20,6 @@ import org.apache.spark.sql.functions._
   *    integer-fixed-point iteration
   *  - `Bpe.train(smallVocabWords)` — driver merge loop vs distributed
   *    pair-count rounds (merge lists compared exactly, order included)
-  *  - `Dedup.incrementalDedup` — bloom-pre-pruned split anti-join
-  *    (forced with `minBloomItems = 0`: the grown seen side sits under
-  *    the default small-side floor) vs plain co-partitioned anti-join
-  *    (forced with `maxBloomItems = 0`)
   *  - `Curation.importanceWeights` — broadcast-map scoring vs the
   *    keyed-join fallback (gated on the vocabulary count)
   *
@@ -75,51 +71,7 @@ object RoutingFlipProbe {
     val (bpeX, bpeDistS) = timed(Bpe.train(
       docs, "text", numMerges = 60, smallVocabWords = 0L))
 
-    // 4. incremental dedup: copies 0-4 are the seen corpus, 5-9 the batch
-    //    (the copy suffix makes cross-copy texts distinct, so real drops
-    //    come from the base copy-0 rows duplicated inside the batch)
-    val seen = docs.filter(col("doc_id") < 5000000L)
-    val batch = docs.filter(col("doc_id") >= 5000000L)
-    val (incB, incBloomS) = timed(fingerprint(Dedup.incrementalDedup(
-      batch, seen, "doc_id", "text", minBloomItems = 0L)))
-    val (incP, incPlainS) = timed(fingerprint(Dedup.incrementalDedup(
-      batch, seen, "doc_id", "text", maxBloomItems = 0L)))
-
-    // 5. bloom WIN regime (the r10 review observation only measured the
-    //    LOSS regime at a broadcast-small seen side): a seen corpus too
-    //    large to broadcast plus a mostly-new batch — the steady-state
-    //    ingest shape the gate's scaladoc claims the bloom serves. The
-    //    grown corpus's seen half is still broadcast-small, so this
-    //    section synthesizes the shape: 2M distinct seen texts (~24 MB of
-    //    keys, over the 10 MB broadcast threshold) and a 2M-row batch
-    //    with 1% true dups. Texts are padded to ≈0.9 KB: what the bloom
-    //    route saves is batch bytes crossing the NETWORK (broadcast-back
-    //    ≈ 2B vs plain ≈ 4B — see the incrementalDedup scaladoc's
-    //    byte accounting). MEASURED VERDICT: it does NOT win on
-    //    local[32] (12.2 vs 5.4 s padded; 4.7/11.8 vs 2.6/4.3 s for the
-    //    earlier split spelling) — page-cached local shuffles make the
-    //    plain spelling's extra bytes nearly free while the bloom route
-    //    pays real fixed costs (seen-side filter build, batch
-    //    checkpoint, broadcasts). This section exists to pin OUTPUT
-    //    IDENTITY in the unbroadcastable-seen regime and to keep the
-    //    honest local cost on record.
-    def pad(c: org.apache.spark.sql.Column) =
-      concat(c, lit(" "), repeat(sha2(c.cast("string"), 256), 14))
-    val synSeen = spark.range(2000000L)
-      .select(col("id").as("doc_id"),
-        pad(concat(lit("seen doc corpus text item "), col("id"))).as("text"))
-    val synBatch = spark.range(2000000L, 4000000L)
-      .select(col("id").as("doc_id"),
-        when(col("id") % 100 === 0,
-            pad(concat(lit("seen doc corpus text item "), col("id") - 2000000L)))
-          .otherwise(pad(concat(lit("fresh doc corpus text item "), col("id"))))
-          .as("text"))
-    val (winB, winBloomS) = timed(fingerprint(Dedup.incrementalDedup(
-      synBatch, synSeen, "doc_id", "text", minBloomItems = 0L)))
-    val (winP, winPlainS) = timed(fingerprint(Dedup.incrementalDedup(
-      synBatch, synSeen, "doc_id", "text", maxBloomItems = 0L)))
-
-    // 6. importanceWeights: broadcast-map scoring (vocab under the gate)
+    // 4. importanceWeights: broadcast-map scoring (vocab under the gate)
     //    vs the keyed-join fallback (gate at 0) — both fold each doc's
     //    weights in code-point token order, so rows must be IDENTICAL
     import graft.operators.Curation
@@ -137,12 +89,9 @@ object RoutingFlipProbe {
       s""""cc_match":${ccD == ccX},"cc_driver":${j(ccD)},"cc_dist":${j(ccX)},""" +
       s""""pr_match":${prD == prX},"pr_driver":${j(prD)},"pr_dist":${j(prX)},""" +
       s""""bpe_match":${bpeD == bpeX},"bpe_merges":${bpeD.length},""" +
-      s""""inc_match":${incB == incP},"inc_bloom":${j(incB)},"inc_plain":${j(incP)},""" +
-      s""""win_match":${winB == winP},"win_bloom":${j(winB)},"win_plain":${j(winP)},""" +
       s""""iw_match":${iwB == iwJ},"iw_map":${j(iwB)},"iw_join":${j(iwJ)},""" +
       f""""secs":{"cc":[$ccDriverS%.2f,$ccDistS%.2f],"pr":[$prDriverS%.2f,$prDistS%.2f],""" +
-      f""""bpe":[$bpeDriverS%.2f,$bpeDistS%.2f],"inc":[$incBloomS%.2f,$incPlainS%.2f],""" +
-      f""""win":[$winBloomS%.2f,$winPlainS%.2f],"iw":[$iwMapS%.2f,$iwJoinS%.2f]}}""")
+      f""""bpe":[$bpeDriverS%.2f,$bpeDistS%.2f],"iw":[$iwMapS%.2f,$iwJoinS%.2f]}}""")
     spark.stop()
   }
 }

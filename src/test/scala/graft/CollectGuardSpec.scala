@@ -72,8 +72,6 @@ class CollectGuardSpec extends AnyFunSuite with Matchers {
       "nearDupGate reference index: enforced overflow-proof limit(max+1)+require"),
     "graft/tools/JobCount.scala" -> (1, "probe main (not operator surface)"),
     "graft/tools/JobTrace.scala" -> (1, "probe main (not operator surface)"),
-    "graft/tools/Q41AB.scala" -> (1, "probe main (not operator surface)"),
-    "graft/tools/ReuseAB.scala" -> (2, "probe main (not operator surface)"),
     "graft/tools/ProbeCoreset.scala" -> (1, "probe main (not operator surface)"),
     "graft/tools/RecallProbe.scala" -> (1,
       "probe main: one-row mean-recall aggregate per method"),
@@ -128,9 +126,9 @@ class CollectGuardSpec extends AnyFunSuite with Matchers {
 
   test("src/main serves every native kernel one way: no function-registry probes") {
     // GraftExtensions is required, so a helper never asks whether a
-    // native function is registered — a probe here means a second
-    // (fallback) serving path is creeping back in
-    val pattern = "functionExists\\(|NativeFunctions".r
+    // native function or planner strategy is registered — a probe here
+    // means a second (fallback) serving path is creeping back in
+    val pattern = "functionExists\\(|NativeFunctions|strategies\\.contains\\(".r
     val hits = mainSources().flatMap { case (rel, lines) =>
       lines.zipWithIndex.collect {
         case (line, i) if pattern.findFirstIn(line).isDefined => s"$rel:${i + 1}"

@@ -415,124 +415,73 @@ class DedupSpec extends SparkSpec {
     (Dedup.spreadForKernelStage(par, minRowsPerPartition = 16384) eq par) shouldBe true
   }
 
+  /** `body`'s result and the ids of the Spark jobs it starts on this
+    * thread. A sentinel job submitted afterwards drains the listener
+    * bus: a listener receives events in order, so every job `body`
+    * started is recorded first.
+    */
+  private def jobsStartedBy[A](body: => A): (A, Seq[Int]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"jobs-started-by-${java.util.UUID.randomUUID}"
+    val sentinel = s"$group-sentinel"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Int]
+    val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.add(j.jobId)
+          case Some(`sentinel`) => sentinelSeen.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    val result = try {
+      sc.setJobGroup(group, group)
+      val r = body
+      sc.setJobGroup(sentinel, sentinel)
+      sc.parallelize(Seq(1), 1).count()
+      sentinelSeen.await(60, java.util.concurrent.TimeUnit.SECONDS) shouldBe true
+      r
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    (result, jobs.asScala.toSeq)
+  }
+
   test("incrementalDedup drops seen content and intra-batch copies") {
-    val seen = Seq((1L, "known text alpha"), (2L, "known text beta"))
-      .toDF("doc_id", "text")
-    val batch = Seq(
+    val rnd = new scala.util.Random(31)
+    val seenRows = Seq((1L, "known text alpha"), (2L, "known text beta")) ++
+      (0 until 300).map(i => (100L + i, s"seen document number $i"))
+    val batchRows = Seq(
       (10L, "known text alpha"),  // seen -> dropped
       (11L, "fresh text one"),    // survives
       (12L, "fresh text two"),    // survives (min id of its pair)
-      (13L, "fresh text two"))    // intra-batch copy -> dropped
-      .toDF("doc_id", "text")
-    val out = Dedup.incrementalDedup(batch, seen, "doc_id", "text")
-      .select("doc_id").as[Long].collect().sorted
-    out shouldBe Array(11L, 12L)
-  }
+      (13L, "fresh text two")) ++ // intra-batch copy -> dropped
+      (0 until 400).map { i =>
+        val t = if (i % 10 == 0) s"seen document number ${rnd.nextInt(300)}"
+          else if (i % 7 == 0) s"fresh copy group ${i / 70}"
+          else s"fresh document $i"
+        (1000L + i, t)
+      } :+ ((2000L, null: String)) // null text matches nothing -> survives
+    val seen = seenRows.toDF("doc_id", "text")
+    val batch = batchRows.toDF("doc_id", "text")
 
-  test("incrementalDedup bloom routing: definite-new rows bypass the anti-join exchange") {
-    val rnd = new scala.util.Random(31)
-    // 400-row batch: ~10% cross-dups of seen, some intra-batch copies,
-    // a null-text row; 300-row seen corpus
-    val seen = (0 until 300).map(i => (i.toLong, s"seen document number $i"))
-      .toDF("doc_id", "text")
-    val batch = ((0 until 400).map { i =>
-      val t = if (i % 10 == 0) s"seen document number ${rnd.nextInt(300)}"
-        else if (i % 7 == 0) s"fresh copy group ${i / 70}"
-        else s"fresh document $i"
-      (1000L + i, t)
-    } :+ ((2000L, null: String))).toDF("doc_id", "text")
+    val (built, jobs) = jobsStartedBy(Dedup.incrementalDedup(batch, seen, "doc_id", "text"))
+    jobs shouldBe empty // a lazy plan: building it runs nothing
+    val out = built.select("doc_id").as[Long].collect().sorted
 
-    // minBloomItems = 0 forces the bloom path (300 seen rows sit under
-    // the default small-side floor, where routing picks the plain anti)
-    val routed = Dedup.incrementalDedup(batch, seen, "doc_id", "text",
-      minBloomItems = 0L)
-    // equivalence against the plain anti spelling (the pre-round-10 code)
-    def plain: Set[Long] = {
-      import org.apache.spark.sql.functions.{length => slen, xxhash64}
-      val keyedSeen = seen.select(xxhash64($"text").as("__k"),
-        slen($"text").as("__len")).distinct()
-      Dedup.exactDedup(batch, "text", "doc_id")
-        .withColumn("__k", xxhash64($"text")).withColumn("__len", slen($"text"))
-        .join(keyedSeen, Seq("__k", "__len"), "left_anti")
-        .select("doc_id").as[Long].collect().toSet
-    }
-    routed.select("doc_id").as[Long].collect().toSet shouldBe plain
-    // null-text row survives in both spellings
-    plain should contain(2000L)
-
-    // plan shape (broadcast-back): NO union — the whole batch rides ONE
-    // anti join against the broadcast confirmed-duplicate-key set, and
-    // the candidate keys are confirmed with a broadcast semi join, so
-    // the batch crosses no exchange after the dedup window shuffle
-    val plan = routed.queryExecution.executedPlan.toString
-    plan should not include "Union"
-    withClue(s"expected exactly one anti join in:\n$plan") {
-      "LeftAnti".r.findAllIn(plan).size shouldBe 1
-    }
-    withClue(s"expected the confirming semi join in:\n$plan") {
-      "LeftSemi".r.findAllIn(plan).size shouldBe 1
-    }
-
-    // forced split fallback (a dup-heavy batch whose CANDIDATE keys —
-    // true dups + ~fpp of the new keys — exceed maxBroadcastKeys): the
-    // union-of-branches shape, with the definite-new branch bypassing
-    // the anti join
-    val splitRouted = Dedup.incrementalDedup(batch, seen, "doc_id", "text",
-      minBloomItems = 0L, maxBroadcastKeys = -1L)
-    val splitPlan = splitRouted.queryExecution.executedPlan.toString
-    splitPlan should include("Union")
-    withClue(s"expected exactly one anti join in:\n$splitPlan") {
-      "LeftAnti".r.findAllIn(splitPlan).size shouldBe 1
-    }
-    splitRouted.select("doc_id").as[Long].collect().toSet shouldBe plain
-
-    // metric: the bloom split shuffles fewer records than the plain
-    // spelling (the ~90% definite-new rows skip the anti exchange)
-    def shuffleRecords(body: => Unit): Long = {
-      val acc = new java.util.concurrent.atomic.AtomicLong
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (t.taskMetrics != null)
-            acc.addAndGet(t.taskMetrics.shuffleWriteMetrics.recordsWritten)
-      }
-      spark.sparkContext.addSparkListener(l)
-      try { body; Thread.sleep(400) /* let the async listener bus drain */ }
-      finally spark.sparkContext.removeSparkListener(l)
-      acc.get()
-    }
-    // measured with broadcast joins OFF: at corpus scale the seen side
-    // is not broadcastable and the anti join shuffles its probe side —
-    // exactly the exchange the bloom split must spare the ~90%
-    // definite-new rows from (under broadcast both spellings tie)
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val bloomRecs = shuffleRecords {
-        Dedup.incrementalDedup(batch, seen, "doc_id", "text",
-          minBloomItems = 0L).count()
-      }
-      val plainRecs = shuffleRecords {
-        Dedup.incrementalDedup(batch, seen, "doc_id", "text",
-          maxBloomItems = 1L).count()
-      }
-      withClue(s"bloom $bloomRecs vs plain $plainRecs shuffle records: ") {
-        bloomRecs.toDouble should be < plainRecs * 0.8
-      }
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-
-    // over the maxBloomItems cap the plain single-anti plan comes back
-    val capped = Dedup.incrementalDedup(batch, seen, "doc_id", "text",
-      maxBloomItems = 1L)
-    capped.queryExecution.analyzed.toString should not include "bloom_might_contain"
-    capped.select("doc_id").as[Long].collect().toSet shouldBe plain
-
-    // and UNDER the default small-side floor (300 seen keys ≪ 500k) the
-    // DEFAULT routing also picks the plain anti: the key set broadcasts
-    // into the join, so the bloom build would be pure overhead
-    // (measured on a 25k-key seen side: bloom 1.5 s vs plain 0.6 s)
-    val small = Dedup.incrementalDedup(batch, seen, "doc_id", "text")
-    small.queryExecution.analyzed.toString should not include "bloom_might_contain"
-    small.select("doc_id").as[Long].collect().toSet shouldBe plain
+    // the min id of every batch text the seen corpus lacks, plus the
+    // null-text row
+    val seenTexts = seenRows.map(_._2).toSet
+    val expected = batchRows.filter(_._2 != null).groupBy(_._2).collect {
+      case (t, rows) if !seenTexts(t) => rows.map(_._1).min
+    }.toSeq :+ 2000L
+    out shouldBe expected.sorted.toArray
+    out should contain allOf (11L, 12L, 2000L)
+    out should contain noneOf (10L, 13L)
   }
 
   test("semanticDedup drops later near-dups within a cluster, keeps cluster minima") {

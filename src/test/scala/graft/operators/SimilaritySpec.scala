@@ -52,6 +52,24 @@ class SimilaritySpec extends SparkSpec {
     reshard shouldBe base
   }
 
+  test("mmrRerank plans every join as broadcast — the corpus side never shuffles") {
+    // the k·Q candidate join-back is explicitly broadcast in mmrRerank;
+    // this pins the plan so an AQE size misestimate can never degrade the
+    // corpus-sized emb side into a SortMergeJoin/ShuffledHashJoin exchange
+    val corpus = (0 until 500)
+      .map(i => (i.toLong, Array.tabulate(8)(j => math.sin(i * 8 + j))))
+      .toDF("id", "v")
+    val q = Seq((0L, Array.tabulate(8)(j => math.cos(j.toDouble))))
+      .toDF("qid", "qv")
+    val out = Similarity.mmrRerank(corpus, "id", "v", q, "qid", "qv",
+      kCandidates = 10, m = 3, lambda = 0.7)
+    val plan = out.queryExecution.executedPlan.toString
+    plan should include("BroadcastHashJoin")
+    plan should not include "SortMergeJoin"
+    plan should not include "ShuffledHashJoin"
+    out.count() shouldBe 3L
+  }
+
   test("bruteForceTopK handles multiple queries independently") {
     val q = Seq(
       (100L, Array(1.0, 0.0, 0.0, 0.0)),

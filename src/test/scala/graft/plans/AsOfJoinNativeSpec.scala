@@ -36,7 +36,7 @@ class AsOfJoinNativeSpec extends SparkSpec {
 
     val native = AsOfJoinNative.asOfJoin(left, "lt", rightDedup, "rt",
       keys = Seq("k"), rightValueCols = Seq("v"))
-    val composed = TemporalJoins.asOfJoinBackward(left, "lt", rightDedup, "rt",
+    val composed = TemporalJoins.asOfJoinBackwardComposed(left, "lt", rightDedup, "rt",
       keys = Seq("k"), rightValueCols = Seq("v"))
     canon(native) shouldBe canon(composed)
   }
@@ -165,18 +165,13 @@ class AsOfJoinNativeSpec extends SparkSpec {
     // column contract identical to the composed spelling
     routed(0).columns.toSeq shouldBe Seq("k", "lt", "lid", "asof_v")
     routed(2).columns.toSeq shouldBe Seq("k", "lt", "lid", "asof_v", "asof_direction")
-  }
-
-  test("spark.graft.asof.native.enabled=false falls back to the composed plan") {
-    val left = Seq(("a", ts("2024-01-01 00:00:01"), 1)).toDF("k", "lt", "lid")
-    val right = Seq(("a", ts("2024-01-01 00:00:00"), 5.0)).toDF("k", "rt", "v")
-    spark.conf.set("spark.graft.asof.native.enabled", "false")
-    try {
-      val df = TemporalJoins.asOfJoinBackward(left, "lt", right, "rt",
-        Seq("k"), Seq("v"))
-      df.queryExecution.executedPlan.toString should not include "AsOfJoin"
-      df.select("asof_v").as[Option[Double]].collect() shouldBe Array(Some(5.0))
-    } finally spark.conf.unset("spark.graft.asof.native.enabled")
+    // the time-column types alone pick the route: any other type takes
+    // the composed spelling
+    val composed = TemporalJoins.asOfJoinBackward(
+      left.withColumn("lt", col("lt").cast("long")), "lt",
+      right.withColumn("rt", col("rt").cast("long")), "rt", Seq("k"), Seq("v"))
+    composed.queryExecution.executedPlan.toString should not include "AsOfJoin"
+    composed.select("asof_v").as[Option[Double]].collect() shouldBe Array(Some(5.0))
   }
 
   test("plan contains the custom exec and a single shuffle per side") {
