@@ -247,7 +247,7 @@ object ProfileGrid {
     * triangle-interior weighting. Two union+window passes, partitioned by
     * depth row then by time column — both high-cardinality keys, fully
     * parallel, no driver collection beyond the 3-value extent and the
-    * gap-interval table (bounded by the window's hour count).
+    * hourly bucket table (bounded by the window's hour count).
     *
     * Gap-mask quirk preserved (dashboard.py:963): the reference only
     * applies the mask when there is MORE THAN ONE gap
@@ -279,18 +279,16 @@ object ProfileGrid {
     // >1-day sample gaps via hourly pre-aggregation: a day-plus gap cannot
     // hide inside one hour bucket, so consecutive non-empty buckets carry
     // exactly the sample-level gap endpoints. The bucket table is
-    // mesh-sized (one row per non-empty hour), so the global lead() window
-    // over it is trivially small.
+    // mesh-sized (one row per non-empty hour of the window, at most nT),
+    // so the driver sorts it and pairs consecutive buckets itself.
     val hourly = base.groupBy((col("tu") / hourUs).cast("long").as("hb"))
       .agg(min(col("tu")).as("mn"), max(col("tu")).as("mx"))
-    val wHb = Window.orderBy(col("hb"))
-    val gaps = hourly
-      .withColumn("nxt_mn", lead(col("mn"), 1).over(wHb))
-      .filter(col("nxt_mn").isNotNull && (col("nxt_mn") - col("mx")) > 86400000000L)
-      .select(col("mx").as("gap_lo"), col("nxt_mn").as("gap_hi"))
-    val gapRows = gaps.collect()
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
+    val gapRows = hourly.toSeq.sliding(2).collect {
+      case Seq((_, _, mx), (_, nxtMn, _)) if nxtMn - mx > 86400000000L => (mx, nxtMn)
+    }.toSeq
     // reference quirk: masking only engages with MORE than one gap
-    val gapTable = if (gapRows.length > 1) gapRows.toSeq else Nil
+    val gapTable = if (gapRows.length > 1) gapRows else Nil
 
     // depth-row snap + time-axis interpolation per depth row
     val binned = base
@@ -312,9 +310,8 @@ object ProfileGrid {
     val ord2 = Seq(col("di"), col("is_grid"))
     val pass2 = pass1.withColumn("v2", lerpNoClamp(col("tu"), ord2, col("di")))
 
-    val masked = gapTable.foldLeft(col("v2")) { (acc, r) =>
-      when(col("tu") > lit(r.getLong(0)) && col("tu") < lit(r.getLong(1)),
-        lit(null)).otherwise(acc)
+    val masked = gapTable.foldLeft(col("v2")) { case (acc, (lo, hi)) =>
+      when(col("tu") > lit(lo) && col("tu") < lit(hi), lit(null)).otherwise(acc)
     }
     pass2.select(
       timestamp_micros(col("tu")).as("t"),

@@ -6,7 +6,8 @@ import scala.collection.concurrent.TrieMap
 
 /** Throwaway diagnostic (the r20 decomposition instrument): run named
   * queries once and print, per Spark JOB, its wall duration and the
-  * stages it ran (name + task count + ms) — the per-job attribution
+  * stages it ran (name, task count, ms, and the summed task
+  * deserialization and run times) — the per-job attribution
   * [[JobCount]]'s totals can't give. This is how "16 jobs" turns into
   * "which subtree costs what" without the UI.
   */
@@ -34,7 +35,11 @@ object JobTrace {
         val info = s.stageInfo
         val ms = (for {a <- info.completionTime; b <- info.submissionTime}
           yield a - b).getOrElse(-1L)
-        val line = f"${info.name.takeWhile(_ != '\n').take(90)}%s tasks=${info.numTasks} ms=$ms"
+        // deserialization is not part of executorRunTime: a per-task
+        // fixed cost (a large task payload) shows only in deser_ms
+        val tm = info.taskMetrics
+        val line = f"${info.name.takeWhile(_ != '\n').take(90)}%s tasks=${info.numTasks} ms=$ms" +
+          s" deser_ms=${tm.executorDeserializeTime} run_ms=${tm.executorRunTime}"
         jobOfStage.get(info.stageId).flatMap(jobsRec.get).foreach { rec =>
           rec.stages = rec.stages :+ line
         }

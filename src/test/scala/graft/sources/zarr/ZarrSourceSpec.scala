@@ -475,6 +475,39 @@ class ZarrSourceSpec extends SparkSpec {
     viaUri(7).getTimestamp(0).toInstant.getEpochSecond shouldBe 7 * 60L
   }
 
+  test("the reader factory carries a broadcast handle, not the Hadoop conf") {
+    // every task deserializes the factory: a session's Hadoop conf
+    // inline is over 100 KB, the broadcast handle plus the array metas
+    // about 3 KB. The scan broadcasts through the active session: start
+    // it first
+    spark.sparkContext.isStopped shouldBe false
+    val opts = new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+      java.util.Map.of("path", store))
+    val factory = ZarrTable.load(opts).newScanBuilder(opts).build().toBatch
+      .createReaderFactory()
+    val bytes = new java.io.ByteArrayOutputStream()
+    val out = new java.io.ObjectOutputStream(bytes)
+    try out.writeObject(factory) finally out.close()
+    bytes.size should be < 16 * 1024
+  }
+
+  test("session Hadoop settings reach executor-side chunk reads") {
+    // the test scheme exists only in the session conf: the executors'
+    // chunk reads resolve it only if the scan ships that conf, not the
+    // context's base Hadoop conf
+    val keys = Seq(
+      s"fs.${SchemeLocalFileSystem.Scheme}.impl" -> classOf[SchemeLocalFileSystem].getName,
+      s"fs.${SchemeLocalFileSystem.Scheme}.impl.disable.cache" -> "true")
+    keys.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val viaScheme = spark.read.format("zarr")
+        .load(s"${SchemeLocalFileSystem.Scheme}://$store").orderBy("time").collect()
+      val plain = spark.read.format("zarr").load(store).orderBy("time").collect()
+      viaScheme.length shouldBe ZarrFixture.N
+      viaScheme.toSeq shouldBe plain.toSeq
+    } finally keys.foreach { case (k, _) => spark.conf.unset(k) }
+  }
+
   test(".zmetadata parses once per (store, mtime): repeat loads hit the cache") {
     val opts = new org.apache.spark.sql.util.CaseInsensitiveStringMap(
       java.util.Map.of("path", store))
@@ -1714,4 +1747,17 @@ object ZarrFixture {
     all.values.filter(_.dims == Seq("time")).toSeq
       .sortBy(m => (if (m.name == "time") 0 else 1, m.name))
   }
+}
+
+/** The local file system under its own scheme, registered only through
+  * session keys in [[ZarrSourceSpec]].
+  */
+class SchemeLocalFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI =
+    java.net.URI.create(s"${SchemeLocalFileSystem.Scheme}:///")
+  override def getScheme: String = SchemeLocalFileSystem.Scheme
+}
+
+object SchemeLocalFileSystem {
+  val Scheme = "graftzarrtest"
 }
