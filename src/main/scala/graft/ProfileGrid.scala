@@ -353,20 +353,12 @@ object ProfileGrid {
     * per grid column; same documented separable-vs-Delaunay divergence as
     * [[gridFallback]], no extrapolation outside the climatology hull) —
     * and `clim_diff = value − clim` appended. `clim` columns:
-    * (month 1-12, depth, lo, hi).
+    * (month 1-12, depth, lo, hi). `gridTimes` are the grid's own `t`
+    * values ([[Result.gridTimes]], already on the driver from [[run]]'s
+    * stats collect), so the grid feeds exactly one plan branch.
     */
-  def climDiffOverlay(gridIn: DataFrame, clim: DataFrame, refYear: Int,
-                      gridTimes: Option[Seq[Timestamp]] = None): DataFrame = {
-    // r20: when the caller already KNOWS the grid's distinct times (the
-    // [[run]] stats collect has them — [[Result.gridTimes]]), the times
-    // branch becomes a driver literal: the grid then feeds exactly ONE
-    // plan branch (the u2 union), so the r19 localCheckpoint (a
-    // lineage-truncating materialization barrier) and the distinct's two
-    // exchanges disappear — guide §2.4 (remove shuffles outright) + §8
-    // (use what the driver knows). The generic path is unchanged for
-    // callers without driver-side times.
-    val grid = if (gridTimes.isDefined) gridIn
-      else gridIn.localCheckpoint(eager = false)
+  def climDiffOverlay(grid: DataFrame, clim: DataFrame, refYear: Int,
+                      gridTimes: Seq[Timestamp]): DataFrame = {
     val pts = clim.select(
         col("month").cast("int").as("m"),
         col("depth").cast("double").as("cd"),
@@ -378,17 +370,13 @@ object ProfileGrid {
         unix_micros(make_timestamp(col("yy"), col("m"), lit(15),
           lit(0), lit(0), lit(0))).as("ctu"))
 
-    val gtimes = gridTimes match {
-      case Some(ts) =>
-        val spark = gridIn.sparkSession
-        // ms → µs; the caller contract is the grid's own t values
-        // (seconds-truncated), so this IS unix_micros(t) per distinct t
-        val micros = ts.map(t => t.getTime * 1000L).distinct.sorted
-        spark.createDataFrame(
-          spark.sparkContext.parallelize(micros.map(Row(_)), 1),
-          StructType(Seq(StructField("tu", org.apache.spark.sql.types.LongType))))
-      case None => grid.select(unix_micros(col("t")).as("tu")).distinct()
-    }
+    // ms → µs; the caller contract is the grid's own t values
+    // (seconds-truncated), so this IS unix_micros(t) per distinct t
+    val spark = grid.sparkSession
+    val micros = gridTimes.map(t => t.getTime * 1000L).distinct.sorted
+    val gtimes = spark.createDataFrame(
+      spark.sparkContext.parallelize(micros.map(Row(_)), 1),
+      StructType(Seq(StructField("tu", org.apache.spark.sql.types.LongType))))
     // pass 1: per clim depth, interpolate along time onto the grid times
     val u1 = pts.select(col("cd"), col("ctu").as("x"), col("cv").as("v"),
         lit(0).as("is_grid"))

@@ -156,14 +156,14 @@ object Curation {
     * merge order would wobble the regression in ulps.
     */
   def zipfFit(docs: DataFrame, textCol: String, topK: Int): DataFrame = {
-    val w = Window.orderBy(col("cnt").desc, col("token").asc)
-    val ranked = vocabTopK(docs, textCol, topK)
-      .withColumn("rank", row_number().over(w))
-      .select(log(col("rank").cast("double")).as("x"),
-        log(col("cnt").cast("double")).as("y"))
-    // x = ln(rank) is strictly increasing, so the struct sort IS rank order
-    val folded = ranked
-      .agg(sort_array(collect_list(struct(col("x"), col("y")))).as("a"))
+    // (−cnt, token) ascending IS rank order (cnt desc, token asc), so a
+    // token's rank is its 1-based index in the sorted array
+    val folded = vocabTopK(docs, textCol, topK)
+      .agg(sort_array(collect_list(struct((-col("cnt")).as("ncnt"), col("token"))))
+        .as("r"))
+      .select(transform(col("r"), (e, i) => struct(
+        log((i + 1).cast("double")).as("x"),
+        log((-e.getField("ncnt")).cast("double")).as("y"))).as("a"))
       .select(
         size(col("a")).cast("double").as("n"),
         aggregate(col("a"), lit(0.0), (acc, e) => acc + e.getField("x")).as("sx"),

@@ -63,8 +63,10 @@ object TemporalJoins {
     * per-(site, deployment) series shape: a keyed shuffle join alone
     * degenerates to a per-key cross product when the key is
     * low-cardinality, while `(keys…, bucket)` keeps work per task
-    * bounded by bucket occupancy (the explicit spelling of the
-    * [[graft.plans.IntervalJoinRewrite]] `rewriteEquiKeyed` knob).
+    * bounded by bucket occupancy. The automatic
+    * [[graft.plans.IntervalJoinRewrite]] leaves equi-keyed joins to Spark
+    * and buckets at a fixed day, so this is the spelling for keyed
+    * interval joins and for any other bucket width.
     */
   def bucketizedIntervalJoin(facts: DataFrame, tCol: String,
                              intervals: DataFrame, startCol: String, endCol: String,

@@ -58,20 +58,11 @@ import org.apache.spark.sql.types._
   *  - the conjunction contains a lower and an upper bound tying ONE
   *    point expression `t` (from one side) to two bound expressions from
   *    the other side — `>=`/`>` and `<=`/`<` in either operand order;
-  *  - NO cross-side equality conjunct (with an equi-key Spark already
-  *    plans a shuffle join on it, the right default) — UNLESS the key is
-  *    low-cardinality (per-site series), where the keyed shuffle join
-  *    degenerates to a per-key cross product and appending the time
-  *    bucket to the key restores bounded work per task. Low cardinality
-  *    is decided COST-BASED when ANALYZE'd ndv stats exist (CBO on,
-  *    provable composite ndv ≤ `spark.graft.intervalJoin.equiKeyedMaxNdv`,
-  *    default the shuffle partition count) AND the same stats prove the
-  *    widest interval's bucket cover fits `maxBucketsPerRow` (min/max on
-  *    the bound columns — auto must never turn a slow-but-working keyed
-  *    join into a bucket-cap runtime error on sentinel bounds); without
-  *    stats the decision is not knowable and the join is left alone.
-  *    `spark.graft.intervalJoin.rewriteEquiKeyed` = `true`/`false`
-  *    overrides the cost decision in either direction (default `auto`);
+  *  - NO cross-side equality conjunct: with an equi-key Spark already
+  *    plans a shuffle join on it. A low-cardinality key (per-site
+  *    series), where that join degenerates to a per-key cross product,
+  *    takes the explicit `TemporalJoins.bucketizedIntervalJoin(extraKeys
+  *    = …)`, which appends the bucket to the key;
   *  - both sides' size estimates exceed the broadcast threshold (below
   *    it, the nested-loop join over a broadcast build side is the better
   *    plan and `TemporalJoins.intervalJoin` uses it deliberately);
@@ -81,70 +72,36 @@ import org.apache.spark.sql.types._
   * condition, so correctness never depends on the bucketing (buckets
   * merely cover the range; the exact predicate prunes). The rewrite
   * is self-stabilizing in the fixed-point optimizer batch: its own output
-  * joins contain a cross-side equality, which fails eligibility — and
-  * when the equi-keyed refinement applies (knob or cost-based, where
-  * equalities no longer disqualify)
-  * stabilization rests on the reserved bucket column names instead: a
-  * join whose side already exposes them is the rewrite's (or the
-  * explicit bucketized operator's) own output.
+  * joins (and `bucketizedIntervalJoin`'s) contain a cross-side equality,
+  * which fails eligibility.
   *
-  * Bucket width is `spark.graft.intervalJoin.bucketSeconds` (default one
-  * day): the explode factor per interval row is `⌈span/width⌉ + 1`, so
-  * size it ≳ the median interval span. A row that would produce more than
-  * `spark.graft.intervalJoin.maxBucketsPerRow` buckets (default 100 000 —
-  * ~274 years at day buckets, far beyond any real validity interval but
-  * ~1000× under the sentinel-bound pathology) fails fast with an error
-  * naming both knobs instead of silently materializing millions of bucket
-  * rows per input row: an open-ended interval encoded as `hi = 9999-12-31`
-  * needs a bucketless plan (disable the rule) or a coarser bucket, and
-  * either choice should be the user's, made on a clear error, not an OOM.
-  * Disable the rule entirely with
-  * `spark.graft.intervalJoin.rewrite.enabled=false`.
+  * Buckets are [[BucketSeconds]] (one day) wide: the explode factor per
+  * interval row is `⌈span/width⌉ + 1`. A row that would produce more than
+  * [[MaxBucketsPerRow]] buckets (~274 years at day buckets, far beyond
+  * any real validity interval but ~1000× under the sentinel-bound
+  * pathology) fails fast instead of silently materializing millions of
+  * bucket rows per input row. An open-ended interval encoded as
+  * `hi = 9999-12-31` needs Spark's own plan (any join hint, e.g.
+  * `broadcast`, makes the rule decline) or an explicit
+  * `bucketizedIntervalJoin` with a coarser `bucketSeconds`; the error
+  * names both, and the choice is the user's.
   */
 object IntervalJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
 
-  val EnabledKey = "spark.graft.intervalJoin.rewrite.enabled"
-  val BucketKey = "spark.graft.intervalJoin.bucketSeconds"
-  val MaxBucketsKey = "spark.graft.intervalJoin.maxBucketsPerRow"
-  val EquiKeyedKey = "spark.graft.intervalJoin.rewriteEquiKeyed"
-  val EquiKeyedMaxNdvKey = "spark.graft.intervalJoin.equiKeyedMaxNdv"
-
-  private def enabled: Boolean =
-    conf.getConfString(EnabledKey, "true").toBoolean
-  private def bucketSeconds: Long = {
-    val b = conf.getConfString(BucketKey, "86400").toLong
-    require(b > 0, s"$BucketKey must be positive, got $b")
-    b
-  }
-  private def maxBucketsPerRow: Long = {
-    val m = conf.getConfString(MaxBucketsKey, "100000").toLong
-    require(m > 0, s"$MaxBucketsKey must be positive, got $m")
-    m
-  }
-  /** ndv ceiling for the cost-based equi-keyed auto-enable: a composite
-    * equi-key provably holding fewer distinct values than the shuffle
-    * partition count cannot occupy every partition, so the keyed shuffle
-    * join both idles executors and goes quadratic per key.
-    */
-  private def equiKeyedMaxNdv: BigInt = {
-    val m = BigInt(conf.getConfString(
-      EquiKeyedMaxNdvKey, conf.numShufflePartitions.toString))
-    require(m > 0, s"$EquiKeyedMaxNdvKey must be positive, got $m")
-    m
-  }
+  /** Bucket width in seconds: ≳ the median validity interval. */
+  val BucketSeconds = 86400L
+  /** Explode cap: the most buckets one interval row may cover. */
+  val MaxBucketsPerRow = 100000L
 
   private def supportedType(jt: JoinType): Boolean = jt match {
     case Inner | LeftOuter | RightOuter | LeftSemi | LeftAnti | FullOuter => true
     case _ => false
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!enabled) return plan
-    plan.transformUp {
-      case j @ Join(_, _, jt, Some(cond), hint)
-          if hint == JoinHint.NONE && cond.deterministic && supportedType(jt) =>
-        rewrite(j).getOrElse(j)
-    }
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
+    case j @ Join(_, _, jt, Some(cond), hint)
+        if hint == JoinHint.NONE && cond.deterministic && supportedType(jt) =>
+      rewrite(j).getOrElse(j)
   }
 
   /** Seconds-scale monotone image of a time-like expression, or None for
@@ -161,11 +118,11 @@ object IntervalJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
     case _ => None
   }
 
-  private def bucketOf(e: Expression, b: Long): Option[Expression] =
+  private def bucketOf(e: Expression): Option[Expression] =
     // integral div truncates toward zero — monotone non-decreasing, which
     // is the only property the cover needs (matches lo ≤ t ≤ hi ⇒
     // bucket(lo) ≤ bucket(t) ≤ bucket(hi))
-    secondsOf(e).map(s => new IntegralDivide(s, Literal(b)))
+    secondsOf(e).map(s => new IntegralDivide(s, Literal(BucketSeconds)))
 
   /** One range bound extracted from a conjunct: `t` lives entirely on one
     * side of the join, `bound` entirely on the other.
@@ -199,84 +156,15 @@ object IntervalJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
         case _ => false
       }
 
-    val equiConjuncts = conjuncts.collect {
-      case e @ EqualTo(a, b) if crossSide(a, b) => e
-      case e @ EqualNullSafe(a, b) if crossSide(a, b) => e.asInstanceOf[BinaryComparison]
+    // with an equi-key Spark already plans a shuffle join on it; the
+    // rewrite's own output carries its bucket equality, so this is also
+    // what keeps the rule from re-bucketing a join it produced
+    val hasEquiKey = conjuncts.exists {
+      case EqualTo(a, b) => crossSide(a, b)
+      case EqualNullSafe(a, b) => crossSide(a, b)
+      case _ => false
     }
-    val hasEquiKey = equiConjuncts.nonEmpty
-    // With an equi-key Spark already plans a shuffle join on it — usually
-    // right, so equi-keyed range joins are left alone by default. But when
-    // the shared key is LOW-cardinality (the reference's per-(site,
-    // deployment) series shape), each key's partition degenerates to a
-    // per-key cross product under that plan; the rewrite then appends the
-    // time bucket to the join key (the planner extracts bucketEq alongside
-    // the original equalities automatically), refining (site) →
-    // (site, bucket) at the cost of the interval-side explode. Whether the
-    // key IS low-cardinality is decided cost-based when the decision is
-    // knowable: under CBO, ANALYZE'd column stats carry ndv, and a
-    // provable composite-key ndv bound below `equiKeyedMaxNdv` (default:
-    // the shuffle partition count — fewer occupied partitions than that
-    // means idle executors AND per-key quadratic work) auto-enables the
-    // refinement. Without stats the decision is not knowable and the
-    // default stays hands-off; the knob overrides in either direction.
-    // When the refinement applies, the bucket equality itself no longer
-    // fails eligibility, so self-stabilization rests on the reserved
-    // column names instead: a join whose side already exposes the
-    // rewrite's own bucket columns IS the rewrite's output.
-    def ownOutput(p: LogicalPlan): Boolean = p.output.exists(a =>
-      a.name == "__graft_bucket" || a.name == "__graft_bucket_i" ||
-        // TemporalJoins.bucketizedIntervalJoin's explicit spelling: its
-        // post-join filter can be pushed into the join in the same batch,
-        // and re-bucketing an already-bucketed join would square the
-        // interval-side explode
-        a.name == "__bucket")
-    // provable upper bound on the composite equi-key's distinct count:
-    // shared keys ≤ either side's ndv per conjunct (take the min of the
-    // sides whose ANALYZE'd stats are known), composite ndv ≤ the product
-    // over conjuncts; any conjunct with no known side → unknowable.
-    def ndvBound: Option[BigInt] = {
-      def ndvOf(e: Expression): Option[BigInt] = e match {
-        case a: Attribute =>
-          val side = if (j.left.outputSet.contains(a)) j.left else j.right
-          side.stats.attributeStats.get(a).flatMap(_.distinctCount)
-        case _ => None
-      }
-      equiConjuncts.foldLeft(Option(BigInt(1))) { (acc, c) =>
-        for {
-          p <- acc
-          n <- (ndvOf(c.left), ndvOf(c.right)) match {
-            case (Some(x), Some(y)) => Some(x.min(y))
-            case (one @ Some(_), None) => one
-            case (None, one @ Some(_)) => one
-            case _ => None
-          }
-        } yield p * n
-      }
-    }
-    val mode = conf.getConfString(EquiKeyedKey, "auto").toLowerCase match {
-      case m @ ("true" | "false" | "auto") => m
-      // fail loudly: a typo'd force-enable silently falling into auto
-      // would change plan selection with no signal to the user
-      case other => throw new IllegalArgumentException(
-        s"$EquiKeyedKey must be one of true/false/auto, got '$other'")
-    }
-    val equiKeyed = mode match {
-      case "true" => true
-      case "false" => false
-      case _ => hasEquiKey && ndvBound.exists(_ <= equiKeyedMaxNdv)
-    }
-    if (hasEquiKey && !equiKeyed) return None
-    // auto-enable must not DEGRADE a working plan: the keyed shuffle join
-    // it replaces runs (slowly) on any data, while the rewrite fails fast
-    // past the bucket cap — so under auto (never under an explicit
-    // knob=true) the bounds are re-checked against the cap further down,
-    // where the lo/hi expressions are known
-    val autoEnabled = hasEquiKey && mode == "auto"
-    // the reserved-name guard matters ONLY under the knob (where bucket
-    // equalities no longer fail eligibility); applying it unconditionally
-    // would silently strand a user range join that merely happens to
-    // carry a like-named column on the BNLJ plan
-    if (equiKeyed && (ownOutput(j.left) || ownOutput(j.right))) return None
+    if (hasEquiKey) return None
 
     val threshold = conf.autoBroadcastJoinThreshold
     def big(p: LogicalPlan): Boolean =
@@ -309,74 +197,12 @@ object IntervalJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
     } yield (l, u)).headOption
 
     pair.flatMap { case (lo, hi) =>
-      // cost-based auto-enable only: the same ANALYZE'd stats must also
-      // prove the explode stays under the bucket cap — the widest
-      // possible interval (min(lo) .. max(hi)) must fit maxBucketsPerRow.
-      // Without this, a sentinel bound (hi = 9999-12-31) that ran fine on
-      // Spark's keyed join would start FAILING with the bucket-cap
-      // raise_error the day someone ANALYZEs the table. Bare-attribute
-      // bounds with min/max stats are required; anything else is
-      // unknowable and auto declines (explicit knob=true still forces).
-      val ivSide = if (lo.tOnLeft) j.right else j.left
-      if (autoEnabled && !spanProvablyWithinCap(ivSide, lo.bound, hi.bound))
-        None
-      else {
-        val b = bucketSeconds
-        (bucketOf(lo.t, b), bucketOf(lo.bound, b), bucketOf(hi.bound, b)) match {
-          case (Some(tB), (Some(loB)), Some(hiB)) =>
-            build(j, factOnLeft = lo.tOnLeft, tB, loB, hiB)
-          case _ => None
-        }
+      (bucketOf(lo.t), bucketOf(lo.bound), bucketOf(hi.bound)) match {
+        case (Some(tB), Some(loB), Some(hiB)) =>
+          build(j, factOnLeft = lo.tOnLeft, tB, loB, hiB)
+        case _ => None
       }
     }
-  }
-
-  /** Seconds-scale value of a bound attribute's ANALYZE'd min/max
-    * column stat, computed by EVALUATING the plan's own [[secondsOf]]
-    * expression over a literal of the stat value — so the stats-side
-    * mapping is the live mapping by construction. A hand-rolled
-    * `micros / 1000000` here diverged from the plan twice (UnixSeconds
-    * floor-divides, so pre-1970 values truncated one second high; NTZ
-    * stats skipped the session-zone cast, off by up to ±50400 s), which
-    * could pass [[spanProvablyWithinCap]] exactly at the cap edge and
-    * then hit the bucket-cap raise_error the auto proof promises to
-    * preclude. None when the bound is not a bare attribute, has no
-    * stats, or has an unsupported type.
-    */
-  private def statsSeconds(side: LogicalPlan, e: Expression,
-                           wantMax: Boolean): Option[Long] = e match {
-    case a: Attribute =>
-      side.stats.attributeStats.get(a)
-        .flatMap(cs => if (wantMax) cs.max else cs.min)
-        .flatMap { v =>
-          e.dataType match {
-            case TimestampType | TimestampNTZType | LongType | IntegerType =>
-              secondsOf(Literal(v, e.dataType)).flatMap { expr =>
-                expr.eval(null) match {
-                  case s: Long => Some(s)
-                  case _ => None
-                }
-              }
-            case _ => None
-          }
-        }
-    case _ => None
-  }
-
-  /** True iff column stats PROVE every interval's bucket cover fits the
-    * explode cap: bucket(max(hi)) − bucket(min(lo)) < maxBucketsPerRow
-    * (the cover size is the difference + 1; [[bucketCover]] raises at
-    * difference ≥ cap). Long division truncates toward zero exactly like
-    * the plan's IntegralDivide, so the proof uses the plan's own bucket
-    * arithmetic.
-    */
-  private def spanProvablyWithinCap(side: LogicalPlan, loB: Expression,
-                                    hiB: Expression): Boolean = {
-    val b = bucketSeconds
-    (for {
-      mn <- statsSeconds(side, loB, wantMax = false)
-      mx <- statsSeconds(side, hiB, wantMax = true)
-    } yield (mx / b) - (mn / b) < maxBucketsPerRow).getOrElse(false)
   }
 
   /** The `[loB, hiB]` bucket-cover array for one interval row: empty for
@@ -395,15 +221,16 @@ object IntervalJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
     val emptyBuckets = Literal.create(
       org.apache.spark.sql.catalyst.util.ArrayData
         .toArrayData(Array.empty[Long]), arrTy)
-    val cap = maxBucketsPerRow
     val tooWide = Cast(new RaiseError(Literal(
-      s"interval-join rewrite: an interval spans more than $cap " +
-        s"buckets of $bucketSeconds s; raise $BucketKey / $MaxBucketsKey or " +
-        s"disable $EnabledKey")), arrTy)
+      s"interval-join rewrite: an interval spans more than $MaxBucketsPerRow " +
+        s"buckets of $BucketSeconds s; add a join hint (e.g. broadcast) to " +
+        "keep Spark's plan, or join through " +
+        "TemporalJoins.bucketizedIntervalJoin with a coarser bucketSeconds")), arrTy)
     // bucket count is hiB − loB + 1, so ≥ cap on the difference enforces
     // count ≤ cap exactly (a strict > would let a cap+1-bucket row slip)
     If(LessThan(hiB, loB), emptyBuckets,
-      If(GreaterThanOrEqual(Subtract(hiB, loB), Literal(cap)), tooWide, seqExpr))
+      If(GreaterThanOrEqual(Subtract(hiB, loB), Literal(MaxBucketsPerRow)),
+        tooWide, seqExpr))
   }
 
   private def freshRowId(name: String): Alias =

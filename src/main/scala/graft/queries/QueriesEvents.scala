@@ -279,8 +279,7 @@ object QueriesEvents {
     // through the composite-key bucketized spelling — (site, day-bucket)
     // equi-join instead of a per-site cross product (the
     // TemporalJoins.bucketizedIntervalJoin extraKeys path; the automatic
-    // rewrite's rewriteEquiKeyed knob is the same plan without the
-    // explicit spelling)
+    // rewrite leaves equi-keyed joins to Spark)
     "q147_keyed_interval_join" -> ((s, d) => {
       val facts = Tables.events(s, d).select(
         col("event_id"),

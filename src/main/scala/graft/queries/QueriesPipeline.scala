@@ -144,11 +144,9 @@ object QueriesPipeline {
         (expr("n_nationkey div 12") * 50).cast("double").as("depth"),
         (col("n_nationkey") * 2.0).as("lo"),
         (col("n_nationkey") * 2.0 + 4.0).as("hi"))
-      // r20: the run() stats collect already knows the grid's distinct
-      // times — hand them to the overlay so it skips the grid checkpoint
-      // and the times-distinct subtree (2 exchanges, ~4 jobs)
+      // the run() stats collect already knows the grid's distinct times
       graft.ProfileGrid.climDiffOverlay(r.data, clim, refYear = 2024,
-        gridTimes = Some(r.gridTimes))
+        gridTimes = r.gridTimes)
     }),
 
     // C3 fallback mesh (ProfileGrid.gridFallback): hourly x depth grid

@@ -70,7 +70,6 @@ class CollectGuardSpec extends AnyFunSuite with Matchers {
         "limit(SliceRows=4000) before the collect"),
     "graft/streaming/StreamingOps.scala" -> (1,
       "nearDupGate reference index: enforced overflow-proof limit(max+1)+require"),
-    "graft/tools/JobCount.scala" -> (1, "probe main (not operator surface)"),
     "graft/tools/JobTrace.scala" -> (1, "probe main (not operator surface)"),
     "graft/tools/ProbeCoreset.scala" -> (1, "probe main (not operator surface)"),
     "graft/tools/RecallProbe.scala" -> (1,

@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
@@ -8,7 +8,8 @@ import graft.SparkSpec
   * `facts.join(intervals, t >= lo && t <= hi)` over two sides that are
   * both above the broadcast threshold must plan as a bucketed EQUI-join
   * (shuffle-capable), not a BroadcastNestedLoopJoin — with bit-identical
-  * results — while small-side and equi-keyed joins are left alone.
+  * results — while small-side, equi-keyed and hinted joins are left
+  * alone.
   */
 class IntervalJoinRewriteSpec extends SparkSpec {
   import spark.implicits._
@@ -24,25 +25,32 @@ class IntervalJoinRewriteSpec extends SparkSpec {
     }
   }
 
-  // ~3 days of per-minute facts and 300 randomized intervals (minutes to
-  // hours wide, some inverted, some null-bounded) — LocalRelations big
-  // enough to exceed a lowered broadcast threshold
+  // The rule buckets at a fixed day, so the fixtures' time axis is
+  // stretched to match: every offset below is a count of `Stretch`-second
+  // units, and an hour-scale pattern becomes a day-scale one with the
+  // same (point, interval) matches.
+  private val Stretch = 24L
+  private def at(offset: Long): Long = 1700000000L + Stretch * offset
+
+  // ~66 days of facts every 24 minutes and 300 randomized intervals (up
+  // to 8 days wide, some inverted, some null-bounded) — LocalRelations
+  // big enough to exceed a lowered broadcast threshold
   private lazy val facts: DataFrame = {
     val rnd = new scala.util.Random(7)
     (0 until 4000).map { i =>
-      (i.toLong, 1700000000L + i * 60 + rnd.nextInt(30))
+      (i.toLong, at(i * 60L + rnd.nextInt(30)))
     }.toDF("fact_id", "secs")
       .select($"fact_id", timestamp_seconds($"secs").as("t"))
   }
   private lazy val intervals: DataFrame = {
     val rnd = new scala.util.Random(13)
     (0 until 300).map { i =>
-      val lo = 1700000000L + rnd.nextInt(3 * 86400)
+      val lo = rnd.nextInt(3 * 86400).toLong
       val span = rnd.nextInt(8 * 3600)
       val (s, e) = i % 23 match {
-        case 21 => (lo + span + 60, lo) // inverted: must match nothing
-        case 22 => (lo, -1L)            // null end: must match nothing
-        case _ => (lo, lo + span)
+        case 21 => (at(lo + span + 60), at(lo)) // inverted: must match nothing
+        case 22 => (at(lo), -1L)                // null end: must match nothing
+        case _ => (at(lo), at(lo + span))
       }
       (i.toLong, s, e)
     }.toDF("iv_id", "s_secs", "e_secs")
@@ -52,11 +60,31 @@ class IntervalJoinRewriteSpec extends SparkSpec {
 
   private def planOf(df: DataFrame): String = df.queryExecution.executedPlan.toString
 
+  private def rows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  /** Spark's own plan for the same join: any join hint makes the rule
+    * decline, so this is the theta oracle.
+    */
+  private def theta(l: DataFrame, r: DataFrame, cond: Column,
+                    jt: String = "inner"): DataFrame =
+    l.join(r.hint("broadcast"), cond, jt)
+
+  /** The interval-preserved dedup paths only collapse explode duplicates
+    * when an interval covers 2+ buckets, so the fixtures must hold some.
+    */
+  private def assertMultiBucket(ivs: DataFrame): Unit = {
+    val b = IntervalJoinRewrite.BucketSeconds
+    val wide = ivs.filter(
+      floor(unix_seconds($"hi") / b) > floor(unix_seconds($"lo") / b)).count()
+    assert(wide > 0, "no interval covers 2 or more buckets")
+  }
+
   test("large x large theta range join is rewritten to a bucketed equi-join") {
-    withConfs(
-      "spark.sql.autoBroadcastJoinThreshold" -> "1024",
-      IntervalJoinRewrite.BucketKey -> "3600") {
-      val joined = facts.join(intervals, $"t" >= $"lo" && $"t" <= $"hi")
+    withConfs("spark.sql.autoBroadcastJoinThreshold" -> "1024") {
+      assertMultiBucket(intervals)
+      val cond = $"t" >= $"lo" && $"t" <= $"hi"
+      val joined = facts.join(intervals, cond)
       val plan = planOf(joined)
       assert(!plan.contains("BroadcastNestedLoopJoin"),
         s"still a nested-loop join:\n$plan")
@@ -65,32 +93,18 @@ class IntervalJoinRewriteSpec extends SparkSpec {
         s"no shuffle join in:\n$plan")
 
       // bit-identical to the un-rewritten join
-      val expected = withConfsValue(IntervalJoinRewrite.EnabledKey -> "false") {
-        facts.join(intervals, $"t" >= $"lo" && $"t" <= $"hi")
-          .collect().map(_.toString).sorted.toSeq
-      }
-      joined.collect().map(_.toString).sorted.toSeq shouldBe expected
+      val expected = rows(theta(facts, intervals, cond))
+      rows(joined) shouldBe expected
       expected should not be empty
     }
   }
 
-  private def withConfsValue[T](kvs: (String, String)*)(body: => T): T = {
-    var out: Option[T] = None
-    withConfs(kvs: _*) { out = Some(body) }
-    out.get
-  }
-
   test("strict bounds and flipped operand order are also rewritten, identically") {
-    withConfs(
-      "spark.sql.autoBroadcastJoinThreshold" -> "1024",
-      IntervalJoinRewrite.BucketKey -> "3600") {
-      val joined = facts.join(intervals, $"lo" < $"t" && $"hi" > $"t")
+    withConfs("spark.sql.autoBroadcastJoinThreshold" -> "1024") {
+      val cond = $"lo" < $"t" && $"hi" > $"t"
+      val joined = facts.join(intervals, cond)
       assert(planOf(joined).contains("Generate explode"))
-      val expected = withConfsValue(IntervalJoinRewrite.EnabledKey -> "false") {
-        facts.join(intervals, $"lo" < $"t" && $"hi" > $"t")
-          .collect().map(_.toString).sorted.toSeq
-      }
-      joined.collect().map(_.toString).sorted.toSeq shouldBe expected
+      rows(joined) shouldBe rows(theta(facts, intervals, cond))
     }
   }
 
@@ -104,9 +118,8 @@ class IntervalJoinRewriteSpec extends SparkSpec {
   private lazy val dupIntervals: DataFrame = intervals.unionAll(intervals)
 
   test("outer/semi/anti range joins are rewritten and match the theta spelling") {
-    withConfs(
-      "spark.sql.autoBroadcastJoinThreshold" -> "1024",
-      IntervalJoinRewrite.BucketKey -> "3600") {
+    withConfs("spark.sql.autoBroadcastJoinThreshold" -> "1024") {
+      assertMultiBucket(dupIntervals)
       val cond = $"t" >= $"lo" && $"t" <= $"hi"
       // (left, right, joinType): both preserved-side orientations per type
       val cases = Seq(
@@ -126,10 +139,8 @@ class IntervalJoinRewriteSpec extends SparkSpec {
         assert(!plan.contains("BroadcastNestedLoopJoin"),
           s"$jt still a nested-loop join:\n$plan")
         assert(plan.contains("Generate explode"), s"$jt: no bucket explode in:\n$plan")
-        val expected = withConfsValue(IntervalJoinRewrite.EnabledKey -> "false") {
-          l.join(r, cond, jt).collect().map(_.toString).sorted.toSeq
-        }
-        val got = joined.collect().map(_.toString).sorted.toSeq
+        val expected = rows(theta(l, r, cond, jt))
+        val got = rows(joined)
         withClue(s"$jt results diverge from the theta spelling: ") {
           got shouldBe expected
         }
@@ -142,40 +153,40 @@ class IntervalJoinRewriteSpec extends SparkSpec {
     // threshold -1 marks every side "big", so tiny random frames exercise
     // the rewrite across seeds cheaply; each dataset mixes null bounds,
     // inverted bounds, null points, and duplicate rows
-    withConfs(
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      IntervalJoinRewrite.BucketKey -> "600") {
+    // offsets are 10-minute units stretched ×144 onto day buckets: points
+    // over ~60 days, intervals up to ~5 days wide
+    def day(offset: Long): Long = 1700000000L + 144L * offset
+    withConfs("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val types = Seq("inner", "left_outer", "right_outer", "full_outer",
         "left_semi", "left_anti")
       for (seed <- Seq(101, 202, 303)) {
         val rnd = new scala.util.Random(seed)
         val fs = (0 until 40).map { i =>
           val s = if (rnd.nextInt(10) == 0) -1L
-            else 1700000000L + rnd.nextInt(36000)
+            else day(rnd.nextInt(36000))
           (i.toLong % 35 /* dups */, s)
         }.toDF("fact_id", "secs")
           .select($"fact_id",
             timestamp_seconds(when($"secs" < 0, lit(null)).otherwise($"secs")).as("t"))
         val ivs = (0 until 15).map { i =>
-          val lo = 1700000000L + rnd.nextInt(36000)
+          val lo = rnd.nextInt(36000).toLong
           val span = rnd.nextInt(3000)
           rnd.nextInt(8) match {
-            case 0 => (i.toLong % 12, lo + span + 1, lo) // inverted
-            case 1 => (i.toLong % 12, lo, -1L)           // null hi
-            case 2 => (i.toLong % 12, -1L, lo)           // null lo
-            case _ => (i.toLong % 12, lo, lo + span)
+            case 0 => (i.toLong % 12, day(lo + span + 1), day(lo)) // inverted
+            case 1 => (i.toLong % 12, day(lo), -1L)                // null hi
+            case 2 => (i.toLong % 12, -1L, day(lo))                // null lo
+            case _ => (i.toLong % 12, day(lo), day(lo + span))
           }
         }.toDF("iv_id", "s_secs", "e_secs")
           .select($"iv_id",
             timestamp_seconds(when($"s_secs" < 0, lit(null)).otherwise($"s_secs")).as("lo"),
             timestamp_seconds(when($"e_secs" < 0, lit(null)).otherwise($"e_secs")).as("hi"))
+        withClue(s"seed=$seed: ") { assertMultiBucket(ivs) }
         val cond = $"t" >= $"lo" && $"t" <= $"hi"
         for (jt <- types; flip <- Seq(false, true)) {
           val (l, r) = if (flip) (ivs, fs) else (fs, ivs)
-          val got = l.join(r, cond, jt).collect().map(_.toString).sorted.toSeq
-          val expected = withConfsValue(IntervalJoinRewrite.EnabledKey -> "false") {
-            l.join(r, cond, jt).collect().map(_.toString).sorted.toSeq
-          }
+          val got = rows(l.join(r, cond, jt))
+          val expected = rows(theta(l, r, cond, jt))
           withClue(s"seed=$seed jt=$jt flip=$flip: ") { got shouldBe expected }
         }
       }
@@ -187,20 +198,17 @@ class IntervalJoinRewriteSpec extends SparkSpec {
     // rowid(s) ALONE and rebuild outputs via first(), so map-typed
     // columns — not groupable, but legal first() results — no longer
     // force the BNLJ fallback
-    withConfs("spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      IntervalJoinRewrite.BucketKey -> "3600") {
+    withConfs("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val ivsWithMap = intervals.withColumn("m", map(lit("k"), $"iv_id"))
       for (jt <- Seq("left_semi", "left_anti", "left_outer", "full_outer")) {
         val joined = ivsWithMap.join(facts, $"t" >= $"lo" && $"t" <= $"hi", jt)
         assert(planOf(joined).contains("Generate explode"),
           s"$jt with a map column must still be rewritten")
-        val expected = withConfsValue(IntervalJoinRewrite.EnabledKey -> "false") {
-          ivsWithMap.join(facts, $"t" >= $"lo" && $"t" <= $"hi", jt)
-            .drop("m").collect().map(_.toString).sorted.toSeq
-        }
+        val expected = rows(
+          theta(ivsWithMap, facts, $"t" >= $"lo" && $"t" <= $"hi", jt).drop("m"))
         // compare sans the (unorderable-as-string-unstable) map itself on
         // the full row; the map column round-trips value-checked below
-        joined.drop("m").collect().map(_.toString).sorted.toSeq shouldBe expected
+        rows(joined.drop("m")) shouldBe expected
         // full_outer's unmatched-fact rows null-extend the map — every
         // non-null map must round-trip intact
         val maps = joined.select("m").collect().filter(!_.isNullAt(0))
@@ -213,8 +221,7 @@ class IntervalJoinRewriteSpec extends SparkSpec {
   test("the dedup aggregates group on the rowid(s) alone, not the output schema") {
     // narrow keys: the re-collapse aggregate hashes 1–2 longs per row
     // (outputs are first()-reconstructed), never the full wide schema
-    withConfs("spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      IntervalJoinRewrite.BucketKey -> "3600") {
+    withConfs("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       for ((jt, nKeys) <- Seq("left_semi" -> 1, "left_anti" -> 1,
         "left_outer" -> 2, "full_outer" -> 2)) {
         val joined = intervals.join(facts, $"t" >= $"lo" && $"t" <= $"hi", jt)
@@ -234,21 +241,22 @@ class IntervalJoinRewriteSpec extends SparkSpec {
   }
 
   test("a row producing exactly cap buckets passes; cap+1 fails") {
-    withConfs(
-      "spark.sql.autoBroadcastJoinThreshold" -> "1024",
-      IntervalJoinRewrite.BucketKey -> "3600",
-      IntervalJoinRewrite.MaxBucketsKey -> "4") {
-      def iv(spanBuckets: Int): DataFrame = {
-        val lo = (1700000000L / 3600) * 3600 // bucket-aligned
-        Seq.tabulate(300)(i => (i.toLong, lo, lo + spanBuckets * 3600L - 1))
+    // threshold -1 marks a one-row interval side "big", so the cap-wide
+    // explode stays one row's worth of buckets
+    withConfs("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val b = IntervalJoinRewrite.BucketSeconds
+      val cap = IntervalJoinRewrite.MaxBucketsPerRow
+      def iv(spanBuckets: Long): DataFrame = {
+        val lo = (1700000000L / b) * b // bucket-aligned
+        Seq((0L, lo, lo + spanBuckets * b - 1))
           .toDF("iv_id", "s_secs", "e_secs")
           .select($"iv_id", timestamp_seconds($"s_secs").as("lo"),
             timestamp_seconds($"e_secs").as("hi"))
       }
-      val ok = facts.join(iv(4), $"t" >= $"lo" && $"t" <= $"hi")
+      val ok = facts.join(iv(cap), $"t" >= $"lo" && $"t" <= $"hi")
       assert(planOf(ok).contains("Generate explode"))
-      ok.collect() // 4 buckets = the documented cap: must not raise
-      val over = facts.join(iv(5), $"t" >= $"lo" && $"t" <= $"hi")
+      ok.count() shouldBe 4000 // cap buckets = the documented cap: must not raise
+      val over = facts.join(iv(cap + 1), $"t" >= $"lo" && $"t" <= $"hi")
       intercept[Exception] { over.collect() }
     }
   }
@@ -273,250 +281,28 @@ class IntervalJoinRewriteSpec extends SparkSpec {
     }
   }
 
-  test("opting in rewrites equi-keyed range joins, bucket appended to the key") {
-    // the low-cardinality-key escape hatch: 7 keys over 4000x300 rows
-    // would otherwise cross-product per key inside the keyed shuffle join
-    withConfs(
-      "spark.sql.autoBroadcastJoinThreshold" -> "1024",
-      IntervalJoinRewrite.BucketKey -> "3600",
-      IntervalJoinRewrite.EquiKeyedKey -> "true") {
-      val f = facts.withColumn("k", $"fact_id" % 7)
-      val iv = intervals.withColumn("k", $"iv_id" % 7)
-      val cond = f("k") === iv("k") && $"t" >= $"lo" && $"t" <= $"hi"
-      for (jt <- Seq("inner", "left_outer", "left_anti")) {
-        val joined = f.join(iv, cond, jt)
-        val plan = planOf(joined)
-        assert(plan.contains("Generate explode"), s"$jt: no explode in:\n$plan")
-        assert(!plan.contains("BroadcastNestedLoopJoin"))
-        // the original key AND the bucket both ride the join keys
-        assert(plan.contains("k#") && plan.contains("__graft_bucket"),
-          s"$jt: bucket not in the join keys:\n$plan")
-        val expected = withConfsValue(IntervalJoinRewrite.EnabledKey -> "false") {
-          f.join(iv, cond, jt).collect().map(_.toString).sorted.toSeq
-        }
-        withClue(s"$jt: ") {
-          joined.collect().map(_.toString).sorted.toSeq shouldBe expected
-        }
-      }
-    }
-  }
-
-  test("cost-based: ANALYZE'd low-ndv equi key auto-enables the refinement; high-ndv left alone") {
-    // no knob set anywhere in this test — the decision comes from CBO
-    // column stats alone (provable composite ndv vs equiKeyedMaxNdv)
-    withConfs(
-      "spark.sql.cbo.enabled" -> "true",
-      "spark.sql.autoBroadcastJoinThreshold" -> "1024",
-      IntervalJoinRewrite.BucketKey -> "3600",
-      // the test session runs few shuffle partitions; pin the ceiling so
-      // the 7-key side is provably low and the 300-key side provably high
-      IntervalJoinRewrite.EquiKeyedMaxNdvKey -> "32") {
-      def write(df: DataFrame, name: String, analyzeCols: String): Unit = {
-        // a previous aborted run can leave the managed location behind
-        // with no catalog entry; clear both before creating
-        spark.sql(s"DROP TABLE IF EXISTS $name")
-        val warehouse = spark.conf.get("spark.sql.warehouse.dir")
-          .stripPrefix("file:")
-        org.apache.commons.io.FileUtils.deleteQuietly(
-          new java.io.File(warehouse, name))
-        df.write.mode("overwrite").saveAsTable(name)
-        spark.sql(s"ANALYZE TABLE $name COMPUTE STATISTICS FOR COLUMNS $analyzeCols")
-      }
-      // the interval sides also ANALYZE lo/hi: auto needs min/max span
-      // evidence (bucket cover provably under the cap), not just ndv
-      write(facts.withColumn("k", $"fact_id" % 7), "ij_facts_ndv", "k")
-      write(facts.withColumn("k", $"fact_id"), "ij_facts_high", "k")
-      write(intervals.withColumn("k", $"iv_id" % 7), "ij_iv_low", "k, lo, hi")
-      write(intervals.withColumn("k", $"iv_id"), "ij_iv_high", "k, lo, hi")
-      try {
-        val f = spark.table("ij_facts_ndv")
-        val ivLow = spark.table("ij_iv_low")
-        val cond = f("k") === ivLow("k") && f("t") >= ivLow("lo") && f("t") <= ivLow("hi")
-        val low = f.join(ivLow, cond)
-        val lowPlan = planOf(low)
-        withClue(s"ndv 7 < shuffle partitions must auto-refine:\n$lowPlan") {
-          assert(lowPlan.contains("Generate explode"))
-          assert(lowPlan.contains("__graft_bucket"))
-        }
-        // value-identical to the unrewritten keyed join
-        val expected = withConfsValue(IntervalJoinRewrite.EnabledKey -> "false") {
-          f.join(ivLow, cond).collect().map(_.toString).sorted.toSeq
-        }
-        low.collect().map(_.toString).sorted.toSeq shouldBe expected
-        expected should not be empty
-
-        // both sides ANALYZE'd and genuinely high: min(4000, 300) = 300
-        // distinct keys ≥ the 32 shuffle partitions → left on Spark's
-        // keyed shuffle join
-        val fHigh = spark.table("ij_facts_high")
-        val ivHigh = spark.table("ij_iv_high")
-        val condH = fHigh("k") === ivHigh("k") &&
-          fHigh("t") >= ivHigh("lo") && fHigh("t") <= ivHigh("hi")
-        val highPlan = planOf(fHigh.join(ivHigh, condH))
-        assert(!highPlan.contains("Generate explode"),
-          s"high-ndv equi key must stay on Spark's keyed join:\n$highPlan")
-
-        // a derived (stat-less) key is UNKNOWABLE → also left alone, even
-        // though its actual cardinality is 7
-        val fDerived = spark.table("ij_facts_high").withColumn("k", $"fact_id" % 7)
-        val ivDerived = spark.table("ij_iv_high").withColumn("k", $"iv_id" % 7)
-        val condD = fDerived("k") === ivDerived("k") &&
-          fDerived("t") >= ivDerived("lo") && fDerived("t") <= ivDerived("hi")
-        assert(!planOf(fDerived.join(ivDerived, condD)).contains("Generate explode"))
-
-        // explicit false still wins over the cost decision
-        withConfs(IntervalJoinRewrite.EquiKeyedKey -> "false") {
-          assert(!planOf(f.join(ivLow, cond)).contains("Generate explode"))
-        }
-
-        // low ndv but WITHOUT span evidence (lo/hi not ANALYZE'd): auto
-        // declines — it must never trade a working keyed join for a
-        // possible bucket-cap runtime error
-        write(intervals.withColumn("k", $"iv_id" % 7), "ij_iv_nospan", "k")
-        val ivNoSpan = spark.table("ij_iv_nospan")
-        val condNs = f("k") === ivNoSpan("k") &&
-          f("t") >= ivNoSpan("lo") && f("t") <= ivNoSpan("hi")
-        assert(!planOf(f.join(ivNoSpan, condNs)).contains("Generate explode"))
-
-        // low ndv WITH span stats that prove a sentinel-wide interval
-        // (hi five years out at hour buckets ≫ the cap): auto declines,
-        // while an explicit knob=true still forces the rewrite
-        write(intervals.withColumn("k", $"iv_id" % 7)
-          .withColumn("hi", when($"iv_id" === 0,
-            $"hi" + expr("INTERVAL 1825 DAYS")).otherwise($"hi")),
-          "ij_iv_sentinel", "k, lo, hi")
-        val ivSent = spark.table("ij_iv_sentinel")
-        val condSe = f("k") === ivSent("k") &&
-          f("t") >= ivSent("lo") && f("t") <= ivSent("hi")
-        withConfs(IntervalJoinRewrite.MaxBucketsKey -> "1000") {
-          assert(!planOf(f.join(ivSent, condSe)).contains("Generate explode"),
-            "auto must decline when stats prove the cover exceeds the cap")
-          withConfs(IntervalJoinRewrite.EquiKeyedKey -> "true") {
-            assert(planOf(f.join(ivSent, condSe)).contains("Generate explode"),
-              "explicit true still forces (and accepts the cap contract)")
-          }
-        }
-
-        // a typo'd knob value fails loudly instead of silently routing
-        withConfs(IntervalJoinRewrite.EquiKeyedKey -> "yes") {
-          val e = intercept[Exception] { planOf(f.join(ivLow, cond)) }
-          e.getMessage should include(IntervalJoinRewrite.EquiKeyedKey)
-        }
-      } finally {
-        Seq("ij_facts_ndv", "ij_facts_high", "ij_iv_low", "ij_iv_high",
-          "ij_iv_nospan", "ij_iv_sentinel")
-          .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-      }
-    }
-  }
-
-  test("cost-based: the stats-side seconds mapping is the plan's own (pre-1970 cap edge)") {
-    // statsSeconds used to derive seconds as micros/1e6 (truncation
-    // toward zero) while the plan's UnixSeconds floor-divides — so a
-    // pre-1970 min(lo) read one second HIGH stats-side, and exactly at
-    // the cap edge spanProvablyWithinCap could prove a span "within cap"
-    // that the bucket cover then raise_error'd on at runtime. The fix
-    // evaluates secondsOf over a literal of the stat value, making the
-    // two mappings identical by construction. At 1-second buckets and
-    // cap 100: min(lo) = −0.5 s (floorDiv → −1; trunc → 0),
-    // max(hi) = 99 s ⇒ trunc-proof 99−0 = 99 < 100 (auto-enables, then
-    // raises); floorDiv-proof 99−(−1) = 100 (auto declines, keyed join
-    // runs).
-    withConfs(
-      "spark.sql.cbo.enabled" -> "true",
-      "spark.sql.autoBroadcastJoinThreshold" -> "1024",
-      IntervalJoinRewrite.BucketKey -> "1",
-      IntervalJoinRewrite.MaxBucketsKey -> "100",
-      IntervalJoinRewrite.EquiKeyedMaxNdvKey -> "32") {
-      def write(df: DataFrame, name: String, analyzeCols: String): Unit = {
-        spark.sql(s"DROP TABLE IF EXISTS $name")
-        val warehouse = spark.conf.get("spark.sql.warehouse.dir")
-          .stripPrefix("file:")
-        org.apache.commons.io.FileUtils.deleteQuietly(
-          new java.io.File(warehouse, name))
-        df.write.mode("overwrite").saveAsTable(name)
-        spark.sql(s"ANALYZE TABLE $name COMPUTE STATISTICS FOR COLUMNS $analyzeCols")
-      }
-      // facts in the epoch-adjacent window the intervals cover
-      val edgeFacts = (0 until 2000).map(i => (i.toLong, (i % 120).toLong))
-        .toDF("fact_id", "secs")
-        .select($"fact_id", ($"fact_id" % 7).as("k"),
-          timestamp_seconds($"secs").as("t"))
-      def edgeIvs(minLoMicros: Long): DataFrame =
-        ((0L, minLoMicros, 99000000L) +:
-          (1 until 300).map(i => (i.toLong, 1000000L * (i % 50),
-            1000000L * (i % 50 + 40)))).toDF("iv_id", "lo_us", "hi_us")
-          .select($"iv_id", ($"iv_id" % 7).as("k"),
-            timestamp_micros($"lo_us").as("lo"),
-            timestamp_micros($"hi_us").as("hi"))
-      write(edgeFacts, "ij_facts_edge", "k")
-      write(edgeIvs(-500000L), "ij_iv_edge", "k, lo, hi")
-      write(edgeIvs(0L), "ij_iv_safe", "k, lo, hi")
-      try {
-        val f = spark.table("ij_facts_edge")
-        // pre-1970 half-second min(lo): the true widest cover is exactly
-        // cap+0 buckets — auto must DECLINE (no explode) and the keyed
-        // join must run to completion
-        val ivEdge = spark.table("ij_iv_edge")
-        val cond = f("k") === ivEdge("k") &&
-          f("t") >= ivEdge("lo") && f("t") <= ivEdge("hi")
-        val joined = f.join(ivEdge, cond)
-        val plan = planOf(joined)
-        assert(!plan.contains("Generate explode"),
-          s"floorDiv stats-seconds must fail the cap proof at the edge:\n$plan")
-        val viaKeyed = joined.collect() // must not raise
-        // control: identical table with min(lo) at epoch — provably 99
-        // buckets, auto enables and runs clean
-        val ivSafe = spark.table("ij_iv_safe")
-        val condS = f("k") === ivSafe("k") &&
-          f("t") >= ivSafe("lo") && f("t") <= ivSafe("hi")
-        val safe = f.join(ivSafe, condS)
-        assert(planOf(safe).contains("Generate explode"))
-        safe.collect() // inside the cap: must not raise
-        // and the declined join's rows equal the forced-off spelling
-        val expected = withConfsValue(IntervalJoinRewrite.EnabledKey -> "false") {
-          f.join(ivEdge, cond).collect().map(_.toString).sorted.toSeq
-        }
-        viaKeyed.map(_.toString).sorted.toSeq shouldBe expected
-        expected should not be empty
-      } finally {
-        Seq("ij_facts_edge", "ij_iv_edge", "ij_iv_safe")
-          .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-      }
-    }
-  }
-
   test("a user column named __bucket does not strand the default rewrite") {
-    // the reserved-name stabilization guard applies only under the
-    // equi-keyed knob; with the knob off, a side that merely carries a
-    // like-named column must still get its BNLJ rescue
-    withConfs(
-      "spark.sql.autoBroadcastJoinThreshold" -> "1024",
-      IntervalJoinRewrite.BucketKey -> "3600") {
+    // eligibility reads the join condition, never column names: a side
+    // that merely carries a like-named column still gets its BNLJ rescue
+    withConfs("spark.sql.autoBroadcastJoinThreshold" -> "1024") {
       val f = facts.withColumn("__bucket", $"fact_id" % 11)
-      val joined = f.join(intervals, $"t" >= $"lo" && $"t" <= $"hi")
+      val cond = $"t" >= $"lo" && $"t" <= $"hi"
+      val joined = f.join(intervals, cond)
       val plan = planOf(joined)
       assert(plan.contains("Generate explode"), s"rescue stranded:\n$plan")
       assert(!plan.contains("BroadcastNestedLoopJoin"))
-      val expected = withConfsValue(IntervalJoinRewrite.EnabledKey -> "false") {
-        f.join(intervals, $"t" >= $"lo" && $"t" <= $"hi")
-          .collect().map(_.toString).sorted.toSeq
-      }
-      joined.collect().map(_.toString).sorted.toSeq shouldBe expected
+      rows(joined) shouldBe rows(theta(f, intervals, cond))
     }
   }
 
-  test("opting in does not re-bucket bucketizedIntervalJoin's own output") {
+  test("does not re-bucket bucketizedIntervalJoin's own output") {
     // the explicit operator's post-join range filter can be pushed into
-    // its bucket equi-join in the same optimizer batch; under the
-    // equi-keyed knob that shape would be eligible again — the reserved
-    // __bucket column name must stop a second (squared-explode) layer
-    withConfs(
-      "spark.sql.autoBroadcastJoinThreshold" -> "1024",
-      IntervalJoinRewrite.BucketKey -> "3600",
-      IntervalJoinRewrite.EquiKeyedKey -> "true") {
+    // its bucket equi-join in the same optimizer batch; the bucket
+    // equality it carries must stop a second (squared-explode) layer
+    withConfs("spark.sql.autoBroadcastJoinThreshold" -> "1024") {
       val manual = graft.operators.TemporalJoins.bucketizedIntervalJoin(
-        facts, "t", intervals, "lo", "hi", bucketSeconds = 3600L)
+        facts, "t", intervals, "lo", "hi",
+        bucketSeconds = IntervalJoinRewrite.BucketSeconds)
       val plan = planOf(manual)
       withClue(s"expected exactly one explode in:\n$plan") {
         "Generate explode".r.findAllIn(plan).size shouldBe 1
@@ -524,40 +310,44 @@ class IntervalJoinRewriteSpec extends SparkSpec {
     }
   }
 
-  test("the rewrite can be disabled by conf") {
-    withConfs(
-      "spark.sql.autoBroadcastJoinThreshold" -> "1024",
-      IntervalJoinRewrite.EnabledKey -> "false") {
-      val plan = planOf(facts.join(intervals, $"t" >= $"lo" && $"t" <= $"hi"))
-      assert(!plan.contains("Generate explode"))
+  test("a join hint keeps Spark's plan for a large x large theta join") {
+    withConfs("spark.sql.autoBroadcastJoinThreshold" -> "1024") {
+      val cond = $"t" >= $"lo" && $"t" <= $"hi"
+      val rewritten = facts.join(intervals, cond)
+      assert(planOf(rewritten).contains("Generate explode"))
+      val hinted = facts.join(intervals.hint("broadcast"), cond)
+      val plan = planOf(hinted)
+      assert(!plan.contains("Generate explode"), s"hinted join rewritten:\n$plan")
+      assert(plan.contains("BroadcastNestedLoopJoin"), s"hint not honoured:\n$plan")
+      val expected = rows(rewritten)
+      rows(hinted) shouldBe expected
+      expected should not be empty
     }
   }
 
   test("a sentinel-bounded interval fails fast naming the knobs, not OOM") {
-    withConfs(
-      "spark.sql.autoBroadcastJoinThreshold" -> "1024",
-      IntervalJoinRewrite.BucketKey -> "3600",
-      IntervalJoinRewrite.MaxBucketsKey -> "1000") {
-      // one open-ended interval: hi = +50 years → ~438k hour buckets
+    withConfs("spark.sql.autoBroadcastJoinThreshold" -> "1024") {
+      // one open-ended interval: hi = 9999-12-31 → ~2.9M day buckets
       val withSentinel = intervals.unionByName(
-        Seq((999L, 1700000000L, 1700000000L + 50L * 365 * 86400))
+        Seq((999L, 1700000000L, 253402214400L))
           .toDF("iv_id", "s_secs", "e_secs")
           .select($"iv_id", timestamp_seconds($"s_secs").as("lo"),
             timestamp_seconds($"e_secs").as("hi")))
       val joined = facts.join(withSentinel, $"t" >= $"lo" && $"t" <= $"hi")
       assert(planOf(joined).contains("Generate explode"))
       val e = intercept[Exception] { joined.collect() }
-      val msg = Option(e.getMessage).getOrElse("") +
-        Option(e.getCause).map(_.getMessage).getOrElse("")
-      assert(msg.contains(IntervalJoinRewrite.BucketKey) ||
-        msg.contains("USER_RAISED_EXCEPTION"), s"unhelpful error: $e")
+      val msg = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .flatMap(t => Option(t.getMessage)).mkString("\n")
+      // the message names both escape routes
+      withClue(s"unhelpful error: $msg") {
+        msg should include("join hint")
+        msg should include("bucketizedIntervalJoin")
+      }
     }
   }
 
   test("bucketizedIntervalJoin agrees with the automatic rewrite on the same inputs") {
-    withConfs(
-      "spark.sql.autoBroadcastJoinThreshold" -> "1024",
-      IntervalJoinRewrite.BucketKey -> "3600") {
+    withConfs("spark.sql.autoBroadcastJoinThreshold" -> "1024") {
       val auto = facts.join(intervals, $"t" >= $"lo" && $"t" <= $"hi")
         .select($"fact_id", $"iv_id")
         .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
