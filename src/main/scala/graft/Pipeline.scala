@@ -1,11 +1,19 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan, Project}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.functions.Qartod
 import graft.operators.{Decimate, Reconcile}
 import graft.sources.ConfigRegistry.{SiteConfig, VariableResolver}
+import graft.sources.zarr.ZarrDataSource
 
 /** The reference's main query path (SURVEY §3.1 steps 5-6,
   * qaqc/plots.py:113-216) as one composable plan builder: scan → canonical
@@ -20,13 +28,33 @@ import graft.sources.ConfigRegistry.{SiteConfig, VariableResolver}
   * a (parameter, value) row per resolved column, with the parquet read
   * pruned to exactly the resolved physical columns (a union-of-projections
   * melt would re-scan the span once per parameter).
+  *
+  * The manifest is deterministic and known on the driver: one artifact
+  * `"<refDes>__<canonical>"` per resolved parameter, whether or not the
+  * window holds rows for it (the reference records its plots the same
+  * way, and builds its index from what it wrote, qaqc/index.py:20-50).
+  * So the index is written from the driver, no Spark job computes the
+  * manifest, and the reconcile against it is one filter job. When the
+  * source is a Zarr scan, its row-count statistic bounds every series,
+  * and an LTTB site whose bound is under the threshold skips
+  * `Decimate.downsample`'s sizes job.
   */
 object Pipeline {
 
   final case class GrossRange(failLo: Double, failHi: Double,
                               susLo: Double, susHi: Double)
 
-  final case class PlotData(data: DataFrame, manifest: DataFrame)
+  /** Plot data and its artifact names, one per resolved parameter in
+    * configuration order.
+    */
+  final case class PlotData(data: DataFrame, artifacts: Seq[String]) {
+    /** The artifact names as a one-column (`artifact`) local relation. */
+    lazy val manifest: DataFrame = data.sparkSession.createDataFrame(
+      artifacts.map(Row(_)).asJava, StructType.fromDDL("artifact STRING"))
+  }
+
+  private val PlotDataSchema =
+    StructType.fromDDL("ref_des STRING, parameter STRING, t TIMESTAMP, value DOUBLE, flag INT")
 
   /** Build the per-(site, span) plot-data table: one long-form row per
     * (parameter, time) with value and gross-range flag, decimated per the
@@ -47,22 +75,9 @@ object Pipeline {
     // empty.reduce below would crash the whole site instead)
     if (params.isEmpty) {
       val spark = df.sparkSession
-      val emptyData = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("ref_des",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("parameter",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("t",
-            org.apache.spark.sql.types.TimestampType),
-          org.apache.spark.sql.types.StructField("value",
-            org.apache.spark.sql.types.DoubleType),
-          org.apache.spark.sql.types.StructField("flag",
-            org.apache.spark.sql.types.IntegerType))))
-      return PlotData(emptyData,
-        emptyData.select(concat_ws("__", col("ref_des"), col("parameter")).as("artifact")))
+      return PlotData(spark.createDataFrame(spark.sparkContext.emptyRDD[Row], PlotDataSchema), Nil)
     }
+    val artifacts = params.map { case (canonical, _) => s"${site.refDes}__$canonical" }.distinct
     val sliced = df.filter(col(timeCol) >= window._1 && col(timeCol) <= window._2)
     // melt to long form in ONE scan: inline explodes each row into N
     // (parameter, value) rows. A union of per-parameter projections reads
@@ -84,7 +99,10 @@ object Pipeline {
         Decimate.downsample(
             long.select(col("parameter"), unix_micros(col("t")).cast("double").as("x"),
               col("value")),
-            "parameter", "x", "value", threshold)
+            "parameter", "x", "value", threshold,
+            // the melt emits one row per parameter per sliced row, so
+            // no series is longer than the sliced frame
+            maxSeriesRows = rowBound(sliced))
           .select(
             lit(site.refDes).as("ref_des"),
             col("parameter"),
@@ -106,32 +124,63 @@ object Pipeline {
           Qartod.grossRangeFlag(col("value"), r.failLo, r.failHi, r.susLo, r.susHi))
           .otherwise(acc)
     }
-    val flagged = decimated.withColumn("flag", flagExpr)
-    val manifest = flagged.select(col("ref_des"), col("parameter")).distinct()
-      .select(concat_ws("__", col("ref_des"), col("parameter")).as("artifact"))
-    PlotData(flagged, manifest)
+    PlotData(decimated.withColumn("flag", flagExpr), artifacts)
+  }
+
+  /** An upper bound on the rows of `df` known without a job: the row
+    * count a Zarr scan reports for its surviving chunks, when only
+    * filters and projections (neither adds rows) sit above that scan in
+    * the optimized plan. None for any other plan.
+    */
+  private def rowBound(df: DataFrame): Option[Long] = {
+    def leafRows(p: LogicalPlan): Option[Long] = p match {
+      case Filter(_, child) => leafRows(child)
+      case Project(_, child) => leafRows(child)
+      case scan: DataSourceV2ScanRelation => ZarrDataSource.rowUpperBound(scan.scan)
+      case _ => None
+    }
+    leafRows(df.queryExecution.optimizedPlan)
   }
 
   /** K3 wrapper: artifacts present in the prior manifest but not
-    * regenerated this run.
+    * regenerated this run. A driver-held current manifest (a local
+    * relation, as [[PlotData.manifest]] is) is applied as an IN-list
+    * filter on the prior one: the left-anti join's rows (a null name
+    * matches nothing, so it stays stale) with no exchange, in one job.
     */
   def staleArtifacts(previous: DataFrame, current: DataFrame): DataFrame =
-    Reconcile.staleOutputs(previous, current, "artifact")
+    current.queryExecution.analyzed match {
+      case _: LocalRelation =>
+        val names = current.select("artifact").collect().flatMap(r => Option(r.getString(0)))
+        previous.filter(col("artifact").isNull || !col("artifact").isInCollection(names))
+      case _ => Reconcile.staleOutputs(previous, current, "artifact")
+    }
 
   /** K2/K5 sink: plot data laid out `<out>/data/ref_des=<site>/parameter=
     * <p>/…` (the object-store organize step — partition values become the
-    * key prefix, qaqc/plots.py:438-464) plus the JSON artifact index
+    * key prefix, qaqc/plots.py:438-464) plus the JSON-lines artifact index
     * (qaqc/index.py:20-50) at `<out>/index`.
     *
     * The data is hash-partitioned by (ref_des, parameter) first, so each
     * artifact is written by one task as one parquet file, however its rows
     * were partitioned upstream (a decimation that returns its input keeps
-    * the source scan's partition per chunk).
+    * the source scan's partition per chunk). The index is written by the
+    * driver through the Hadoop FileSystem — one `part-00000.json` plus
+    * `_SUCCESS`, replacing the directory — so it starts no Spark job.
     */
   def writePlotData(pd: PlotData, outDir: String): Unit = {
     pd.data.repartition(col("ref_des"), col("parameter")).write.mode("overwrite")
       .partitionBy("ref_des", "parameter")
       .parquet(s"$outDir/data")
-    pd.manifest.coalesce(1).write.mode("overwrite").json(s"$outDir/index")
+    val index = new Path(s"$outDir/index")
+    val fs = index.getFileSystem(pd.data.sparkSession.sessionState.newHadoopConf())
+    fs.delete(index, true)
+    val mapper = new ObjectMapper()
+    val out = fs.create(new Path(index, "part-00000.json"))
+    try pd.artifacts.foreach { a =>
+      out.write(mapper.writeValueAsBytes(java.util.Map.of("artifact", a)))
+      out.write('\n')
+    } finally out.close()
+    fs.create(new Path(index, "_SUCCESS")).close()
   }
 }

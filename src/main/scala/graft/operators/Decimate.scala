@@ -24,7 +24,8 @@ import org.apache.spark.sql.functions._
   * [[downsample]] sizes every series first and skips the position pass
   * and the LTTB shuffle when no series is over the threshold (the
   * reference's default 5,000,000-point threshold leaves most series as
-  * is).
+  * is); a caller-supplied bound on the series lengths skips the sizing
+  * too.
   */
 object Decimate {
 
@@ -212,11 +213,27 @@ object Decimate {
     *    1), then [[lttb]].
     * Both paths return the same rows as striding and decimating each
     * series unconditionally.
+    *
+    * `maxSeriesRows` is an optional upper bound on every series' row
+    * count that the caller knows without a job (a source's row-count
+    * statistic, say). A bound at or under `threshold` proves the identity
+    * path, so the sizes collect is skipped and building the frame starts
+    * no Spark job; the rows are the same, since the sizes path takes the
+    * identity exactly when its largest series is at or under `threshold`.
     */
   def downsample(df: DataFrame, keyCol: String, xCol: String, yCol: String,
-                 threshold: Int, maxPointsFactor: Int = 10): DataFrame =
-    downsampleBounded(df, keyCol, xCol, yCol, threshold, maxPointsFactor,
+                 threshold: Int, maxPointsFactor: Int = 10,
+                 maxSeriesRows: Option[Long] = None): DataFrame =
+    if (maxSeriesRows.exists(_ <= threshold)) {
+      requirePositive(threshold, maxPointsFactor)
+      points(df, keyCol, xCol, yCol).toDF(keyCol, xCol, yCol)
+    } else downsampleBounded(df, keyCol, xCol, yCol, threshold, maxPointsFactor,
       OrderedPosition.MaxOffsetRows, MaxStrideLiteral)
+
+  private def requirePositive(threshold: Int, maxPointsFactor: Int): Unit =
+    require(threshold > 0 && maxPointsFactor > 0,
+      s"Decimate.downsample: threshold ($threshold) and maxPointsFactor " +
+        s"($maxPointsFactor) must be positive")
 
   /** [[downsample]] with its driver bounds as parameters: at most
     * `maxSeries` series, strides inlined up to `maxStrideLiteral` series.
@@ -224,9 +241,7 @@ object Decimate {
   private[operators] def downsampleBounded(df: DataFrame, keyCol: String, xCol: String,
                                            yCol: String, threshold: Int, maxPointsFactor: Int,
                                            maxSeries: Int, maxStrideLiteral: Int): DataFrame = {
-    require(threshold > 0 && maxPointsFactor > 0,
-      s"Decimate.downsample: threshold ($threshold) and maxPointsFactor " +
-        s"($maxPointsFactor) must be positive")
+    requirePositive(threshold, maxPointsFactor)
     val cap = threshold.toLong * maxPointsFactor
     // a null key is never plotted, so it never picks the path; grouping
     // on the raw key keeps the count per series, the string form matches

@@ -43,6 +43,11 @@ import org.apache.spark.util.SerializableConfiguration
   *    `TimeLayout.readSpan` (a two-day dashboard span over a year-long
   *    store touches ~0.5% of chunks). Filters stay in the post-scan
   *    plan (pruning is chunk-granular, never claimed exact).
+  *  - **row-count statistic**: the scan reports `numRows`, the row total
+  *    of the chunks that survive pruning — an upper bound on what it
+  *    returns, known at planning without a job (`Pipeline.plotData`
+  *    bounds its series lengths with it). `sizeInBytes` stays
+  *    unreported, so join and broadcast choices are unchanged.
   *  - **column pruning → array pruning**: unprojected arrays' chunk
   *    files are never opened (each column is its own file set — Zarr is
   *    columnar on disk).
@@ -77,6 +82,17 @@ class ZarrDataSource extends TableProvider with DataSourceRegister {
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: util.Map[String, String]): Table =
     ZarrTable.load(new CaseInsensitiveStringMap(properties))
+}
+
+object ZarrDataSource {
+  /** The row count `scan` reports when it is a Zarr scan — the rows of
+    * its surviving chunks, so an upper bound on the rows it returns — and
+    * None for any other source, whose statistics may be estimates.
+    */
+  def rowUpperBound(scan: Scan): Option[Long] = scan match {
+    case z: ZarrScan => Some(z.estimateStatistics().numRows().getAsLong)
+    case _ => None
+  }
 }
 
 /** The one IO seam: all store bytes flow through Hadoop [[Path
@@ -406,7 +422,7 @@ private[zarr] class ZarrScan(path: String, required: Seq[ZarrMeta.ArrayMeta],
                              coordBounds: Option[(Double, Double)],
                              sorted: SortedMode,
                              conf: Configuration)
-    extends Scan with Batch {
+    extends Scan with Batch with SupportsReportStatistics {
 
   override def readSchema(): StructType =
     StructType(required.map(m => StructField(m.name, m.sparkType, nullable = true)))
@@ -418,8 +434,26 @@ private[zarr] class ZarrScan(path: String, required: Seq[ZarrMeta.ArrayMeta],
     s"zarr $path cols=${required.map(_.name).mkString(",")}$cb"
   }
 
-  /** One partition per surviving record chunk. Pruning strategy per
-    * [[SortedMode]]:
+  /** One partition per surviving record chunk. */
+  override def planInputPartitions(): Array[InputPartition] =
+    keptChunks.map(c => ZarrInputPartition(path, c): InputPartition).toArray
+
+  /** The row total of the chunks that survive pruning: an upper bound
+    * on the rows the scan returns (the coordinate filter stays in
+    * the plan). `sizeInBytes` is left unreported, so join and broadcast
+    * planning see Spark's default size exactly as without statistics.
+    */
+  override def estimateStatistics(): Statistics = {
+    val rows = keptChunks.iterator.map(c => ZarrReader.rowsInChunk(coord, c).toLong).sum
+    new Statistics {
+      override def sizeInBytes(): java.util.OptionalLong = java.util.OptionalLong.empty()
+      override def numRows(): java.util.OptionalLong = java.util.OptionalLong.of(rows)
+    }
+  }
+
+  /** The record chunks that survive pruning, ascending, computed once
+    * per scan: the partitions and the row-count statistic read the same
+    * list. Pruning strategy per [[SortedMode]]:
     *
     * The EXACT path reads the coordinate array once at planning: per
     * chunk, decode and take [min, max] — exact bounds with no
@@ -441,7 +475,7 @@ private[zarr] class ZarrScan(path: String, required: Seq[ZarrMeta.ArrayMeta],
     * disordered between probes — the one residual shape the
     * verification cannot observe.
     */
-  override def planInputPartitions(): Array[InputPartition] = {
+  private lazy val keptChunks: Seq[Long] = {
     val nChunks = coord.nChunks
     val canPrune = !coord.is2D && !coord.is3D // bounds: scalar coord only
     // decoded coordinate chunk in pruning space, or None when missing
@@ -472,7 +506,7 @@ private[zarr] class ZarrScan(path: String, required: Seq[ZarrMeta.ArrayMeta],
           case _ => false
         }
     }
-    val keep: Seq[Long] = coordBounds match {
+    coordBounds match {
       case None => (0L until nChunks)
       case Some(_) if !canPrune => (0L until nChunks)
       case Some((lo, hi)) if nChunks > 1 && binarySearchApplies =>
@@ -515,7 +549,6 @@ private[zarr] class ZarrScan(path: String, required: Seq[ZarrMeta.ArrayMeta],
         }
       case Some((lo, hi)) => fullScanPrune(lo, hi, nChunks)
     }
-    keep.map(c => ZarrInputPartition(path, c): InputPartition).toArray
   }
 
   /** Coordinate chunk values in PRUNING space: CF-time coords become

@@ -8,9 +8,29 @@ import java.nio.file.{Files, Paths}
   * optimization-round evidence trail (`plans/r19/<q>_{before,after}.txt`).
   *
   * Usage: runMain graft.tools.PlanDump <qCsv|all> <outDir> <suffix>
-  * writes `<outDir>/<q>_<suffix>.txt` per query.
+  * writes `<outDir>/<q>_<suffix>.txt` per query, with its ids normalized
+  * (see [[normalize]]) so a dump does not depend on the queries dumped
+  * before it in the same JVM.
   */
 object PlanDump {
+  private val Id = "(#|plan_id=)(\\d+)".r
+
+  /** `plan` with its expression ids (`#123`) and exchange plan ids
+    * (`plan_id=45`) renumbered from 0 in order of first appearance, each
+    * kind on its own counter. Spark allocates both JVM-wide, so raw ids
+    * depend on what was planned earlier in the JVM; normalized, a dump
+    * depends only on its own query's plan.
+    */
+  def normalize(plan: String): String = {
+    val renamed = scala.collection.mutable.HashMap.empty[String, String]
+    val next = scala.collection.mutable.HashMap.empty[String, Int].withDefaultValue(0)
+    Id.replaceAllIn(plan, m => renamed.getOrElseUpdate(m.matched, {
+      val kind = m.group(1)
+      next(kind) += 1
+      s"$kind${next(kind) - 1}"
+    }))
+  }
+
   def main(args: Array[String]): Unit = {
     require(args.length == 3, "usage: PlanDump <qCsv|all> <outDir> <suffix>")
     val qNames = ProbeQueries.resolve(args(0))
@@ -25,8 +45,8 @@ object PlanDump {
       val out = outDir.resolve(s"${n}_$suffix.txt")
       try {
         val df = graft.SparkEntry.queries(n)(spark, sfDir)
-        val plan = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
+        val plan = normalize(df.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode))
         Files.write(out, plan.getBytes(StandardCharsets.UTF_8))
         // one-line summary to stdout: exchange count + join strategies,
         // the two plan-shape facts the optimization guide keys on

@@ -32,8 +32,9 @@ class PipelineSpec extends SparkSpec {
     val byParam = pd.data.groupBy("parameter").count().as[(String, Long)].collect().toMap
     byParam.keySet shouldBe Set("temperature", "pressure") // "ghost" skipped
     byParam.values.foreach(_ shouldBe 50L)
-    pd.manifest.as[String].collect().sorted shouldBe
-      Array("T-SITE__pressure", "T-SITE__temperature")
+    // one artifact per resolved parameter, in configuration order
+    pd.artifacts shouldBe Seq("T-SITE__temperature", "T-SITE__pressure")
+    pd.manifest.as[String].collect().toSeq shouldBe pd.artifacts
     // flags only on the configured parameter; pressure all pass
     pd.data.filter(col("parameter") === "pressure")
       .select("flag").distinct().as[Int].collect() shouldBe Array(1)
@@ -48,8 +49,7 @@ class PipelineSpec extends SparkSpec {
     val byKey = pd.data.groupBy("ref_des", "parameter").count()
       .as[(String, String, Long)].collect().sortBy(_._2)
     byKey shouldBe Array(("T-SITE", "pressure", 50L), ("T-SITE", "temp|qc", 50L))
-    pd.manifest.as[String].collect().sorted shouldBe
-      Array("T-SITE__pressure", "T-SITE__temp|qc")
+    pd.artifacts shouldBe Seq("T-SITE__temp|qc", "T-SITE__pressure")
   }
 
   test("no resolvable parameter yields an EMPTY PlotData with the full schema") {
@@ -60,7 +60,9 @@ class PipelineSpec extends SparkSpec {
       Map.empty, threshold = 50)
     pd.data.count() shouldBe 0
     pd.data.columns.toSeq shouldBe Seq("ref_des", "parameter", "t", "value", "flag")
+    pd.artifacts shouldBe empty
     pd.manifest.count() shouldBe 0
+    pd.manifest.columns.toSeq shouldBe Seq("artifact")
   }
 
   test("lttb path tolerates null measurements (dropped like coarsen's avg)") {
@@ -129,6 +131,119 @@ class PipelineSpec extends SparkSpec {
       }
     }
     spark.read.parquet(s"$out/data").count() shouldBe 2000L
+  }
+
+  test("a resolved parameter with no rows in the window is indexed but writes no data") {
+    // pressure has no plottable value anywhere; temperature has rows
+    val noPressure = df.withColumn("press", lit(null).cast("double"))
+    val pd = Pipeline.plotData(noPressure, mkSite("lttb"), resolver, "time",
+      (lit("2024-01-01 00:00:00").cast("timestamp"),
+        lit("2024-01-01 23:59:59").cast("timestamp")),
+      Map.empty, threshold = 50)
+    pd.data.filter(col("parameter") === "pressure").count() shouldBe 0
+    pd.artifacts shouldBe Seq("T-SITE__temperature", "T-SITE__pressure")
+    val out = java.nio.file.Files.createTempDirectory("graft_sink").toString
+    Pipeline.writePlotData(pd, out)
+    spark.read.json(s"$out/index").select("artifact").as[String].collect().sorted shouldBe
+      Array("T-SITE__pressure", "T-SITE__temperature")
+    new java.io.File(s"$out/data/ref_des=T-SITE").listFiles().filter(_.isDirectory)
+      .map(_.getName) shouldBe Array("parameter=temperature")
+    // an empty window: every resolved parameter is listed, no data is
+    val empty = Pipeline.plotData(df, mkSite("lttb"), resolver, "time",
+      (lit("2023-01-01 00:00:00").cast("timestamp"),
+        lit("2023-01-02 00:00:00").cast("timestamp")),
+      Map.empty, threshold = 50)
+    empty.data.count() shouldBe 0
+    empty.manifest.as[String].collect().toSeq shouldBe
+      Seq("T-SITE__temperature", "T-SITE__pressure")
+    Pipeline.writePlotData(empty, out)
+    new java.io.File(s"$out/data/ref_des=T-SITE").exists() shouldBe false
+    spark.read.json(s"$out/index").select("artifact").as[String].collect().sorted shouldBe
+      Array("T-SITE__pressure", "T-SITE__temperature")
+  }
+
+  test("artifact names with quotes, backslashes and '|' round-trip through the index") {
+    val odd = "t\"e\\m|p"
+    val oddResolver = new VariableResolver(Map("time" -> Seq("ts"), odd -> Seq("temp"),
+      "pressure" -> Seq("press")))
+    val site = mkSite("coarsen").copy(refDes = "R\"D\\1", dataParameters = Seq("time", odd, "pressure"))
+    val pd = Pipeline.plotData(df, site, oddResolver, "time",
+      (lit("2024-01-01 00:00:00").cast("timestamp"),
+        lit("2024-01-01 23:59:59").cast("timestamp")),
+      Map.empty, threshold = 10)
+    pd.artifacts shouldBe Seq(s"R\"D\\1__$odd", "R\"D\\1__pressure")
+    val out = java.nio.file.Files.createTempDirectory("graft_sink").toString
+    Pipeline.writePlotData(pd, out)
+    spark.read.json(s"$out/index").select("artifact").as[String].collect().sorted shouldBe
+      pd.artifacts.sorted.toArray
+  }
+
+  test("writePlotData starts only the data write's jobs, and replaces the index") {
+    val pd = Pipeline.plotData(df, mkSite("lttb"), resolver, "time",
+      (lit("2024-01-01 00:00:00").cast("timestamp"),
+        lit("2024-01-01 23:59:59").cast("timestamp")),
+      Map.empty, threshold = 50)
+    pd.data.persist()
+    try {
+      pd.data.count()
+      val out = java.nio.file.Files.createTempDirectory("graft_sink").toString
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out, "index"))
+      java.nio.file.Files.write(java.nio.file.Paths.get(out, "index", "part-old.json"),
+        "{\"artifact\":\"T-SITE__retired\"}".getBytes("UTF-8"))
+      val (_, sinkJobs) = jobsStartedBy(Pipeline.writePlotData(pd, out))
+      val (_, dataJobs) = jobsStartedBy(
+        pd.data.repartition(col("ref_des"), col("parameter")).write.mode("overwrite")
+          .partitionBy("ref_des", "parameter").parquet(s"$out/data_only"))
+      dataJobs should not be empty
+      sinkJobs.size shouldBe dataJobs.size
+      new java.io.File(s"$out/index").list().filterNot(_.startsWith(".")).sorted shouldBe
+        Array("_SUCCESS", "part-00000.json")
+      spark.read.json(s"$out/index").select("artifact").as[String].collect().sorted shouldBe
+        Array("T-SITE__pressure", "T-SITE__temperature")
+    } finally pd.data.unpersist()
+  }
+
+  test("staleArtifacts against a plot-data manifest plans no exchange and runs one job") {
+    val pd = Pipeline.plotData(df, mkSite("lttb"), resolver, "time",
+      (lit("2024-01-01 00:00:00").cast("timestamp"),
+        lit("2024-01-01 23:59:59").cast("timestamp")),
+      Map.empty, threshold = 50)
+    val prevDir = java.nio.file.Files.createTempDirectory("graft_prev")
+    java.nio.file.Files.write(prevDir.resolve("part-0.json"),
+      Seq("T-SITE__pressure", "T-SITE__retired", null)
+        .map(a => if (a == null) "{}" else s"""{"artifact":"$a"}""").mkString("\n")
+        .getBytes("UTF-8"))
+    val previous = spark.read.schema("artifact STRING").json(prevDir.toString)
+    val stale = Pipeline.staleArtifacts(previous, pd.manifest)
+    stale.queryExecution.executedPlan.toString should not include "Exchange"
+    val (rows, jobs) = jobsStartedBy(stale.as[String].collect())
+    jobs should have size 1
+    // the left-anti join's rows, the null name included
+    rows.toSet shouldBe Set("T-SITE__retired", null)
+    rows.toSet shouldBe Pipeline.staleArtifacts(previous, pd.manifest.repartition(2))
+      .as[String].collect().toSet
+    // an empty manifest keeps every prior name
+    Pipeline.staleArtifacts(previous, pd.copy(artifacts = Nil).manifest).count() shouldBe 3
+  }
+
+  test("over a Zarr store, an lttb threshold at or above the scan's row count skips the sizes job") {
+    val zdf = spark.read.format("zarr").load(graft.sources.zarr.ZarrFixture.write())
+    val zResolver = new VariableResolver(Map(
+      "time" -> Seq("time"), "value" -> Seq("value"), "temperature" -> Seq("temp")))
+    val site = mkSite("lttb").copy(dataParameters = Seq("time", "value", "temperature"))
+    // rows 600..949 are in the window; the pruned scan keeps chunks 5..9, 450 rows
+    val window = (lit("1970-01-01 10:00:00").cast("timestamp"),
+      lit("1970-01-01 23:00:00").cast("timestamp"))
+    def build(threshold: Int) =
+      jobsStartedBy(Pipeline.plotData(zdf, site, zResolver, "time", window, Map.empty, threshold))
+    val (bounded, noJobs) = build(450)
+    noJobs shouldBe empty
+    val (sized, sizesJobs) = build(449)
+    sizesJobs should not be empty
+    // both take the identity path (no series is over 350 rows): same rows
+    def rows(pd: Pipeline.PlotData) = pd.data.collect().map(_.toString).sorted.toSeq
+    rows(bounded) shouldBe rows(sized)
+    rows(bounded) should have size (350 * 2 - (600 until 950).count(_ % 97 == 3))
   }
 
   test("staleArtifacts is the K3 set difference") {

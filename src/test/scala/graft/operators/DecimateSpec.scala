@@ -186,11 +186,36 @@ class DecimateSpec extends SparkSpec {
     plan should not include "Exchange"
   }
 
+  test("downsample with a series bound at or under the threshold starts no job") {
+    val small = tierFrame.filter(col("k") === "small" || col("k").isNull)
+    val (built, jobs) = jobsStartedBy(
+      Decimate.downsample(small, "k", "x", "y", tierThreshold,
+        maxSeriesRows = Some(tierThreshold.toLong)))
+    jobs shouldBe empty
+    sortedRows(built) shouldBe sortedRows(Decimate.downsample(small, "k", "x", "y", tierThreshold))
+    built.queryExecution.executedPlan.toString should not include "Exchange"
+  }
+
+  test("downsample with a series bound above the threshold sizes the series as before") {
+    for ((df, bound) <- Seq(tierFrame -> 1010L, tierFrame -> Long.MaxValue,
+        tierFrame.filter(col("k") === "small") -> (tierThreshold + 1L))) {
+      val (built, jobs) = jobsStartedBy(
+        Decimate.downsample(df, "k", "x", "y", tierThreshold, maxSeriesRows = Some(bound)))
+      withClue(s"bound $bound: ") {
+        jobs should not be empty // the sizes collect
+        sortedRows(built) shouldBe sortedRows(Decimate.downsample(df, "k", "x", "y", tierThreshold))
+      }
+    }
+  }
+
   test("downsample rejects a non-positive threshold or cap factor") {
     an[IllegalArgumentException] should be thrownBy
       Decimate.downsample(tierFrame, "k", "x", "y", threshold = 0)
     an[IllegalArgumentException] should be thrownBy
       Decimate.downsample(tierFrame, "k", "x", "y", threshold = 10, maxPointsFactor = 0)
+    an[IllegalArgumentException] should be thrownBy
+      Decimate.downsample(tierFrame, "k", "x", "y", threshold = 10, maxPointsFactor = 0,
+        maxSeriesRows = Some(1L))
   }
 
   test("downsample rejects more series than the driver sizes collect allows") {

@@ -415,42 +415,6 @@ class DedupSpec extends SparkSpec {
     (Dedup.spreadForKernelStage(par, minRowsPerPartition = 16384) eq par) shouldBe true
   }
 
-  /** `body`'s result and the ids of the Spark jobs it starts on this
-    * thread. A sentinel job submitted afterwards drains the listener
-    * bus: a listener receives events in order, so every job `body`
-    * started is recorded first.
-    */
-  private def jobsStartedBy[A](body: => A): (A, Seq[Int]) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val group = s"jobs-started-by-${java.util.UUID.randomUUID}"
-    val sentinel = s"$group-sentinel"
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Int]
-    val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        Option(j.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => jobs.add(j.jobId)
-          case Some(`sentinel`) => sentinelSeen.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    val result = try {
-      sc.setJobGroup(group, group)
-      val r = body
-      sc.setJobGroup(sentinel, sentinel)
-      sc.parallelize(Seq(1), 1).count()
-      sentinelSeen.await(60, java.util.concurrent.TimeUnit.SECONDS) shouldBe true
-      r
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-    import scala.jdk.CollectionConverters._
-    (result, jobs.asScala.toSeq)
-  }
-
   test("incrementalDedup drops seen content and intra-batch copies") {
     val rnd = new scala.util.Random(31)
     val seenRows = Seq((1L, "known text alpha"), (2L, "known text beta")) ++
