@@ -5,13 +5,13 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan, Project}
-import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
+import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, DataSourceV2ScanRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 import graft.functions.Qartod
-import graft.operators.{Decimate, Reconcile}
+import graft.operators.Decimate
 import graft.sources.ConfigRegistry.{SiteConfig, VariableResolver}
 import graft.sources.zarr.ZarrDataSource
 
@@ -35,9 +35,9 @@ import graft.sources.zarr.ZarrDataSource
   * way, and builds its index from what it wrote, qaqc/index.py:20-50).
   * So the index is written from the driver, no Spark job computes the
   * manifest, and the reconcile against it is one filter job. When the
-  * source is a Zarr scan, its row-count statistic bounds every series,
-  * and an LTTB site whose bound is under the threshold skips
-  * `Decimate.downsample`'s sizes job.
+  * source is a Zarr scan, the rows of its surviving chunks bound every
+  * series, and an LTTB site whose bound is at or under the threshold
+  * skips `Decimate.downsample`'s sizes job.
   */
 object Pipeline {
 
@@ -68,7 +68,8 @@ object Pipeline {
     val cols = df.columns.toSeq
     val timeCol = resolver.resolve(timeParam, cols)
       .getOrElse(sys.error(s"unresolvable time parameter: $timeParam"))
-    val params = site.dataParameters.filterNot(_ == timeParam)
+    // a parameter listed twice is one series and one artifact
+    val params = site.dataParameters.filterNot(_ == timeParam).distinct
       .flatMap(p => resolver.resolve(p, cols).map(p -> _))
     // no resolvable parameter → an EMPTY PlotData with the full schema,
     // honoring the documented logs-and-continues contract (an
@@ -77,7 +78,7 @@ object Pipeline {
       val spark = df.sparkSession
       return PlotData(spark.createDataFrame(spark.sparkContext.emptyRDD[Row], PlotDataSchema), Nil)
     }
-    val artifacts = params.map { case (canonical, _) => s"${site.refDes}__$canonical" }.distinct
+    val artifacts = params.map { case (canonical, _) => s"${site.refDes}__$canonical" }
     val sliced = df.filter(col(timeCol) >= window._1 && col(timeCol) <= window._2)
     // melt to long form in ONE scan: inline explodes each row into N
     // (parameter, value) rows. A union of per-parameter projections reads
@@ -127,10 +128,11 @@ object Pipeline {
     PlotData(decimated.withColumn("flag", flagExpr), artifacts)
   }
 
-  /** An upper bound on the rows of `df` known without a job: the row
-    * count a Zarr scan reports for its surviving chunks, when only
-    * filters and projections (neither adds rows) sit above that scan in
-    * the optimized plan. None for any other plan.
+  /** An upper bound on the rows of `df` known without a job: the rows
+    * of a Zarr scan's surviving chunks, when only filters and
+    * projections (neither adds rows) sit above that scan in the
+    * optimized plan. None for any other plan, whose optimization is
+    * skipped: only a plan over one Zarr store can have a bound.
     */
   private def rowBound(df: DataFrame): Option[Long] = {
     def leafRows(p: LogicalPlan): Option[Long] = p match {
@@ -139,22 +141,24 @@ object Pipeline {
       case scan: DataSourceV2ScanRelation => ZarrDataSource.rowUpperBound(scan.scan)
       case _ => None
     }
-    leafRows(df.queryExecution.optimizedPlan)
+    df.queryExecution.analyzed.collectLeaves() match {
+      case Seq(r: DataSourceV2Relation) if ZarrDataSource.isZarr(r.table) =>
+        leafRows(df.queryExecution.optimizedPlan)
+      case _ => None
+    }
   }
 
   /** K3 wrapper: artifacts present in the prior manifest but not
-    * regenerated this run. A driver-held current manifest (a local
-    * relation, as [[PlotData.manifest]] is) is applied as an IN-list
-    * filter on the prior one: the left-anti join's rows (a null name
-    * matches nothing, so it stays stale) with no exchange, in one job.
+    * regenerated this run — the reference's set difference of name
+    * lists (qaqc/plots.py:500). A manifest is one name per artifact, so
+    * the current one is collected to the driver and applied as an
+    * IN-list filter on the prior one: the left-anti join's rows (a null
+    * name matches nothing, so it stays stale) with no exchange.
     */
-  def staleArtifacts(previous: DataFrame, current: DataFrame): DataFrame =
-    current.queryExecution.analyzed match {
-      case _: LocalRelation =>
-        val names = current.select("artifact").collect().flatMap(r => Option(r.getString(0)))
-        previous.filter(col("artifact").isNull || !col("artifact").isInCollection(names))
-      case _ => Reconcile.staleOutputs(previous, current, "artifact")
-    }
+  def staleArtifacts(previous: DataFrame, current: DataFrame): DataFrame = {
+    val names = current.select("artifact").collect().flatMap(r => Option(r.getString(0)))
+    previous.filter(col("artifact").isNull || !col("artifact").isInCollection(names))
+  }
 
   /** K2/K5 sink: plot data laid out `<out>/data/ref_des=<site>/parameter=
     * <p>/…` (the object-store organize step — partition values become the

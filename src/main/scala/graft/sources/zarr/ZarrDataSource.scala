@@ -43,11 +43,11 @@ import org.apache.spark.util.SerializableConfiguration
   *    `TimeLayout.readSpan` (a two-day dashboard span over a year-long
   *    store touches ~0.5% of chunks). Filters stay in the post-scan
   *    plan (pruning is chunk-granular, never claimed exact).
-  *  - **row-count statistic**: the scan reports `numRows`, the row total
-  *    of the chunks that survive pruning — an upper bound on what it
-  *    returns, known at planning without a job (`Pipeline.plotData`
-  *    bounds its series lengths with it). `sizeInBytes` stays
-  *    unreported, so join and broadcast choices are unchanged.
+  *  - **row bound**: [[ZarrDataSource.rowUpperBound]] gives a scan's
+  *    `keptRows`, the row total of the chunks that survive pruning — an
+  *    upper bound on what it returns, known at planning without a job
+  *    (`Pipeline.plotData` bounds its series lengths with it). The scan
+  *    reports no statistics to Spark, so Catalyst plans as before.
   *  - **column pruning → array pruning**: unprojected arrays' chunk
   *    files are never opened (each column is its own file set — Zarr is
   *    columnar on disk).
@@ -85,12 +85,14 @@ class ZarrDataSource extends TableProvider with DataSourceRegister {
 }
 
 object ZarrDataSource {
-  /** The row count `scan` reports when it is a Zarr scan — the rows of
-    * its surviving chunks, so an upper bound on the rows it returns — and
-    * None for any other source, whose statistics may be estimates.
+  /** Whether `table` is a Zarr store's table. */
+  def isZarr(table: Table): Boolean = table.isInstanceOf[ZarrTable]
+
+  /** The rows of `scan`'s surviving chunks when it is a Zarr scan — an
+    * upper bound on the rows it returns — and None for any other scan.
     */
   def rowUpperBound(scan: Scan): Option[Long] = scan match {
-    case z: ZarrScan => Some(z.estimateStatistics().numRows().getAsLong)
+    case z: ZarrScan => Some(z.keptRows)
     case _ => None
   }
 }
@@ -422,7 +424,7 @@ private[zarr] class ZarrScan(path: String, required: Seq[ZarrMeta.ArrayMeta],
                              coordBounds: Option[(Double, Double)],
                              sorted: SortedMode,
                              conf: Configuration)
-    extends Scan with Batch with SupportsReportStatistics {
+    extends Scan with Batch {
 
   override def readSchema(): StructType =
     StructType(required.map(m => StructField(m.name, m.sparkType, nullable = true)))
@@ -439,21 +441,15 @@ private[zarr] class ZarrScan(path: String, required: Seq[ZarrMeta.ArrayMeta],
     keptChunks.map(c => ZarrInputPartition(path, c): InputPartition).toArray
 
   /** The row total of the chunks that survive pruning: an upper bound
-    * on the rows the scan returns (the coordinate filter stays in
-    * the plan). `sizeInBytes` is left unreported, so join and broadcast
-    * planning see Spark's default size exactly as without statistics.
+    * on the rows the scan returns (the coordinate filter stays in the
+    * plan).
     */
-  override def estimateStatistics(): Statistics = {
-    val rows = keptChunks.iterator.map(c => ZarrReader.rowsInChunk(coord, c).toLong).sum
-    new Statistics {
-      override def sizeInBytes(): java.util.OptionalLong = java.util.OptionalLong.empty()
-      override def numRows(): java.util.OptionalLong = java.util.OptionalLong.of(rows)
-    }
-  }
+  private[zarr] lazy val keptRows: Long =
+    keptChunks.iterator.map(c => ZarrReader.rowsInChunk(coord, c).toLong).sum
 
   /** The record chunks that survive pruning, ascending, computed once
-    * per scan: the partitions and the row-count statistic read the same
-    * list. Pruning strategy per [[SortedMode]]:
+    * per scan: the partitions and [[keptRows]] read the same list.
+    * Pruning strategy per [[SortedMode]]:
     *
     * The EXACT path reads the coordinate array once at planning: per
     * chunk, decode and take [min, max] — exact bounds with no

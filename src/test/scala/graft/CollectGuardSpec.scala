@@ -40,7 +40,7 @@ class CollectGuardSpec extends AnyFunSuite with Matchers {
     "graft/FixedScatter.scala" -> (2,
       "per-(site, panel) render stats over an already-aggregated broadcast-size slice"),
     "graft/Pipeline.scala" -> (1,
-      "staleArtifacts: the names of a local-relation manifest, already held by the driver"),
+      "staleArtifacts: the current manifest's names, one per artifact (driver-sized)"),
     "graft/ProfileGrid.scala" -> (3,
       "per-profile grid stats / axis bounds over per-profile aggregates"),
     "graft/ProfileScatter.scala" -> (2,

@@ -246,6 +246,24 @@ class PipelineSpec extends SparkSpec {
     rows(bounded) should have size (350 * 2 - (600 until 950).count(_ % 97 == 3))
   }
 
+  test("a parameter listed twice is one series, so the Zarr row bound still holds") {
+    val zdf = spark.read.format("zarr").load(graft.sources.zarr.ZarrFixture.write())
+    val zResolver = new VariableResolver(Map("time" -> Seq("time"), "value" -> Seq("value")))
+    // 350 rows in the window, 450 in the pruned scan: a threshold of 500
+    // is over the bound but under twice the window's rows
+    val window = (lit("1970-01-01 10:00:00").cast("timestamp"),
+      lit("1970-01-01 23:00:00").cast("timestamp"))
+    def build(params: Seq[String]) = Pipeline.plotData(zdf,
+      mkSite("lttb").copy(dataParameters = params), zResolver, "time", window, Map.empty, 500)
+    val twice = build(Seq("time", "value", "value"))
+    twice.artifacts shouldBe Seq("T-SITE__value")
+    val perSeries = twice.data.groupBy("parameter").count().as[(String, Long)].collect()
+    perSeries.map(_._1) shouldBe Array("value")
+    perSeries.head._2 should be <= 500L
+    def rows(pd: Pipeline.PlotData) = pd.data.collect().map(_.toString).sorted.toSeq
+    rows(twice) shouldBe rows(build(Seq("time", "value")))
+  }
+
   test("staleArtifacts is the K3 set difference") {
     val prev = Seq("a", "b", "c").toDF("artifact")
     val cur = Seq("b", "c", "d").toDF("artifact")

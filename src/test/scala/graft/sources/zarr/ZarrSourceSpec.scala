@@ -93,33 +93,30 @@ class ZarrSourceSpec extends SparkSpec {
     viaPush should not be empty
   }
 
-  test("the scan reports its surviving chunks' row count and no size") {
-    import org.apache.spark.sql.connector.read.SupportsReportStatistics
+  test("a Zarr scan's row bound is its surviving chunks' row count") {
     // rows 600.. as above: chunks 5..9 under Auto, 6..9 exact, of 950 rows
     // in chunks of 100 (the last one 50)
-    def stats(mode: SortedMode, fromSecond: Option[Long]) = {
+    def bound(mode: SortedMode, fromSecond: Option[Long]) = {
       val sb = new ZarrScanBuilder(store, "time", ZarrFixture.metas(store), sorted = mode)
       fromSecond.foreach(s => sb.pushFilters(Array(
         org.apache.spark.sql.sources.GreaterThanOrEqual(
           "time", java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(s))))))
       val scan = sb.build()
-      val st = scan.asInstanceOf[SupportsReportStatistics].estimateStatistics()
-      (st.numRows().getAsLong, st.sizeInBytes().isPresent,
-        scan.toBatch.planInputPartitions().length)
+      (ZarrDataSource.rowUpperBound(scan), scan.toBatch.planInputPartitions().length)
     }
-    stats(SortedMode.Auto, None) shouldBe ((950L, false, 10))
-    stats(SortedMode.Auto, Some(600 * 60L)) shouldBe ((450L, false, 5))
-    stats(SortedMode.Exact, Some(600 * 60L)) shouldBe ((350L, false, 4))
-    // through the optimizer: the pruned scan's row count is the leaf's,
-    // and its size is Spark's default, as for a source without statistics
+    bound(SortedMode.Auto, None) shouldBe ((Some(950L), 10))
+    bound(SortedMode.Auto, Some(600 * 60L)) shouldBe ((Some(450L), 5))
+    bound(SortedMode.Exact, Some(600 * 60L)) shouldBe ((Some(350L), 4))
+    // through the optimizer: the pruned scan's bound is the leaf's, and
+    // Spark sees no statistics from the source
     val plan = spark.read.format("zarr").load(store)
       .filter(col("time") >= lit("1970-01-01 10:00:00").cast("timestamp"))
       .queryExecution.optimizedPlan
     val leaf = plan.collectLeaves().head
       .asInstanceOf[org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation]
-    leaf.stats.rowCount shouldBe Some(BigInt(450))
-    leaf.stats.sizeInBytes shouldBe BigInt(spark.sessionState.conf.defaultSizeInBytes)
     ZarrDataSource.rowUpperBound(leaf.scan) shouldBe Some(450L)
+    leaf.stats.rowCount shouldBe None
+    leaf.stats.sizeInBytes shouldBe BigInt(spark.sessionState.conf.defaultSizeInBytes)
   }
 
   test("sortedCoord binary-search pruning matches the exact full-scan pruning") {
