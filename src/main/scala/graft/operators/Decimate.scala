@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -18,14 +19,13 @@ import org.apache.spark.sql.functions._
   * Scale: stride and coarsen are pure window/groupBy plans. LTTB is
   * inherently sequential per series (each selected point depends on the
   * previous), so it runs as a per-series sorted-group kernel
-  * (`flatMapSortedGroups`). The reference bounds the per-series input to
-  * `threshold × 10` rows via pre-striding; we keep that contract, so a
-  * series always fits comfortably in one task even at 100 TB total.
-  * [[downsample]] sizes every series first and skips the position pass
-  * and the LTTB shuffle when no series is over the threshold (the
-  * reference's default 5,000,000-point threshold leaves most series as
-  * is); a caller-supplied bound on the series lengths skips the sizing
-  * too.
+  * (`flatMapSortedGroups`). Like the reference, [[downsample]] pre-strides
+  * each series to at most `threshold × 10` points, inside LTTB's sorted
+  * group, so the points buffered per series stay bounded at any size.
+  * [[downsample]] sizes every series first and skips the LTTB shuffle
+  * when no series is over the threshold (the reference's default
+  * 5,000,000-point threshold leaves most series as is); a caller-supplied
+  * bound on the series lengths skips the sizing too.
   */
 object Decimate {
 
@@ -148,48 +148,57 @@ object Decimate {
     out
   }
 
-  /** The plottable `(key, x, y)` projection shared by [[lttb]] and the
-    * identity path of [[downsample]]: key as string, x and y as double,
-    * null points dropped — they are unplottable and would crash the
-    * non-nullable tuple deserializer in [[lttb]]; dropping them mirrors
-    * the coarsen path, whose avg() skips nulls.
-    */
-  private def points(df: DataFrame, keyCol: String, xCol: String, yCol: String): DataFrame =
+  /** `(key, x, y)` with key as string, x and y as double. */
+  private def projected(df: DataFrame, keyCol: String, xCol: String, yCol: String): DataFrame =
     df.select(
-        col(keyCol).cast("string").as("key"),
-        col(xCol).cast("double").as("x"),
-        col(yCol).cast("double").as("y"))
+      col(keyCol).cast("string").as("key"),
+      col(xCol).cast("double").as("x"),
+      col(yCol).cast("double").as("y"))
+
+  /** [[projected]] without the rows [[lttb]] drops: the identity path. */
+  private def points(df: DataFrame, keyCol: String, xCol: String, yCol: String): DataFrame =
+    projected(df, keyCol, xCol, yCol)
       .filter(col("key").isNotNull && col("x").isNotNull && col("y").isNotNull)
 
   /** C1 distributed LTTB: decimate each series (identified by `keyCol`) to
     * `threshold` points. Input columns: `keyCol` (string), `xCol`, `yCol`
-    * (numeric). Per-series data is gathered into its task via a sorted group
-    * — bounded by the pre-stride contract (`strideSample` first when a
-    * series exceeds `threshold * maxPointsFactor`).
+    * (numeric). Rows with a null key, x or y are dropped. Each series is
+    * gathered whole into one task; [[downsample]] pre-strides long ones.
     */
   def lttb(df: DataFrame, keyCol: String, xCol: String, yCol: String,
-           threshold: Int): DataFrame = {
+           threshold: Int): DataFrame =
+    stridedLttb(df, keyCol, xCol, yCol, threshold, None)
+
+  /** The one LTTB body. Each series' rows reach one sorted group in (x, y)
+    * order, nulls first (x alone would make the first-tie-wins argmax
+    * run-dependent). The group keeps positions 0, k, 2k, … with `k` the
+    * key's stride (default 1), drops kept rows with a null x or y — they
+    * count as positions but are unplottable — and buffers only the kept
+    * points, as primitive arrays, for [[lttbKernel]].
+    */
+  private def stridedLttb(df: DataFrame, keyCol: String, xCol: String, yCol: String,
+                          threshold: Int, strides: Option[Broadcast[Map[String, Long]]]): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    points(df, keyCol, xCol, yCol)
-      .as[(String, Double, Double)]
+    projected(df, keyCol, xCol, yCol)
+      .filter(col("key").isNotNull)
+      .as[(String, java.lang.Double, java.lang.Double)]
       .groupByKey(_._1)
-      // Sort by (x, y) — x alone leaves duplicate-x rows in nondeterministic
-      // relative order across runs, which would make the first-tie-wins
-      // argmax pick run-dependent.
-      .flatMapSortedGroups($"x", $"y") { (key: String, it: Iterator[(String, Double, Double)]) =>
-        val pts = it.toArray
-        lttbKernel(pts.map(_._2), pts.map(_._3), threshold)
-          .iterator.map { case (x, y) => (key, x, y) }
+      .flatMapSortedGroups($"x", $"y") {
+        (key: String, it: Iterator[(String, java.lang.Double, java.lang.Double)]) =>
+          val stride = strides.fold(1L)(_.value.getOrElse(key, 1L))
+          val xs = Array.newBuilder[Double]
+          val ys = Array.newBuilder[Double]
+          var pos = 0L
+          it.foreach { case (_, x, y) =>
+            if (pos % stride == 0 && x != null && y != null) { xs += x; ys += y }
+            pos += 1
+          }
+          lttbKernel(xs.result(), ys.result(), threshold)
+            .iterator.map { case (x, y) => (key, x, y) }
       }
       .toDF(keyCol, xCol, yCol)
   }
-
-  /** Over-cap series whose strides [[downsample]] inlines into the plan
-    * as a map literal; past this many it broadcast-joins them instead, so
-    * the plan does not grow with the number of series.
-    */
-  private[operators] val MaxStrideLiteral = 1000
 
   /** The reference's full downsample contract (qaqc/decimate.py:166-229):
     * pre-stride any series longer than `cap = threshold * maxPointsFactor`
@@ -203,14 +212,13 @@ object Decimate {
     * and rejected past the cap — and the largest series picks the path:
     *  - identity: every series has at most `threshold` rows, so LTTB
     *    returns its input and the output is the null-filtered projection:
-    *    no shuffle, no position pass.
-    *  - stride: otherwise. The two-pass position plan
-    *    ([[OrderedPosition.withPosition]]; never a per-series window, which
-    *    would move each series onto one task before the stride runs) keeps
-    *    every `stride`-th row, with each over-cap series' stride taken from
-    *    the collected sizes (a map literal up to [[MaxStrideLiteral]]
-    *    series, a broadcast join past it; every other series keeps stride
-    *    1), then [[lttb]].
+    *    no shuffle.
+    *  - stride: otherwise. The over-cap series' strides are broadcast as
+    *    one map, and LTTB strides each series inside its sorted group: one
+    *    hash exchange, no job beyond the sizes collect at build time. The
+    *    trade-off: every row of a series passes through one task's sort.
+    *    Spark's sorter spills and only `cap` strided points are buffered,
+    *    so memory stays bounded, but one core sorts a whole series.
     * Both paths return the same rows as striding and decimating each
     * series unconditionally.
     *
@@ -228,19 +236,17 @@ object Decimate {
       requirePositive(threshold, maxPointsFactor)
       points(df, keyCol, xCol, yCol).toDF(keyCol, xCol, yCol)
     } else downsampleBounded(df, keyCol, xCol, yCol, threshold, maxPointsFactor,
-      OrderedPosition.MaxOffsetRows, MaxStrideLiteral)
+      OrderedPosition.MaxOffsetRows)
 
   private def requirePositive(threshold: Int, maxPointsFactor: Int): Unit =
     require(threshold > 0 && maxPointsFactor > 0,
       s"Decimate.downsample: threshold ($threshold) and maxPointsFactor " +
         s"($maxPointsFactor) must be positive")
 
-  /** [[downsample]] with its driver bounds as parameters: at most
-    * `maxSeries` series, strides inlined up to `maxStrideLiteral` series.
-    */
+  /** [[downsample]] with its driver bound, at most `maxSeries` series. */
   private[operators] def downsampleBounded(df: DataFrame, keyCol: String, xCol: String,
                                            yCol: String, threshold: Int, maxPointsFactor: Int,
-                                           maxSeries: Int, maxStrideLiteral: Int): DataFrame = {
+                                           maxSeries: Int): DataFrame = {
     requirePositive(threshold, maxPointsFactor)
     val cap = threshold.toLong * maxPointsFactor
     // a null key is never plotted, so it never picks the path; grouping
@@ -255,24 +261,11 @@ object Decimate {
     val maxN = sizes.iterator.map(_.getLong(1)).maxOption.getOrElse(0L)
     if (maxN <= threshold) points(df, keyCol, xCol, yCol).toDF(keyCol, xCol, yCol)
     else {
-      val strides = sizes.toSeq.map(r => r.getString(0) -> r.getLong(1))
+      val strides = sizes.iterator.map(r => r.getString(0) -> r.getLong(1))
         .collect { case (k, n) if n > cap => k -> (n + cap - 1) / cap } // ceil(n / cap)
-      val positioned = OrderedPosition
-        .withPosition(df, Seq(keyCol), Seq(xCol, yCol), "__pos")
-      val strided =
-        if (strides.length <= maxStrideLiteral) {
-          val stride = coalesce(typedLit(strides.toMap).apply(col(keyCol).cast("string")), lit(1L))
-          positioned.filter(col("__pos") % stride === 0)
-        } else {
-          val spark = df.sparkSession
-          import spark.implicits._
-          val table = spark.sparkContext.parallelize(strides).toDF("__skey", "__stride")
-          positioned
-            .join(broadcast(table), col(keyCol).cast("string") === col("__skey"), "left")
-            .filter(col("__pos") % coalesce(col("__stride"), lit(1L)) === 0)
-            .drop("__skey", "__stride")
-        }
-      lttb(strided.drop("__pos"), keyCol, xCol, yCol, threshold)
+        .toMap
+      stridedLttb(df, keyCol, xCol, yCol, threshold,
+        Some(df.sparkSession.sparkContext.broadcast(strides)))
     }
   }
 }

@@ -8,23 +8,29 @@ import java.nio.file.{Files, Paths}
   * optimization-round evidence trail (`plans/r19/<q>_{before,after}.txt`).
   *
   * Usage: runMain graft.tools.PlanDump <qCsv|all> <outDir> <suffix>
-  * writes `<outDir>/<q>_<suffix>.txt` per query, with its ids normalized
-  * (see [[normalize]]) so a dump does not depend on the queries dumped
-  * before it in the same JVM.
+  * writes `<outDir>/<q>_<suffix>.txt` per query, normalized (see
+  * [[normalize]]) so a dump depends on neither the JVM nor the queries
+  * dumped before it: `diff -r` two commits' dumps to see changed plans.
   */
 object PlanDump {
-  private val Id = "(#|plan_id=)(\\d+)".r
+  private val Id = "(#|plan_id=|RDD\\[)(\\d+)".r
 
-  /** `plan` with its expression ids (`#123`) and exchange plan ids
-    * (`plan_id=45`) renumbered from 0 in order of first appearance, each
-    * kind on its own counter. Spark allocates both JVM-wide, so raw ids
-    * depend on what was planned earlier in the JVM; normalized, a dump
-    * depends only on its own query's plan.
+  /** Per-JVM tokens and their masks: random-suffixed temp directories (the
+    * gate's Zarr stores), lambda class names, identity hashes (`[D@3514d1a4`). */
+  private val JvmTokens = Seq("/tmp/[A-Za-z_0-9]*[0-9]{6,}".r -> "/tmp/T",
+    "Lambda\\$[0-9]+/0x[0-9a-f]+".r -> "Lambda", "@[0-9a-f]+\\b".r -> "@H")
+
+  /** `plan` with its [[JvmTokens]] masked and its expression ids (`#123`),
+    * exchange plan ids (`plan_id=45`) and RDD ids (`RDD[739]`) renumbered
+    * from 0 in order of first appearance, each kind on its own counter.
+    * Spark allocates all three JVM-wide, so raw ids depend on what ran
+    * earlier in the JVM; normalized, a dump depends only on its own plan.
     */
   def normalize(plan: String): String = {
+    val masked = JvmTokens.foldLeft(plan) { case (p, (t, mask)) => t.replaceAllIn(p, mask) }
     val renamed = scala.collection.mutable.HashMap.empty[String, String]
     val next = scala.collection.mutable.HashMap.empty[String, Int].withDefaultValue(0)
-    Id.replaceAllIn(plan, m => renamed.getOrElseUpdate(m.matched, {
+    Id.replaceAllIn(masked, m => renamed.getOrElseUpdate(m.matched, {
       val kind = m.group(1)
       next(kind) += 1
       s"$kind${next(kind) - 1}"

@@ -154,21 +154,29 @@ class DecimateSpec extends SparkSpec {
   test("downsample: every path returns the stride-then-LTTB rows exactly") {
     def sized(df: DataFrame, threshold: Int) =
       Decimate.downsample(df, "k", "x", "y", threshold)
-    // strides broadcast-joined instead of inlined as a map literal
-    def joined(df: DataFrame, threshold: Int) =
-      Decimate.downsampleBounded(df, "k", "x", "y", threshold, 10,
-        maxSeries = 100, maxStrideLiteral = 0)
     val underCap = tierFrame.filter(col("k") =!= "big" || col("k").isNull)
+    // more than 1000 over-cap series of 31-60 rows at threshold 3 (cap 30),
+    // some with null x / y rows
+    val manySeries = {
+      val rnd = new scala.util.Random(11)
+      val rows = (0 until 1200).flatMap { s =>
+        (0 until 31 + s % 30).map { i =>
+          val x: java.lang.Double = if ((s + i) % 41 == 7) null else (i / 2).toDouble
+          val y: java.lang.Double = if ((s + i) % 37 == 3) null else rnd.nextInt(9).toDouble
+          Row(s"s$s", x, y)
+        }
+      }
+      spark.createDataFrame(spark.sparkContext.parallelize(rows, 6), tierFrame.schema)
+    }
     val cases = Seq(
-      "stride" -> (sized _, tierFrame, tierThreshold),
-      "stride, joined strides" -> (joined _, tierFrame, tierThreshold),
-      "stride, every series under the cap" -> (sized _, underCap, tierThreshold),
-      "identity" -> (sized _, tierFrame.filter(col("k") === "small" || col("k").isNull),
+      "stride" -> (tierFrame, tierThreshold),
+      "stride, every series under the cap" -> (underCap, tierThreshold),
+      "identity" -> (tierFrame.filter(col("k") === "small" || col("k").isNull),
         tierThreshold),
-      "stride, threshold < 3" -> (sized _, tierFrame, 2),
-      "stride, threshold < 3, joined strides" -> (joined _, tierFrame, 2))
-    for ((path, (run, df, threshold)) <- cases) withClue(s"$path: ") {
-      val got = sortedRows(run(df, threshold))
+      "stride, threshold < 3" -> (tierFrame, 2),
+      "stride, 1200 over-cap series" -> (manySeries, 3))
+    for ((path, (df, threshold)) <- cases) withClue(s"$path: ") {
+      val got = sortedRows(sized(df, threshold))
       got shouldBe sortedRows(strideThenLttb(df, threshold))
       got.map(_._1) should not contain (null: String)
     }
@@ -184,6 +192,21 @@ class DecimateSpec extends SparkSpec {
     val plan = Decimate.downsample(small, "k", "x", "y", tierThreshold)
       .queryExecution.executedPlan.toString
     plan should not include "Exchange"
+  }
+
+  test("downsample's stride path starts no job beyond the sizes collect and plans one exchange") {
+    val (_, sizesJobs) = jobsStartedBy(
+      tierFrame.filter(col("k").isNotNull)
+        .groupBy(col("k")).agg(count(lit(1)).as("__n"))
+        .select(col("k").cast("string"), col("__n"))
+        .limit(OrderedPosition.MaxOffsetRows + 1).collect())
+    val (built, jobs) = jobsStartedBy(
+      Decimate.downsample(tierFrame, "k", "x", "y", tierThreshold))
+    jobs.length shouldBe sizesJobs.length
+    val plan = built.queryExecution.executedPlan.toString
+    "Exchange".r.findAllIn(plan).size shouldBe 1
+    plan should include("Exchange hashpartitioning")
+    plan should not include "rangepartitioning"
   }
 
   test("downsample with a series bound at or under the threshold starts no job") {
@@ -221,8 +244,7 @@ class DecimateSpec extends SparkSpec {
   test("downsample rejects more series than the driver sizes collect allows") {
     // three non-null series ("small", "mid", "big"); the null key is not one
     def bounded(maxSeries: Int) =
-      Decimate.downsampleBounded(tierFrame, "k", "x", "y", tierThreshold, 10,
-        maxSeries, Decimate.MaxStrideLiteral)
+      Decimate.downsampleBounded(tierFrame, "k", "x", "y", tierThreshold, 10, maxSeries)
     val e = the[IllegalArgumentException] thrownBy bounded(2)
     e.getMessage should include("more than 2 series")
     bounded(3).count() shouldBe 13 + 2 * tierThreshold
