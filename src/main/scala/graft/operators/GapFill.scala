@@ -6,8 +6,10 @@ import org.apache.spark.sql.functions._
 
 /** Gap handling and interpolation (SURVEY §2.6 W3/W4, §2.9 C2/C3):
   * window-function based linear interpolation — the classic Spark gap-fill
-  * fragment the reference does with `interpolate_na` / `np.interp`.
-  * All pure window plans: one shuffle on the series key.
+  * fragment the reference does with `interpolate_na` / `np.interp` — with
+  * the reference's interpolated-cell gap masking (W3) as
+  * [[interpolateLinear]]'s `maxGap`. All pure window plans: one shuffle on
+  * the series key.
   */
 object GapFill {
 
@@ -101,9 +103,9 @@ object GapFill {
     * null-at-last-anchor edge) is bit-identical — spec-pinned against
     * the union+window composition, NaN/empty/exact-hit cases included.
     *
-    * Contract (same as [[interpolateLinearRanged]]): `orderCol` numeric
-    * non-null DOUBLE, unique per key (pre-aggregate ties away, as q41
-    * does); `keyCols` non-empty high-cardinality keys.
+    * Contract: `orderCol` numeric non-null DOUBLE, unique per key (ties
+    * make the interpolation order-dependent, so pre-aggregate them away,
+    * as q41 does); `keyCols` non-empty high-cardinality keys.
     */
   def interpolateOntoStepGrid(obs: DataFrame, keyCols: Seq[String],
                               orderCol: String, valueCol: String,
@@ -174,169 +176,6 @@ object GapFill {
         (col("__nat") - col("__pat")))
     exploded.filter(keep)
       .select((keys :+ tg.as(orderCol) :+ vInterp.as(outCol)): _*)
-  }
-
-  /** [[interpolateLinear]] for the FEW-BIG-SERIES shape, where a per-key
-    * window would serialize each series onto one task (8 series of 2.5M
-    * rows = 8 tasks regardless of cluster size; measured warm at 20M on
-    * local[32]: 9.7 s for the window version vs 5.8 s here — and the
-    * window version cannot use more tasks than series on ANY cluster,
-    * while this path parallelizes by partition count).
-    *
-    * Same two-parallel-pass scheme as [[OrderedPosition]]:
-    *  1. range-repartition by (keys, order) + in-partition sort — each
-    *     partition holds a contiguous slice of one-or-more series;
-    *  2. per (partition, series), one tiny agg collects the first/last
-    *     non-null (t, v) — `partitions × series` rows on the driver
-    *     (guarded small) — from which each partition learns the non-null
-    *     neighbour values JUST ACROSS its boundaries;
-    *  3. one `mapPartitions` pass materializes the partition slice (same
-    *     bound as any sort buffer), scans backward for next-non-null and
-    *     forward for prev-non-null seeded with the carried boundary
-    *     values, and emits the lerp.
-    *
-    * Results are identical to [[interpolateLinear]] (equivalence-tested,
-    * including runs of nulls straddling partition boundaries);
-    * leading/trailing nulls of each SERIES stay null. `orderCol` must be
-    * numeric and non-null; ties on (keys, order) make the interpolation
-    * order-dependent in BOTH versions, so ties should be pre-aggregated
-    * away (as q41 does).
-    */
-  def interpolateLinearRanged(df: DataFrame, keyCols: Seq[String], orderCol: String,
-                              valueCol: String, outCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val sortCols = (keyCols :+ orderCol).map(col)
-    val nPart = OrderedPosition.shufflePartitions(df)
-    val sorted = df
-      .repartitionByRange(nPart, sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-    val baseSchema = sorted.schema
-    val keyIdx = keyCols.map(baseSchema.fieldIndex)
-    val tIdx = baseSchema.fieldIndex(orderCol)
-    val vIdx = baseSchema.fieldIndex(valueCol)
-    // RDD boundary: pins the sort against optimizer elimination AND lets
-    // the boundary-stats job reuse the shuffle map stage (OrderedPosition
-    // precedent)
-    val rdd = sorted.rdd
-    import org.apache.spark.sql.Row
-    def keyOf(r: Row): Seq[Any] = keyIdx.map(r.get)
-    def tOf(r: Row): Double = r.get(tIdx).asInstanceOf[Number].doubleValue()
-    // real observation = non-null AND non-NaN (same missing-value
-    // contract as interpolateLinear)
-    def isReal(r: Row): Boolean = !r.isNullAt(vIdx) &&
-      !java.lang.Double.isNaN(r.get(vIdx).asInstanceOf[Number].doubleValue())
-    // per-(partition, series) first/last non-null (t, v)
-    val bounds = rdd.mapPartitionsWithIndex { (pid, it) =>
-      val m = scala.collection.mutable.LinkedHashMap
-        .empty[Seq[Any], ((Double, Double), (Double, Double))]
-      it.foreach { r =>
-        if (isReal(r)) {
-          val k = keyOf(r)
-          val tv = (tOf(r), r.get(vIdx).asInstanceOf[Number].doubleValue())
-          m.get(k) match {
-            case None => m(k) = (tv, tv)
-            case Some((first, _)) => m(k) = (first, tv)
-          }
-        }
-      }
-      m.iterator.map { case (k, (first, last)) => (pid, k, first, last) }
-    }.collect()
-    require(bounds.length <= 1000000,
-      "interpolateLinearRanged: too many (partition, series) groups; use interpolateLinear")
-    // broadcast the per-series partition-ordered boundary list; each
-    // partition range-looks-up its carries (partitions with no local
-    // non-null of a series still resolve carries this way)
-    val boundsB = spark.sparkContext.broadcast(
-      bounds.groupBy(_._2).map { case (k, rows) => k -> rows.sortBy(_._1) })
-    val augRdd = rdd.mapPartitionsWithIndex { (pid, it) =>
-      val buf = it.toArray
-      val n = buf.length
-      val out = new Array[Row](n)
-      // prev non-null scan (forward), seeded from earlier partitions
-      val prevT = new Array[Double](n); val prevV = new Array[Double](n)
-      val hasPrev = new Array[Boolean](n)
-      var curKey: Seq[Any] = null
-      var curHas = false; var curT = 0.0; var curV = 0.0
-      def seedPrev(k: Seq[Any]): Unit = {
-        val rows = boundsB.value.getOrElse(k, Array.empty[(Int, Seq[Any], (Double, Double), (Double, Double))])
-        val before = rows.filter(_._1 < pid)
-        if (before.nonEmpty) { curHas = true; curT = before.last._4._1; curV = before.last._4._2 }
-        else curHas = false
-      }
-      var i = 0
-      while (i < n) {
-        val r = buf(i)
-        val k = keyOf(r)
-        if (k != curKey) { curKey = k; seedPrev(k) }
-        if (isReal(r)) {
-          curHas = true; curT = tOf(r)
-          curV = r.get(vIdx).asInstanceOf[Number].doubleValue()
-        }
-        hasPrev(i) = curHas; prevT(i) = curT; prevV(i) = curV
-        i += 1
-      }
-      // next non-null scan (backward), seeded from later partitions
-      val nextT = new Array[Double](n); val nextV = new Array[Double](n)
-      val hasNext = new Array[Boolean](n)
-      curKey = null
-      def seedNext(k: Seq[Any]): Unit = {
-        val rows = boundsB.value.getOrElse(k, Array.empty[(Int, Seq[Any], (Double, Double), (Double, Double))])
-        val after = rows.filter(_._1 > pid)
-        if (after.nonEmpty) { curHas = true; curT = after.head._3._1; curV = after.head._3._2 }
-        else curHas = false
-      }
-      i = n - 1
-      while (i >= 0) {
-        val r = buf(i)
-        val k = keyOf(r)
-        if (k != curKey) { curKey = k; seedNext(k) }
-        if (isReal(r)) {
-          curHas = true; curT = tOf(r)
-          curV = r.get(vIdx).asInstanceOf[Number].doubleValue()
-        }
-        hasNext(i) = curHas; nextT(i) = curT; nextV(i) = curV
-        i -= 1
-      }
-      i = 0
-      while (i < n) {
-        val r = buf(i)
-        val v: Any =
-          if (isReal(r))
-            java.lang.Double.valueOf(
-              r.get(vIdx).asInstanceOf[Number].doubleValue())
-          else if (hasPrev(i) && hasNext(i)) {
-            if (nextT(i) == prevT(i)) java.lang.Double.valueOf(prevV(i))
-            else java.lang.Double.valueOf(
-              prevV(i) + (nextV(i) - prevV(i)) * (tOf(r) - prevT(i)) / (nextT(i) - prevT(i)))
-          } else null
-        out(i) = Row.fromSeq(r.toSeq :+ v)
-        i += 1
-      }
-      out.iterator
-    }
-    spark.createDataFrame(augRdd,
-      org.apache.spark.sql.types.StructType(baseSchema.fields :+
-        org.apache.spark.sql.types.StructField(outCol,
-          org.apache.spark.sql.types.DoubleType)))
-  }
-
-  /** W3 time-gap masking over RAW (ungridded) series: null out `valueCol`
-    * on the first sample whose gap to the previous sample exceeds
-    * `maxGapSeconds` — a visual break marker for line plots drawn from
-    * raw data. NOTE this is NOT the reference's interpolated-cell masking
-    * (qaqc/dashboard.py:962-967, nulling grid cells that BRIDGE a
-    * day-plus gap): on a regular grid every step equals `stepSeconds`,
-    * so this predicate never fires there. For gridded series pass
-    * `maxGap` to [[interpolateLinear]], which masks at the anchors;
-    * the profiler-grid composition ([[graft.ProfileGrid]]) carries its
-    * own reference-faithful day-gap mask.
-    */
-  def maskGaps(df: DataFrame, keyCols: Seq[String], timeCol: String,
-               valueCol: String, maxGapSeconds: Long): DataFrame = {
-    val w = if (keyCols.isEmpty) Window.orderBy(col(timeCol))
-            else Window.partitionBy(keyCols.map(col): _*).orderBy(col(timeCol))
-    val gap = unix_timestamp(col(timeCol)) - unix_timestamp(lag(col(timeCol), 1).over(w))
-    df.withColumn(valueCol, when(gap > maxGapSeconds, lit(null)).otherwise(col(valueCol)))
   }
 
   /** C2-style regular grid: one row per (series, grid step) between the

@@ -57,12 +57,10 @@ class CollectGuardSpec extends AnyFunSuite with Matchers {
         "overflow-proof limit(OrderedPosition.MaxOffsetRows + 1)+require"),
     "graft/operators/Dedup.scala" -> (1,
       "connectedComponents driver union-find: count-gated, large graphs route to pointer-jumping"),
-    "graft/operators/GapFill.scala" -> (1,
-      "interpolateLinearRanged per-series boundary list: require(<= 1e6 groups) fail-fast"),
     "graft/operators/GraphOps.scala" -> (1,
       "pageRank driver path: count-gated, large graphs route to the distributed loop"),
-    "graft/operators/OrderedPosition.scala" -> (2,
-      "per-partition offset lists: one row per partition (≤ numPartitions)"),
+    "graft/operators/OrderedPosition.scala" -> (1,
+      "per-(partition, series) offset table: require(<= MaxOffsetRows) fail-fast"),
     "graft/operators/Similarity.scala" -> (5,
       "k×d centroid/codebook aggregates and capped 4096-row training samples"),
     "graft/sources/Providers.scala" -> (1,
@@ -73,10 +71,8 @@ class CollectGuardSpec extends AnyFunSuite with Matchers {
     "graft/streaming/StreamingOps.scala" -> (1,
       "nearDupGate reference index: enforced overflow-proof limit(max+1)+require"),
     "graft/tools/JobTrace.scala" -> (1, "probe main (not operator surface)"),
-    "graft/tools/ProbeCoreset.scala" -> (1, "probe main (not operator surface)"),
     "graft/tools/RecallProbe.scala" -> (1,
       "probe main: one-row mean-recall aggregate per method"),
-    "graft/tools/ReshardProbe.scala" -> (1, "probe main (not operator surface)"),
     "graft/tools/StreamCostProbe.scala" -> (1, "probe main (not operator surface)"))
 
   /** Every `src/main` Scala file as (repo-relative path, lines). */

@@ -31,10 +31,6 @@ class GapFillSpec extends SparkSpec {
     val out = GapFill.interpolateLinear(df, Seq("k"), "t", "v", "f")
       .orderBy("t").select("f").as[Option[Double]].collect()
     out shouldBe Array(Some(0.0), Some(10.0), Some(20.0), Some(30.0))
-    // the ranged version shares the missing-value contract
-    val ranged = GapFill.interpolateLinearRanged(df, Seq("k"), "t", "v", "f")
-      .orderBy("t").select("f").as[Option[Double]].collect()
-    ranged shouldBe out
   }
 
   test("interpolateLinear maxGap leaves cells bridging long gaps null") {
@@ -61,17 +57,6 @@ class GapFillSpec extends SparkSpec {
     out(1) shouldBe Some(10.0)
   }
 
-  test("maskGaps nulls values after a gap exceeding the threshold") {
-    val df = Seq(
-      ("a", java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), 1.0),
-      ("a", java.sql.Timestamp.valueOf("2024-01-01 00:00:30"), 2.0),
-      ("a", java.sql.Timestamp.valueOf("2024-01-01 02:00:00"), 3.0)
-    ).toDF("k", "ts", "v")
-    val out = GapFill.maskGaps(df, Seq("k"), "ts", "v", maxGapSeconds = 60)
-      .orderBy("ts").select("v").as[Option[Double]].collect()
-    out shouldBe Array(Some(1.0), Some(2.0), None)
-  }
-
   test("timeGrid emits one row per step and joins observations") {
     val df = Seq(
       ("a", java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), 1.0),
@@ -80,32 +65,6 @@ class GapFillSpec extends SparkSpec {
     val out = GapFill.timeGrid(df, Seq("k"), "ts", stepSeconds = 60)
       .orderBy("ts").select("v").as[Option[Double]].collect()
     out shouldBe Array(Some(1.0), None, None, Some(4.0))
-  }
-
-  test("interpolateLinearRanged matches the window version across partition boundaries") {
-    // 4 big series x 50k rows with null runs long enough to straddle the
-    // 4-partition range layout; includes all-null and leading/trailing-null
-    // series slices
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      val df = spark.range(0, 200000)
-        .selectExpr("cast(id % 4 as string) as series",
-          "cast(id as double) as t",
-          // series 3 entirely null; others null in long runs
-          "case when id % 4 = 3 then cast(null as double) " +
-            "when (id div 4) % 5000 < 2000 then cast(null as double) " +
-            "else cast(id % 997 as double) end as v")
-      val win = GapFill.interpolateLinear(df, Seq("series"), "t", "v", "o")
-        .selectExpr("series", "t", "o")
-      val ranged = GapFill.interpolateLinearRanged(df, Seq("series"), "t", "v", "o")
-        .selectExpr("series", "t", "o")
-      win.exceptAll(ranged).count() shouldBe 0L
-      ranged.exceptAll(win).count() shouldBe 0L
-      // sanity: interpolation actually produced values the input lacked
-      ranged.filter("o is not null").count() should be >
-        df.filter("v is not null").count()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
   test("interpolateOntoStepGrid matches the union+window composition bit-for-bit") {

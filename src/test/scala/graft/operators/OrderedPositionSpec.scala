@@ -8,15 +8,30 @@ class OrderedPositionSpec extends SparkSpec {
   import spark.implicits._
 
   test("positions match a window-computed row_number per series") {
+    // a null key forms a series of its own (the `<=>` offset join); at a
+    // third of the rows it spans several range partitions, so its offsets
+    // must carry across partition boundaries like any other series'
     val df = (0 until 5000).map { i =>
-      (if (i % 3 == 0) "a" else "b", (i * 7919) % 5000, i)
+      (i % 3 match { case 0 => None; case 1 => Some("a"); case _ => Some("b") },
+        (i * 7919) % 5000, i)
     }.toDF("k", "ord", "tie").repartition(13)
-    val got = OrderedPosition.withPosition(df, Seq("k"), Seq("ord", "tie"), "pos")
-      .select("k", "ord", "tie", "pos")
-      .as[(String, Int, Int, Long)].collect().sortBy(r => (r._1, r._4))
-    val expected = got.groupBy(_._1).values.flatMap { rows =>
-      rows.sortBy(r => (r._2, r._3)).zipWithIndex.map { case (r, i) => (r._1, r._2, r._3, i.toLong) }
-    }.toArray.sortBy(r => (r._1, r._4))
+    val nullParts = df
+      .repartitionByRange(OrderedPosition.shufflePartitions(df),
+        col("k"), col("ord"), col("tie"))
+      .filter(col("k").isNull).select(spark_partition_id()).distinct().count()
+    nullParts should be > 1L
+    val (positioned, total) =
+      OrderedPosition.withPositionCounted(df, Seq("k"), Seq("ord", "tie"), "pos")
+    total shouldBe 5000L
+    positioned.columns.toSeq shouldBe Seq("k", "ord", "tie", "pos")
+    val got = positioned.as[(Option[String], Int, Int, Long)].collect()
+      .sortBy(r => (r._1, r._4))
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("k")).orderBy(col("ord"), col("tie"))
+    val expected = df.withColumn("pos", row_number().over(w) - 1L)
+      .as[(Option[String], Int, Int, Long)].collect()
+      .sortBy(r => (r._1, r._4))
+    got.count(_._1.isEmpty) shouldBe 1667
     got shouldBe expected
   }
 
@@ -66,15 +81,21 @@ class OrderedPositionSpec extends SparkSpec {
     // returned plan must show (a) zero WindowExec nodes, (b) zero shuffle
     // exchanges — the ONE range shuffle lives inside the shared RDD
     // lineage, before the per-partition scan — and (c) the offset table
-    // joined back by broadcast, never a shuffled join.
+    // joined back by broadcast, never a shuffled join. Positions run the
+    // same body, so they must show the same plan.
     val df = (0 until 20000).map(i => ((i % 7).toString, (i * 37) % 20000, (i % 13).toLong))
       .toDF("k", "ord", "v").repartition(11)
-    val out = OrderedPosition.withRunningSum(df, Seq("k"), Seq("ord"), "v", "pfx")
-    out.count() // materialize so AQE's final plan is the asserted one
-    val plan = out.queryExecution.executedPlan.toString
-    plan should not include "WindowExec"
-    plan should not include "ShuffleExchange"
-    plan should include("BroadcastHashJoin")
+    val outs = Seq(
+      OrderedPosition.withRunningSum(df, Seq("k"), Seq("ord"), "v", "pfx"),
+      OrderedPosition.withPosition(df, Seq("k"), Seq("ord"), "pfx"))
+    outs.foreach { out =>
+      out.columns.toSeq shouldBe Seq("k", "ord", "v", "pfx")
+      out.count() // materialize so AQE's final plan is the asserted one
+      val plan = out.queryExecution.executedPlan.toString
+      plan should not include "WindowExec"
+      plan should not include "ShuffleExchange"
+      plan should include("BroadcastHashJoin")
+    }
   }
 
   test("withRunningSum resets per series, across partition boundaries") {
